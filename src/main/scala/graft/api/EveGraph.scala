@@ -15,8 +15,19 @@ import org.apache.spark.sql.functions._
   * (risk), managed by [[GraphCatalog]] with the reference's lifecycle —
   * rebuilt on refresh (`database.rs:468-482`), `jump-risk` built lazily on
   * first safest-route query (`main.rs:178-185`).
+  *
+  * How a route reaches a projection: both names resolve through an
+  * in-memory name ↔ id index of the systems table (the reference's name
+  * index), rebuilt by one collect after the table's version changes; the
+  * search runs [[Dijkstra.autoPath]] on the pinned projection instance,
+  * which collects that instance's edges once into a driver-side adjacency.
+  * A warm route therefore starts no Spark job. Above `localThreshold`
+  * systems rows or edges, the same fail-closed dispatch keeps the lookups
+  * as filtered scans and the search on the cluster.
   */
-final class EveGraph(val store: EveStore) {
+final class EveGraph private[graft] (val store: EveStore, localThreshold: Long) {
+
+  def this(store: EveStore) = this(store, Dijkstra.DefaultLocalThreshold)
 
   val catalog = new GraphCatalog[Long, Double]
 
@@ -76,15 +87,49 @@ final class EveGraph(val store: EveStore) {
 
   // ---- route queries (G8/G9/G10, `database.rs:484-544`) ----
 
-  private def systemIdByName(name: String): Option[Long] =
-    store.systems.filter(col("name") === name)
-      .select(col("system_id")).limit(1)
-      .collect().headOption.map(_.getLong(0))
+  /** Name ↔ id maps over one version of the systems table. A duplicated
+    * name resolves to its smallest `system_id`; null names are not indexed. */
+  private final class NameIndex(val ids: Map[String, Long], val names: Map[Long, String])
 
-  private def namesByIds(ids: Seq[Long]): Map[Long, String] =
-    store.systems.filter(col("system_id").isin(ids: _*))
-      .select(col("system_id"), col("name"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+  /** The systems-table version last indexed, and its index (None above
+    * `localThreshold` rows, where lookups stay filtered scans). The version
+    * is read before the rows, so a refresh landing mid-build only tags the
+    * index as older than its rows and costs one extra rebuild. */
+  @volatile private var nameIndexAt: (Option[Long], Option[NameIndex]) = (None, None)
+
+  private def nameIndex(): Option[NameIndex] = {
+    val version = store.version("systems")
+    val (at, index) = nameIndexAt
+    if (at == version) index
+    else {
+      val built =
+        if (store.systems.count() > localThreshold) None
+        else {
+          val rows = store.systems.filter(col("name").isNotNull)
+            .select(col("system_id"), col("name"))
+            .collect().map(r => (r.getLong(0), r.getString(1)))
+          Some(new NameIndex(rows.groupMapReduce(_._2)(_._1)(math.min), rows.toMap))
+        }
+      nameIndexAt = (version, built)
+      built
+    }
+  }
+
+  private def systemIdByName(index: Option[NameIndex], name: String): Option[Long] = index match {
+    case Some(ix) => ix.ids.get(name)
+    case None =>
+      val r = store.systems.filter(col("name") === name)
+        .select(min(col("system_id"))).collect().head
+      if (r.isNullAt(0)) None else Some(r.getLong(0))
+  }
+
+  private def namesByIds(index: Option[NameIndex], ids: Seq[Long]): Map[Long, String] = index match {
+    case Some(ix) => ix.names
+    case None =>
+      store.systems.filter(col("system_id").isin(ids: _*))
+        .select(col("system_id"), col("name"))
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+  }
 
   /** Shared route logic: name-resolve both endpoints (missing name → None →
     * the reference's 404), Dijkstra over the named projection, then the
@@ -93,16 +138,18 @@ final class EveGraph(val store: EveStore) {
     * retires the old graph from the catalog immediately but cannot
     * unpersist it under the running Pregel loop, so the answer is computed
     * against one consistent snapshot. */
-  private def route(graphName: String, weightCol: String, from: String, to: String): Option[Seq[String]] =
+  private def route(graphName: String, weightCol: String, from: String, to: String): Option[Seq[String]] = {
+    val index = nameIndex()
     for {
-      src <- systemIdByName(from)
-      dst <- systemIdByName(to)
+      src <- systemIdByName(index, from)
+      dst <- systemIdByName(index, to)
       res <- catalog.withGraph(graphName, () => buildProjection(graphName, weightCol))(
-        Dijkstra.autoPath(_, src, dst))
+        Dijkstra.autoPath(_, src, dst, localThreshold))
     } yield {
-      val names = namesByIds(res._2.distinct)
+      val names = namesByIds(index, res._2.distinct)
       res._2.map(id => names.getOrElse(id, "undefined"))
     }
+  }
 
   /** GET /shortest-route/{from}/to/{to} — cost-weighted (cost=1 constant in
     * the reference, so fewest jumps). */

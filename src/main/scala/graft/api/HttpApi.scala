@@ -69,8 +69,16 @@ final class HttpApi(engine: EveGraph, source: () => EveSource) {
         respond(ex, 500, s"""{"error":"${e.getClass.getSimpleName}"}""")
     }
 
-  /** Start on the given port (0 = ephemeral); returns the bound port. */
+  /** Start on the given port (0 = ephemeral); returns the bound port.
+    *
+    * Turns on TCP_NODELAY unless the JVM already sets it: the JDK server
+    * writes the headers and the body as two segments, so with Nagle on the
+    * body waits for the client's delayed ACK (~40 ms per response). The
+    * server reads the property once, at the first `HttpServer.create` in
+    * the JVM. */
   def start(port: Int = 0): Int = {
+    val noDelay = "sun.net.httpserver.nodelay"
+    if (System.getProperty(noDelay) == null) System.setProperty(noDelay, "true")
     val s = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     s.createContext("/", (ex: HttpExchange) => handle(ex))
     s.setExecutor(null) // single-threaded: route queries serialize like the reference's handler path

@@ -322,7 +322,15 @@ object Dijkstra {
     *     round's relax job itself materializes the joined graph — no
     *     separate vertices.count/edges.count actions — and the previous
     *     graph/messages unpersist only after that job completes, so no job
-    *     ever re-walks lineage. */
+    *     ever re-walks lineage.
+    *
+    * Why this, not [[sssp]], is the distributed default (GRAPHBENCH_r04 +
+    * the r06 repeat-pair study, 400k vertices, same-JVM pairs, every run
+    * equality-checked): delta wins the low-diameter expander outright
+    * (6.6 s vs 12.6 s) and the wide-weight shape in 4 of 5 pairs; on the
+    * moderate-diameter sparse shape Pregel holds a ~13% median edge but
+    * with an unbounded tail (41–134 s vs delta's 52–70 s band). [[sssp]]
+    * stays as the label-correcting reference the equality specs use. */
   def deltaSssp[V: ClassTag](g: Graph[V, Double], source: VertexId,
       delta: Double = 0.0, stats: Option[DeltaStats] = None,
       batchMax: Int = SuperstepBatchMax): Graph[State, Double] = {
@@ -559,44 +567,35 @@ object Dijkstra {
       s"""{"delta":$delta,"buckets":$buckets,"light_rounds":$lightSupersteps,"heavy_supersteps":$heavySupersteps,"light_batches":$lightBatches,"note":"light_rounds = rounds executed incl. batch padding (pre-r9 artifacts report this field as light_supersteps = jobs; not comparable)"}"""
   }
 
-  /** Single-pair path as an ordered vertex-id list (source..target), or None
-    * if unreachable — mirrors GDS stream yielding no row.
-    *
-    * @deprecated collects the FULL reachable (id → state) map to the
-    * driver, which is exactly the scale-killer `autoPath` exists to avoid:
-    * use [[autoPath]] (local heap below the edge threshold, distributed
-    * predecessor walk via [[reconstructDistributed]] above it). Kept only
-    * as the simplest reference implementation for equality tests. */
-  @deprecated("use autoPath: this collects the full reachable vertex map to the driver", "round3")
-  def shortestPath[V: ClassTag](
-      g: Graph[V, Double], source: VertexId, target: VertexId): Option[(Double, Seq[VertexId])] = {
-    val state = sssp(g, source).vertices
-      .filter { case (_, (d, _)) => !d.isInfinite }
-      .collectAsMap()
-    state.get(target).map { case (dist, _) =>
-      var ids = List(target)
-      while (ids.head != source) ids = state(ids.head)._2 :: ids
-      (dist, ids)
-    }
-  }
-
   // ---- scale-adaptive dispatch ----
   //
   // Pregel supersteps cost whole Spark jobs; on a fixture-sized graph that
   // overhead dwarfs the work (analogous to Catalyst choosing a broadcast
-  // join for a small side). Below `localThreshold` edges we collect the edge
-  // list and run a driver-local heap Dijkstra with identical semantics and
-  // tie-breaking; above it, the Pregel program runs unchanged on the
+  // join for a small side). Below `threshold` edges the edge list is
+  // collected ONCE per graph instance into a driver-side adjacency, and
+  // every path query on that instance runs a driver-local heap Dijkstra
+  // with identical semantics and tie-breaking — without starting a Spark
+  // job; above it, the delta-stepping program runs unchanged on the
   // cluster. The reference universe (~13.8k edges) always takes the local
   // path; the threshold keeps the distributed path for genuinely large
   // graphs.
 
   val DefaultLocalThreshold: Long = 2000000L
 
-  /** Driver-local Dijkstra over an adjacency list; same (dist, pred) state
-    * and min-pred tie-break as the Pregel program. */
-  def localSssp(edges: Iterable[(VertexId, VertexId, Double)], source: VertexId): Map[VertexId, State] = {
-    val adj = edges.groupBy(_._1).map { case (s, es) => s -> es.map(e => (e._2, e._3)).toArray }
+  /** A collected edge list grouped by source vertex: the input of the
+    * driver-local kernel. */
+  private final class Adjacency(val edges: Long, val out: Map[VertexId, Array[(VertexId, Double)]])
+
+  private def adjacency(edges: Iterable[(VertexId, VertexId, Double)]): Adjacency =
+    new Adjacency(edges.size.toLong,
+      edges.groupBy(_._1).map { case (s, es) => s -> es.map(e => (e._2, e._3)).toArray })
+
+  /** Driver-local Dijkstra over an edge list; same (dist, pred) state and
+    * min-pred tie-break as the Pregel program. */
+  def localSssp(edges: Iterable[(VertexId, VertexId, Double)], source: VertexId): Map[VertexId, State] =
+    localDijkstra(adjacency(edges), source)
+
+  private def localDijkstra(adj: Adjacency, source: VertexId): Map[VertexId, State] = {
     val dist = scala.collection.mutable.HashMap.empty[VertexId, State]
     // min-heap on (dist, pred): with positive weights every equal-dist entry
     // for a vertex is enqueued before its first pop, so settling in
@@ -610,7 +609,7 @@ object Dijkstra {
       val better = known.forall { case (kd, kp) => d < kd || (d == kd && pred < kp) }
       if (known.isEmpty) {
         dist(id) = (d, pred)
-        adj.getOrElse(id, Array.empty).foreach { case (nxt, w) =>
+        adj.out.getOrElse(id, Array.empty[(VertexId, Double)]).foreach { case (nxt, w) =>
           dist.get(nxt) match {
             case None => pq.enqueue((d + w, nxt, id))
             // zero-weight edges allow an equal-dist candidate to arrive
@@ -628,8 +627,29 @@ object Dijkstra {
     dist.toMap
   }
 
-  private def smallEnough[V: ClassTag](g: Graph[V, Double], threshold: Long): Boolean =
-    g.edges.count() <= threshold
+  /** [[autoPath]]'s dispatch memo, keyed by graph identity: the instance's
+    * edge count (Left) until a query takes the local branch, then its
+    * collected adjacency (Right). Sound because a graph instance is an
+    * immutable snapshot: [[GraphCatalog]] projections read one versioned
+    * store directory, and a refresh builds a new instance rather than
+    * mutating the old one. The keys are weak, so a retired projection's
+    * adjacency is freed with it. */
+  private val localPlans = new java.util.WeakHashMap[AnyRef, Either[Long, Adjacency]]()
+
+  /** The adjacency of `g` if it has at most `threshold` edges. Counts the
+    * edges at most once and collects them at most once per instance; the
+    * lock is held across those first jobs so concurrent callers never
+    * collect twice. */
+  private def localAdjacency(g: Graph[_, Double], threshold: Long): Option[Adjacency] =
+    localPlans.synchronized {
+      val plan = Option(localPlans.get(g)).getOrElse(Left(g.edges.count())) match {
+        case Left(n) if n <= threshold =>
+          Right(adjacency(g.edges.map(e => (e.srcId, e.dstId, e.attr)).collect()))
+        case known => known
+      }
+      localPlans.put(g, plan)
+      plan.toOption.filter(_.edges <= threshold)
+    }
 
   /** DataFrame-level adaptive SSSP: `edges` must have (src, dst, w) columns.
     * Small edge sets are collected and solved driver-local without ever
@@ -675,52 +695,23 @@ object Dijkstra {
     }
   }
 
-  /** Distances via the delta-stepping engine — the default distributed
-    * path, justified by its own benchmark (GRAPHBENCH_r04 + the r06
-    * repeat-pair study; 400k vertices, same-JVM pairs only, the default
-    * Δ = 32×mean, every timed run equality-checked). The honest picture
-    * across 5 paired runs per shape (`GRAPHBENCH_r06.json
-    * repeat_pairs_x32`): delta wins the low-diameter expander outright
-    * (6.6 s vs 12.6 s in the r06 sweep) and wins the wide-weight shape
-    * in 4 of 5 pairs (delta stable at 12.5–15.1 s; Pregel spans
-    * 12.2–22.0 s). On the moderate-diameter sparse shape Pregel holds a
-    * ~13% median edge (≈48 s vs ≈56 s, 4/5 pairs) but carries an
-    * unbounded tail — its r04 run hit 134.4 s, 2.4× the delta band,
-    * and its cross-sweep history spans 41–134 s while delta stays in a
-    * narrow 52–70 s band. Delta-stepping stays the default: two outright
-    * wins plus bounded worst-case on the third beats a one-shape median
-    * edge bought with tail risk. [[distances]]/[[sssp]] remain as the
-    * label-correcting reference the equality specs compare against. */
-  def deltaDistances[V: ClassTag](g: Graph[V, Double], source: VertexId): Seq[(VertexId, Double)] =
-    deltaSssp(g, source).vertices
-      .filter { case (_, (d, _)) => !d.isInfinite }
-      .map { case (id, (d, _)) => (id, d) }
-      .collect()
-      .toSeq
-
-  /** Distances with local-vs-distributed dispatch. */
-  def autoDistances[V: ClassTag](
-      g: Graph[V, Double], source: VertexId,
-      threshold: Long = DefaultLocalThreshold): Seq[(VertexId, Double)] =
-    if (smallEnough(g, threshold))
-      localSssp(g.edges.collect().map(e => (e.srcId, e.dstId, e.attr)), source)
-        .map { case (id, (d, _)) => (id, d) }.toSeq
-    else deltaDistances(g, source)
-
-  /** Single-pair path with local-vs-Pregel dispatch. */
+  /** Single-pair path with local-vs-distributed dispatch. A warm call on a
+    * graph at or below `threshold` edges starts no Spark job. */
   def autoPath[V: ClassTag](
       g: Graph[V, Double], source: VertexId, target: VertexId,
       threshold: Long = DefaultLocalThreshold): Option[(Double, Seq[VertexId])] =
-    if (smallEnough(g, threshold)) {
-      val state = localSssp(g.edges.collect().map(e => (e.srcId, e.dstId, e.attr)), source)
-      state.get(target).map { case (d, _) =>
-        var ids = List(target)
-        while (ids.head != source) ids = state(ids.head)._2 :: ids
-        (d, ids)
-      }
+    localAdjacency(g, threshold) match {
+      case Some(adj) =>
+        val state = localDijkstra(adj, source)
+        state.get(target).map { case (d, _) =>
+          var ids = List(target)
+          while (ids.head != source) ids = state(ids.head)._2 :: ids
+          (d, ids)
+        }
       // large graphs: never collect the reachable vertex set to the driver —
       // walk predecessors distributively (O(pathLen) small lookup jobs)
-    } else reconstructDistributed(g, source, target)
+      case None => reconstructDistributed(g, source, target)
+    }
 
   /** 100 TB-safe path reconstruction: no driver-side vertex map; walks
     * predecessor pointers with one small lookup join per hop against the

@@ -29,6 +29,12 @@ import scala.collection.concurrent.TrieMap
   * the old instance immediately from the catalog (new queries get the new
   * graph) but defer its unpersist until the last pin is released. Pinning
   * is a driver-side refcount — zero cost on the executors.
+  *
+  * Routes reach a projection only through [[withGraph]], and
+  * [[Dijkstra.autoPath]] memoizes the collected adjacency per instance:
+  * because a refresh installs a NEW instance instead of mutating the old
+  * one, a memo can never serve a stale graph, and a retired instance's
+  * adjacency is freed once the instance itself is unreachable.
   */
 final class GraphCatalog[V, E] {
 

@@ -93,9 +93,19 @@ class DijkstraSpec extends AnyFunSuite {
       (0L, 3L, 1.0), (3L, 4L, 1.0), (4L, 5L, 4.0), (5L, 6L, 2.0))
     val g = graphOf(edges)
     val local = Dijkstra.autoPath(g, 0L, 6L)
+    // the edge list is collected once per graph instance
+    val (again, jobs) = JobCount(spark.sparkContext)(Dijkstra.autoPath(g, 0L, 6L))
+    assert(jobs === 0)
     val dist = Dijkstra.autoPath(g, 0L, 6L, threshold = 0L)
     assert(local === Some((5.0, Seq(0L, 1L, 2L, 5L, 6L))))
+    assert(again === local)
     assert(dist === local)
+    // a new instance with other weights gets its own adjacency
+    val heavier = graphOf(edges.map { case (a, b, w) => (a, b, if (a == 1L && b == 2L) 9.0 else w) })
+    val (rerouted, coldJobs) = JobCount(spark.sparkContext)(Dijkstra.autoPath(heavier, 0L, 6L))
+    assert(coldJobs > 0) // the counter sees the first call's count + collect
+    assert(rerouted === Some((8.0, Seq(0L, 3L, 4L, 5L, 6L))))
+    assert(Dijkstra.autoPath(heavier, 0L, 6L, threshold = 0L) === rerouted)
     // unreachable stays None on the distributed path too
     assert(Dijkstra.autoPath(graphOf(Seq((0L, 1L, 1.0), (2L, 3L, 1.0))),
       0L, 3L, threshold = 0L).isEmpty)

@@ -349,4 +349,105 @@ class EveGraphSpec extends AnyFunSuite {
     (readers :+ refresher).foreach(_.join(120000))
     assert(problems.isEmpty, problems.toArray.mkString("; "))
   }
+
+  // ---- warm routes: name index + per-projection adjacency ----
+
+  private def storeDir(): EveStore =
+    new EveStore(spark, java.nio.file.Files.createTempDirectory("evestore-warm").toString)
+
+  /** Two systems share the name "Twin": the smaller id gates to Jita, the
+    * larger one has no gates at all. */
+  private val TwinGated = 30004001L
+  private val TwinIsolated = 30004002L
+
+  private def twinSource: graft.sources.FixtureSource = {
+    import graft.model._
+    val gate = StargateResponse(59100001L, "Stargate (Jita)", TwinGated, 29624L,
+      Position(0, 0, 0), StargateDestination(59100002L, StarMap.Jita))
+    def twin(id: Long, gates: Seq[Long]) = SystemResponse(id, Some("Twin"), Some(20000020L),
+      0.9, Some(40000849L), Some("A"), Position(1, 2, 3), Some(Seq.empty), Some(gates))
+    new graft.sources.FixtureSource(
+      systems = twin(TwinIsolated, Nil) +: StarMap.systemResponses :+ twin(TwinGated, Seq(gate.stargate_id)),
+      stargates = StarMap.stargateResponses :+ gate,
+      kills = StarMap.killSnapshots, jumps = StarMap.jumpSnapshots,
+      sigs = StarMap.wormholeSignatures)
+  }
+
+  test("warm routes on one snapshot start no Spark job") {
+    val eng = engine(withWormholes = false)
+    eng.shortestRoute("Jita", "Amarr")
+    eng.safestRoute("Jita", "Amarr")
+    val (answers, jobs) = JobCount(spark.sparkContext) {
+      (1 to 5).map(_ => (eng.shortestRoute("Jita", "Amarr"), eng.safestRoute("Jita", "Amarr")))
+    }
+    assert(jobs === 0)
+    assert(answers.toSet === Set((
+      Some(Seq("Jita", "Perimeter", "Urlen", "Amarr")),
+      Some(Seq("Jita", "SafeA", "SafeB", "SafeC", "Amarr")))))
+  }
+
+  test("warm routes reflect every refresh") {
+    import graft.model._
+    val eng = engine(withWormholes = true)
+    assert(eng.shortestRoute("Jita", "Amarr") === Some(Seq("Jita", "Thera", "Amarr")))
+    assert(eng.shortestRoute("Newcomer", "Jita").isEmpty)
+    // a new system gated to Amarr becomes routable by name
+    val newcomer = 30003001L
+    val gate = StargateResponse(59000001L, "Stargate (Amarr)", newcomer, 29624L,
+      Position(0, 0, 0), StargateDestination(59000002L, StarMap.Amarr))
+    val systems = StarMap.systemResponses :+ SystemResponse(newcomer, Some("Newcomer"),
+      Some(20000020L), 0.9, Some(40000849L), Some("A"), Position(1, 2, 3),
+      Some(Seq.empty), Some(Seq(gate.stargate_id)))
+    val stargates = StarMap.stargateResponses :+ gate
+    val grown = new graft.sources.FixtureSource(systems, stargates,
+      kills = StarMap.killSnapshots, jumps = StarMap.jumpSnapshots,
+      sigs = StarMap.wormholeSignatures)
+    eng.refreshSystems(grown)
+    eng.refreshStargates(grown)
+    assert(eng.shortestRoute("Newcomer", "Jita") === Some(Seq("Newcomer", "Amarr", "Thera", "Jita")))
+    // Thera rotates from Amarr to Island1
+    val rotated = new graft.sources.FixtureSource(systems, stargates,
+      kills = StarMap.killSnapshots, jumps = StarMap.jumpSnapshots,
+      sigs = Seq(StarMap.wormholeSignatures(0),
+        StarMap.wormholeSignatures(2).copy(signature_type = "wormhole")))
+    eng.refreshWormholes(rotated)
+    assert(eng.shortestRoute("Jita", "Amarr") === Some(Seq("Jita", "Perimeter", "Urlen", "Amarr")))
+    assert(eng.shortestRoute("Jita", "Island1") === Some(Seq("Jita", "Thera", "Island1")))
+    // SafeB turns dangerous: the safest route moves to the corridor
+    assert(eng.safestRoute("Jita", "Amarr") === Some(Seq("Jita", "SafeA", "SafeB", "SafeC", "Amarr")))
+    eng.refreshRisks(new graft.sources.FixtureSource(systems, stargates,
+      kills = StarMap.killSnapshots.map(k =>
+        if (k.system_id == StarMap.SafeB) k.copy(ship_kills = 50) else k),
+      jumps = StarMap.jumpSnapshots))
+    assert(eng.safestRoute("Jita", "Amarr") === Some(Seq("Jita", "Perimeter", "Urlen", "Amarr")))
+  }
+
+  /** Routes the name index and the distributed lookups must answer alike. */
+  private val branchQueries = Seq(
+    ("shortest", "Jita", "Amarr"), ("safest", "Jita", "Amarr"),
+    ("shortest", "Jita", "Island1"), ("shortest", "Jita", "Nowhere"),
+    ("shortest", "Island1", "Island2"), ("shortest", "Twin", "Jita"),
+    ("safest", "Twin", "Amarr"))
+
+  private def answer(eng: EveGraph, q: (String, String, String)): Option[Seq[String]] =
+    if (q._1 == "shortest") eng.shortestRoute(q._2, q._3) else eng.safestRoute(q._2, q._3)
+
+  private lazy val twinAnswers: Seq[Option[Seq[String]]] = {
+    val eng = new EveGraph(storeDir())
+    eng.bootstrap(twinSource)
+    branchQueries.map(answer(eng, _))
+  }
+
+  test("a duplicated name resolves to its smallest system_id") {
+    assert(twinAnswers(branchQueries.indexOf(("shortest", "Twin", "Jita"))) ===
+      Some(Seq("Twin", "Jita")))
+    assert(twinAnswers(branchQueries.indexOf(("shortest", "Jita", "Amarr"))) ===
+      Some(Seq("Jita", "Thera", "Amarr")))
+  }
+
+  test("above the local threshold, filtered lookups and the distributed search answer the same routes") {
+    val eng = new EveGraph(storeDir(), localThreshold = 0L)
+    eng.bootstrap(twinSource)
+    assert(branchQueries.map(answer(eng, _)) === twinAnswers)
+  }
 }

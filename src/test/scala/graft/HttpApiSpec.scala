@@ -54,6 +54,11 @@ class HttpApiSpec extends AnyFunSuite {
     assert(get("/shortest-route/Jita/to/Nowhere")._1 === 404)
   }
 
+  test("the server runs with TCP_NODELAY (no delayed-ACK stall per response)") {
+    assert(port > 0)
+    assert(System.getProperty("sun.net.httpserver.nodelay") === "true")
+  }
+
   test("unknown path and wrong method → 404") {
     assert(get("/nonsense")._1 === 404)
     assert(post("/shortest-route/Jita/to/Amarr")._1 === 404)

@@ -5,6 +5,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.lit
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+
 /** Randomized ±op schedule fuzzing for the CC maintainer — the
   * fixed-schedule suites (CcDeltaSpec) pin the KNOWN hard cases (splits,
   * isolation tombstones, delete→re-insert across compaction); this suite
@@ -37,24 +40,34 @@ class StreamScheduleFuzzSpec extends AnyFunSuite {
   private val SeedBase: Long =
     sys.env.get("SPARK_GRAFT_FUZZ_SEED").map(_.toLong).getOrElse(0L)
 
+  /** Wall-clock bound on one lane. The slowest lane takes ~2.5 min on a
+    * 4-core box, so this only trips on a hang. */
+  private val LaneTimeout: FiniteDuration = 20.minutes
+
   /** Execute independent fully-planned fuzz cases concurrently. Every
     * case's plan was already drawn from the lane RNG, so execution order
     * cannot perturb determinism; each case owns its temp store. All
     * failures surface (first thrown, rest printed), matching the
-    * sequential lane's fail-with-schedule contract. */
+    * sequential lane's fail-with-schedule contract. A lane still running
+    * after [[LaneTimeout]] fails with the plans of its unfinished cases —
+    * each plan prints its full schedule — and its workers are interrupted. */
   private def inParallel[P](plans: Seq[P], threads: Int = 8)(run: P => Unit): Unit = {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
     try {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
       val futs = plans.map(p => Future(run(p)))
-      val errs = futs.flatMap(f =>
-        scala.util.Try(Await.result(f, Duration.Inf)).failed.toOption)
+      val deadline = LaneTimeout.fromNow
+      futs.foreach(f => scala.util.Try(Await.ready(f, deadline.timeLeft.max(Duration.Zero))))
+      val outcomes = futs.map(_.value) // one snapshot: None = still running
+      val errs = outcomes.flatten.flatMap(_.failed.toOption)
       if (errs.size > 1) errs.tail.foreach(e =>
         System.err.println(s"[fuzz] additional failure: ${e.getMessage}"))
+      val unfinished = plans.zip(outcomes).collect { case (p, None) => p }
+      if (unfinished.nonEmpty)
+        fail(s"lane still running after $LaneTimeout: ${unfinished.size} of ${plans.size} " +
+          s"cases unfinished; planned schedules:\n${unfinished.mkString("\n")}")
       errs.headOption.foreach(e => throw e)
-    } finally pool.shutdown()
+    } finally pool.shutdownNow()
   }
 
   private def tmp() =
