@@ -421,13 +421,11 @@ object Dijkstra {
         }
       }.cache()
 
-    val debug = sys.env.contains("GRAFT_DELTA_DEBUG")
     var bucket = 0L
     var done = false
     while (!done) {
       val lo = bucket * dlt
       val hi = lo + dlt
-      val t0 = if (debug) System.nanoTime() else 0L
 
       // light-edge fixpoint inside the current bucket: the opening frontier
       // is the bucket's members; afterwards only last round's receivers can
@@ -529,7 +527,6 @@ object Dijkstra {
         .filter { case (_, (d, _)) => !d.isInfinite && d >= hi }
         .map { case (_, (d, _)) => math.floor(d / dlt).toLong }
         .fold(Long.MaxValue)(math.min)
-      if (debug) println(f"[delta] bucket=$bucket inner=$iters ${(System.nanoTime() - t0) / 1e9}%.1f s")
       // max(…, bucket+1) guards the float boundary: dist == hi can make
       // floor(dist/Δ) round back to the current bucket and stall the loop
       if (nextBucket == Long.MaxValue) done = true

@@ -163,14 +163,12 @@ object Dedup {
     * are small enough that per-task scheduling and file overhead beat
     * the extra cores, and the verify stage (not the bucketed join)
     * dominates q24. On a real cluster size buckets to the per-core scan
-    * budget of one bucket of the FULL index; `-Dgraft.store.buckets=N`
-    * overrides for sweeps (the store key carries the count, so
-    * differently-bucketed stores never alias). */
-  def storeBuckets: Int =
-    sys.props.get("graft.store.buckets").map(_.toInt).getOrElse(16)
+    * budget of one bucket of the FULL index (the store key carries the
+    * count, so differently-bucketed stores never alias). */
+  val StoreBuckets: Int = 16
 
   def docJaccardPrefixes(s: SparkSession, dir: String): DataFrame = {
-    val b = storeBuckets
+    val b = StoreBuckets
     graft.store.Materialized.bucketedRelation(s, s"jprefix:$dir:b$b",
       Seq("h1", "h2"), b) {
       import s.implicits._
@@ -304,7 +302,7 @@ object Dedup {
     * streaming path keeps its own persisted band index — `DedupStream` —
     * built incrementally from batches, never from this store.) */
   def docBands(s: SparkSession, dir: String, family: HashFamily): DataFrame = {
-    val b = storeBuckets
+    val b = StoreBuckets
     graft.store.Materialized.bucketedRelation(s, s"bands:$family:$dir:b$b",
       Seq("band", "bhash"), b)(
       bandsOf(docShingles(s, dir), family))

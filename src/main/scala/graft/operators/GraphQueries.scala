@@ -318,10 +318,10 @@ object GraphQueries {
     * q85/q90 store builds), served from the per-session
     * [[graft.store.Materialized]] store: the lineitem scan + distinct
     * exchange is a pure function of the corpus snapshot that each warm
-    * q79 run was re-paying (~0.75 s of its ~1.6 s at sf0.1 — probed by
-    * [[graft.tools.ProbeGraphInputs]]); the bench's cold lane pays the
-    * build visibly, the same contract as the tri-projection/token/
-    * shingle stores. */
+    * q79 run was re-paying (~0.75 s of its ~1.6 s at sf0.1,
+    * OPTIMIZATION_r17.md); the bench's cold lane pays the build
+    * visibly, the same contract as the tri-projection/token/shingle
+    * stores. */
   def partSupplierPairs(s: SparkSession, dir: String): DataFrame =
     graft.store.Materialized.relation(s, s"pspairs:$dir") {
       import s.implicits._
@@ -423,7 +423,7 @@ object GraphQueries {
     * relation, materialized once per corpus snapshot (the
     * [[partSupplierPairs]] contract): q80's and q84's warm runs each
     * re-paid the lineitem scan + filter + distinct (~0.5 s of their
-    * ~1.1–1.3 s at sf0.1, [[graft.tools.ProbeGraphInputs]]), and the
+    * ~1.1–1.3 s at sf0.1, OPTIMIZATION_r17.md), and the
     * q83/q105 projection build starts from the identical pair set. */
   def sparsePartSupplierPairs(s: SparkSession, dir: String): DataFrame =
     graft.store.Materialized.relation(s, s"pspairs-sparse:$dir") {
@@ -466,68 +466,13 @@ object GraphQueries {
       .toDF("node", "component")
   }
 
-  /** [[minLabelPropagation]] computed as CHAINED-BATCH DataFrame rounds
-    * (round 18, VERDICT r17 item 4): the same function — k rounds of
-    * lᵢ(v) = min over (edges ∪ self-loops) into v of lᵢ₋₁(src), exactly
-    * one hop per round — but executed as ⌈rounds/chunk⌉ lazy chains of
-    * `chunk` join+aggregate rounds per driver action instead of one
-    * Pregel superstep (2+ jobs) per hop. The self-loop union keeps each
-    * round a SINGLE reference to its predecessor (the oracle's own
-    * linear-inlining trick), so a chunk's plan grows linearly and the
-    * per-chunk localCheckpoint resets it. Early exit when a chunk
-    * changes no label: propagation is monotone and one no-op round is a
-    * fixpoint, so every round past it is the identity — stopping there
-    * equals running the full budget, round for round.
-    *
-    * MEASURED LOSS — kept only as the recorded r18 experiment, NOT used
-    * by q80. Interleaved same-JVM A/B on q80's real store input
-    * ([[graft.tools.AbCcBatch]], sf0.1, arms P,B,B,P ×3): pregel min
-    * 0.94 s, batched min 2.64 s, results EQUAL. The batching saves
-    * driver actions but every chained round shuffles the FULL vertex
-    * volume (2 exchanges/round × rounds-to-fixpoint), while Pregel's
-    * `srcAttr < dstAttr` message pruning shrinks each superstep's
-    * volume as regions converge and exits at the fixpoint. Stage count
-    * × volume beats job count here, and at 100 TB the pruning advantage
-    * only grows — so the Pregel path stays. */
-  def minLabelPropagationBatched(edges: DataFrame, rounds: Int,
-      chunk: Int = 5): DataFrame = {
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    val verts = e.select(col("src").as("node")).union(e.select(col("dst")))
-      .distinct()
-    val eSelf = e.union(verts.select(col("node").as("src"), col("node").as("dst")))
-      .repartition(col("src")).cache()
-    var labels = verts.select(col("node"), col("node").as("label"))
-      .localCheckpoint()
-    var done = false
-    var r = 0
-    while (r < rounds && !done) {
-      val k = math.min(chunk, rounds - r)
-      var cur = labels
-      for (_ <- 1 to k) {
-        cur = eSelf
-          .join(cur.withColumnRenamed("node", "src")
-            .withColumnRenamed("label", "l"), Seq("src"))
-          .groupBy(col("dst").as("node")).agg(min(col("l")).as("label"))
-      }
-      val next = cur.localCheckpoint()
-      // self-loops keep the key set = all vertices every round, so the
-      // inner join covers every label and "no row differs" ⇔ fixpoint
-      done = next.join(labels.withColumnRenamed("label", "prev"), Seq("node"))
-        .filter(col("label") =!= col("prev")).isEmpty
-      labels = next
-      r += k
-    }
-    eSelf.unpersist(blocking = false)
-    labels.select(col("node"), col("label").as("component"))
-  }
-
   /** q80 — connected components at data scale: the companion to q79's
     * SSSP (the round-6 directive named either), closing "every oracled CC
     * row runs on 25 nodes" (q21). Runs the distributed Pregel
     * propagation on a graph that grows with the data; the label table
     * stays distributed until the final ordered dump. (Round 18 tried
-    * the chained-batch rounds here — A/B loss, see
-    * [[minLabelPropagationBatched]].) */
+    * chained-batch DataFrame rounds here — an A/B loss, recorded in
+    * OPTIMIZATION_r18.md.) */
   private def q80(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     minLabelPropagation(sparsePartSupplierEdges(s, dir), ScaleCcRounds)
@@ -1149,7 +1094,7 @@ object GraphQueries {
     * messages are identical long arithmetic either way, (r·17) div
     * (20·deg) per edge source, summed exactly, teleport folded into the
     * aggregate). Interleaved same-JVM A/B on the full cold build
-    * ([[graft.tools.ProbeQ90]], arms O,N,N,O ×2, full-collect equality
+    * (OPTIMIZATION_r18.md, arms O,N,N,O ×2, full-collect equality
     * asserted every run): old min 12.28 s → new min 7.47 s at sf0.1.
     * Ranks never collected; the one driver action is the N count.
     * Linear plan growth (each iteration references its predecessor

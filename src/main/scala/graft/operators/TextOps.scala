@@ -830,9 +830,9 @@ object TextOps {
 
   /** Per-document subword token counts, FOLD variant: the words split,
     * then the vocab-literal greedy match per word occurrence — zero
-    * joins, zero shuffle, all inside codegen on the scan side.
-    * Package-private so [[graft.tools.AbQ115]] can arbitrate it against
-    * the join variant below. */
+    * joins, zero shuffle, all inside codegen on the scan side. The
+    * measured loser against the join variant below (`Q115AB_r16.json`);
+    * TokenizerSpec keeps it as the join variant's reference. */
   private[graft] def docSubwordToksFold(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val vocab = subwordVocab(s, dir)
@@ -853,8 +853,7 @@ object TextOps {
     * combine collapses occurrence rows to DOC-sized exchange volume —
     * so the "corpus-token-row shuffle" the fold variant's old comment
     * feared never materializes. Both variants produce identical
-    * (source, doc_id, toks); [[graft.tools.AbQ115]] asserts it before
-    * timing.
+    * (source, doc_id, toks); TokenizerSpec asserts it.
     *
     * Scale story past the broadcast threshold: the plan stays a LEFT
     * join keyed on the word, so if a 100 TB corpus's distinct-word
@@ -908,8 +907,8 @@ object TextOps {
     * back, doc-sized aggregation exchange); packing then reuses q70's
     * distributed prefix sum ([[PrefixSum.cumEndBySource]]).
     *
-    * MEASURED, not assumed (`Q115AB_r16.json`, [[graft.tools.AbQ115]] —
-    * interleaved min-of-10 at sf0.1): the round-15 fold variant
+    * MEASURED, not assumed (`Q115AB_r16.json` — interleaved min-of-10
+    * at sf0.1): the round-15 fold variant
     * ([[docSubwordToksFold]], per-occurrence vocab-literal greedy match)
     * claimed the join was "strictly worse at every scale"; the A/B read
     * fold 2.95 s vs join 0.66 s minima — the CLAIM WAS BACKWARD. Greedy

@@ -91,10 +91,11 @@ object AnnDeltaStream {
   def processBatch(batch: DataFrame, batchId: Long, storeDir: String,
       cents: Seq[(Long, Seq[Double])]): Unit = {
     import batch.sparkSession.implicits._
+    if (batch.isEmpty) return
     val ins = batch.filter($"op" === 1).select($"vec_id", $"vec")
-    // the ONE bounded driver probe of the ingest path (an all-delete
-    // batch must not leave a schema-less all-_SUCCESS live root); the
-    // tombstone side needs none — a non-empty batch always has ids
+    // an all-delete batch must not leave a schema-less all-_SUCCESS live
+    // root; the tombstone side needs no probe — a non-empty batch always
+    // has ids
     if (!ins.isEmpty)
       Similarity.assignToCentroids(ins, cents)
         .withColumn("srcb", lit(batchId))
@@ -108,22 +109,13 @@ object AnnDeltaStream {
   }
 
   /** File-source stream over an events directory of (vec_id, vec, op)
-    * parquet files; `maxFilesPerTrigger=1` keeps micro-batches
-    * file-sized. Durable checkpoint beside the store ([[AnnStream.start]]'s
-    * post-compaction contract applies unchanged). */
+    * parquet files ([[Stores.fileStream]]; [[AnnStream.start]]'s
+    * post-compaction checkpoint contract applies unchanged). */
   def start(s: SparkSession, evDir: String, storeDir: String,
       cents: Seq[(Long, Seq[Double])],
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    s.readStream.schema(evSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(evDir)
-      .writeStream
-      .option("checkpointLocation", s"$storeDir.ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) processBatch(batch, batchId, storeDir, cents)
-      }
-      .trigger(trigger)
-      .start()
+    Stores.fileStream(s, evSchema,
+      evDir, storeDir, trigger)(processBatch(_, _, storeDir, cents))
 
   /** Liveness-resolved rows of the store, optionally restricted to probed
     * cells (partition-pruned): freshest copy per vec_id within the

@@ -53,15 +53,18 @@ object AnnStream {
     * index partitions — also the unit the spec drives directly.
     * Idempotent under redelivery of the same `batchId`. */
   def processBatch(batch: DataFrame, batchId: Long, indexDir: String,
-      cents: Seq[(Long, Seq[Double])]): Unit =
+      cents: Seq[(Long, Seq[Double])]): Unit = {
+    // an empty batch would leave a zero-partition all-_SUCCESS index root
+    if (batch.isEmpty) return
     Similarity.assignToCentroids(batch, cents)
       .withColumn("batch", lit(batchId))
       .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch", "cell").parquet(indexDir)
+  }
 
   /** File-source stream over a vectors directory: every arriving parquet
-    * file of (vec_id, vec) rows is assigned and indexed.
-    * `maxFilesPerTrigger=1` keeps micro-batches file-sized.
+    * file of (vec_id, vec) rows is assigned and indexed
+    * ([[Stores.fileStream]]).
     *
     * The checkpoint lives beside the index (`<indexDir>.ckpt`) and is as
     * durable as the index — load-bearing once [[compact]] has run: a
@@ -76,16 +79,8 @@ object AnnStream {
   def start(s: SparkSession, vecsDir: String, indexDir: String,
       cents: Seq[(Long, Seq[Double])],
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    s.readStream.schema(vecSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(vecsDir)
-      .writeStream
-      .option("checkpointLocation", s"$indexDir.ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) processBatch(batch, batchId, indexDir, cents)
-      }
-      .trigger(trigger)
-      .start()
+    Stores.fileStream(s, vecSchema,
+      vecsDir, indexDir, trigger)(processBatch(_, _, indexDir, cents))
 
   /** Probe the streamed index: identical plan to the batch-index query
     * ([[Similarity.queryIvfIndex]] — cell-pruned scan, exact re-rank);

@@ -173,7 +173,7 @@ object CcStream {
   /** LIVE symmetrized edges of the store prefix ≤ `batchId`, restricted
     * src-side to `nodes` (one column `node`) BEFORE the per-pair
     * liveness resolution — latest insert vs the pair's latest delete,
-    * insert winning same-batch ties (the [[SsspDeltaStream]] rule). Rows
+    * insert winning same-batch ties ([[Stores.liveAfterDeletes]]). Rows
     * are symmetrized, so src-restriction commutes with the per-(src,
     * dst) aggregate and also serves undirected membership; the per-pair
     * groupBy subsumes the duplicate-edge dedup a post-compaction
@@ -186,13 +186,7 @@ object CcStream {
         Stores.readPruned(s, s"$storeDir/edges", EdgeBuckets.head, nodes))
       .filter($"batch" <= batchId)
       .join(nodes.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
-    val del = restricted.filter($"op" === -1)
-      .groupBy($"src", $"dst").agg(max($"batch").as("bd"))
-    restricted.filter($"op" === 1)
-      .groupBy($"src", $"dst").agg(max($"batch").as("bi"))
-      .join(del, Seq("src", "dst"), "left")
-      .filter($"bd".isNull || $"bi" >= $"bd")
-      .select($"src", $"dst")
+    Stores.liveAfterDeletes(restricted, Seq("src", "dst"))
   }
 
   /** Ingest one micro-batch of UNDIRECTED edge rows (each row (a, b) is
@@ -207,9 +201,9 @@ object CcStream {
     val s = batch.sparkSession
     import s.implicits._
     // an empty batch would dynamic-overwrite ZERO partitions into a fresh
-    // store — an all-_SUCCESS root that wedges every later read (start()'s
-    // foreachBatch filters empties, but MaintBench and the specs call
-    // processBatch directly)
+    // store — an all-_SUCCESS root that wedges every later read; the guard
+    // lives here, the one entry point start(), MaintBench and the specs
+    // all share
     if (batch.isEmpty) return
     // ±op events (round 10): a batch column `op` (+1 insert / −1 delete
     // of EVERY edge between the endpoints — the reference's wormhole
@@ -259,26 +253,17 @@ object CcStream {
     Stores.writeReplicaBatch(labelRows, batchId, storeDir, LabelReplicas)
   }
 
-  /** File-source stream over an edges directory; `maxFilesPerTrigger=1`
-    * keeps micro-batches file-sized. Durable checkpoint beside the store
-    * (`<storeDir>.ckpt`): a fresh-checkpoint restart would re-deliver
-    * every file — convergent (each recompute reads full history) but a
-    * full relabel of every ever-touched component; resuming the id
-    * sequence keeps restarts incremental. */
+  /** File-source stream over an edges directory ([[Stores.fileStream]]:
+    * file-sized micro-batches, durable checkpoint beside the store). A
+    * fresh-checkpoint restart would re-deliver every file — convergent
+    * (each recompute reads full history) but a full relabel of every
+    * ever-touched component. */
   def start(s: SparkSession, edgesDir: String, storeDir: String,
       rounds: Int = GraphQueries.ScaleCcRounds,
       trigger: Trigger = Trigger.AvailableNow(),
       withOps: Boolean = false): StreamingQuery =
-    s.readStream.schema(if (withOps) deltaSchema else edgeSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(edgesDir)
-      .writeStream
-      .option("checkpointLocation", s"$storeDir.ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) processBatch(batch, batchId, storeDir, rounds)
-      }
-      .trigger(trigger)
-      .start()
+    Stores.fileStream(s, if (withOps) deltaSchema else edgeSchema,
+      edgesDir, storeDir, trigger)(processBatch(_, _, storeDir, rounds))
 
   /** Fold batches ≤ `throughBatch` (plus prior generations) of BOTH
     * stores into one fresh negative generation — [[FunnelStream.compact]]
@@ -293,16 +278,9 @@ object CcStream {
     // negative generation in the liveness comparison); labels keep each
     // node's freshest row, with tombstone-fresh nodes dropped entirely
     // (everything a tombstone shadowed folds away with it)
-    Stores.fold(s, s"$storeDir/edges", throughBatch, EdgeBuckets) { raw =>
-      val src = Stores.withOpDefault(raw)
-      val del = src.filter($"op" === -1)
-        .groupBy($"src", $"dst").agg(max($"batch").as("bd"))
-      src.filter($"op" === 1)
-        .groupBy($"src", $"dst").agg(max($"batch").as("bi"))
-        .join(del, Seq("src", "dst"), "left")
-        .filter($"bd".isNull || $"bi" >= $"bd")
-        .select($"src", $"dst", lit(1).as("op"))
-    }
+    Stores.fold(s, s"$storeDir/edges", throughBatch, EdgeBuckets)(raw =>
+      Stores.liveAfterDeletes(Stores.withOpDefault(raw), Seq("src", "dst"))
+        .withColumn("op", lit(1)))
     // each label replica folds under ITS key's layout; a pre-replica
     // store has no labelsc root — compactReplicas seeds it from the
     // primary's folded rows so the candidate probe never silently

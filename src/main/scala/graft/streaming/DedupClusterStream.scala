@@ -217,27 +217,15 @@ object DedupClusterStream {
       org.apache.spark.sql.types.StructField("op",
         org.apache.spark.sql.types.IntegerType, nullable = false)))
 
-  /** File-source wiring over a documents directory (doc_id, text) — the
-    * [[DedupStream.start]] shape with a durable checkpoint so restarts
-    * resume the batch-id sequence. `withOps = true` reads (doc_id, text,
-    * op) event files instead (the takedown surface). */
+  /** File-source wiring over a documents directory (doc_id, text) —
+    * [[Stores.fileStream]]. `withOps = true` reads (doc_id, text, op)
+    * event files instead (the takedown surface). */
   def start(s: SparkSession, docsDir: String, rootDir: String,
       family: HashFamily = HashFamily.Fast,
       trigger: Trigger = Trigger.AvailableNow(),
       withOps: Boolean = false): StreamingQuery =
-    s.readStream.schema(if (withOps) opDocSchema else DedupStream.docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream
-      .option("checkpointLocation", s"$rootDir.ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // processBatch's own op-split aggregate doubles as the
-        // empty-batch guard — a separate isEmpty here would just add a
-        // job launch per micro-batch
-        processBatch(s, batch, batchId, rootDir, family)
-      }
-      .trigger(trigger)
-      .start()
+    Stores.fileStream(s, if (withOps) opDocSchema else DedupStream.docSchema,
+      docsDir, rootDir, trigger)(processBatch(s, _, _, rootDir, family))
 
   /** Compact the nested cluster store (the band index and pairs store
     * stay batch-partitioned — they are append-layout by design). */

@@ -196,6 +196,8 @@ object DedupStream {
       indexDir: String, pairsDir: String, family: HashFamily,
       threshold: Double = Dedup.JaccardThreshold,
       removedDir: Option[String] = None): Unit = {
+    // an empty batch would dynamic-overwrite zero partitions: nothing to do
+    if (batch.isEmpty) return
     val newSh = Dedup.shinglesOf(batch).cache()
     val newBands = Dedup.bandsOf(newSh, family).cache()
     // hashed ONCE per batch off the cached string shingles — verify and
@@ -410,19 +412,13 @@ object DedupStream {
 
   /** File-source stream over a documents directory: every arriving parquet
     * file of (doc_id, text) rows is incrementally deduped against the
-    * index. `maxFilesPerTrigger=1` keeps micro-batches file-sized. */
+    * index ([[Stores.fileStream]] — the checkpoint beside the index,
+    * `<indexDir>.ckpt`, makes a restart deliver only unseen files). */
   def start(s: SparkSession, docsDir: String, indexDir: String, pairsDir: String,
       family: HashFamily = HashFamily.Fast,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    s.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) processBatch(s, batch, batchId, indexDir, pairsDir, family)
-      }
-      .trigger(trigger)
-      .start()
+    Stores.fileStream(s, docSchema,
+      docsDir, indexDir, trigger)(processBatch(s, _, _, indexDir, pairsDir, family))
 
   /** Accumulated verified pairs, in the batch pipeline's output shape.
     * (An all-empty run may never have materialized the directory — an

@@ -187,8 +187,7 @@ object FunnelStream {
   }
 
   /** File-source stream over an events directory of (user_id, event_type,
-    * ts_us) parquet files; `maxFilesPerTrigger=1` keeps micro-batches
-    * file-sized.
+    * ts_us) parquet files ([[Stores.fileStream]]).
     *
     * The checkpoint lives beside the store (`<storeDir>.ckpt`) and is as
     * durable as the store: a fresh (temp) checkpoint restarts ids at 0
@@ -201,16 +200,8 @@ object FunnelStream {
   def start(s: SparkSession, eventsDir: String, storeDir: String,
       trigger: Trigger = Trigger.AvailableNow(),
       withOps: Boolean = false): StreamingQuery =
-    s.readStream.schema(if (withOps) opEventSchema else eventSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(eventsDir)
-      .writeStream
-      .option("checkpointLocation", s"$storeDir.ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) processBatch(batch, batchId, storeDir)
-      }
-      .trigger(trigger)
-      .start()
+    Stores.fileStream(s, if (withOps) opEventSchema else eventSchema,
+      eventsDir, storeDir, trigger)(processBatch(_, _, storeDir))
 
   /** The maintained funnel table: each user's freshest row. Live batches
     * (non-negative ids) outrank compacted generations; among generations

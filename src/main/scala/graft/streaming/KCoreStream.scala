@@ -92,11 +92,9 @@ object KCoreStream {
       rounds: Int = GraphQueries.KCoreRounds): Unit = {
     val s = batch.sparkSession
     import s.implicits._
-    // empty-batch guard (ADVICE r9): a direct call with an empty batch on
-    // a fresh store would write a zero-partition results root — only
-    // _SUCCESS — that snapshot()'s exists() check passes but the parquet
-    // read throws on (start()'s foreachBatch filters empties; MaintBench
-    // and the specs call processBatch directly)
+    // empty-batch guard (ADVICE r9): an empty batch on a fresh store
+    // would write a zero-partition results root — only _SUCCESS — that
+    // snapshot()'s exists() check passes but the parquet read throws on
     if (batch.isEmpty) return
     // ±op pass-through (round 11): the nested CcStream already maintains
     // labels under deletions; forwarding the op column makes a deleted
@@ -133,23 +131,14 @@ object KCoreStream {
       .partitionBy("batch").parquet(s"$storeDir/results")
   }
 
-  /** File-source wiring, the [[CcStream.start]] shape (durable
-    * checkpoint beside the store — restarts resume the id sequence). */
+  /** File-source wiring ([[Stores.fileStream]]). */
   def start(s: SparkSession, edgesDir: String, storeDir: String,
       k: Int = GraphQueries.KCoreK,
       rounds: Int = GraphQueries.KCoreRounds,
       trigger: Trigger = Trigger.AvailableNow(),
       withOps: Boolean = false): StreamingQuery =
-    s.readStream.schema(if (withOps) CcStream.deltaSchema else edgeSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(edgesDir)
-      .writeStream
-      .option("checkpointLocation", s"$storeDir.ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) processBatch(batch, batchId, storeDir, k, rounds)
-      }
-      .trigger(trigger)
-      .start()
+    Stores.fileStream(s, if (withOps) CcStream.deltaSchema else edgeSchema,
+      edgesDir, storeDir, trigger)(processBatch(_, _, storeDir, k, rounds))
 
   /** Fold batches ≤ `throughBatch` of the nested CC store AND the
     * results store into fresh negative generations — results keep each

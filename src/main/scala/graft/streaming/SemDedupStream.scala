@@ -122,6 +122,7 @@ object SemDedupStream {
       cents: Seq[(Long, Seq[Double])]): Unit = {
     val s = batch.sparkSession
     import s.implicits._
+    if (batch.isEmpty) return
     val ins = batch.filter($"op" === 1).select($"vec_id", $"vec")
     if (!ins.isEmpty) {
       // one pass: assignment + codes of the batch, pinned — reused for
@@ -176,16 +177,8 @@ object SemDedupStream {
   def start(s: SparkSession, evDir: String, storeDir: String,
       cents: Seq[(Long, Seq[Double])],
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    s.readStream.schema(evSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(evDir)
-      .writeStream
-      .option("checkpointLocation", s"$storeDir.ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) processBatch(batch, batchId, storeDir, cents)
-      }
-      .trigger(trigger)
-      .start()
+    Stores.fileStream(s, evSchema,
+      evDir, storeDir, trigger)(processBatch(_, _, storeDir, cents))
 
   /** q129's answer over the maintained store: pairs whose BOTH endpoint
     * copies are still the live ones (vec_id + srcb match — a takedown

@@ -139,13 +139,7 @@ object SsspDeltaStream {
     import s.implicits._
     val ev = Stores.pruneTo(eventsDf, EventBucket, nodes)
       .join(nodes.select($"node".as("src")), Seq("src"), "left_semi")
-    val del = ev.filter($"op" === -1)
-      .groupBy($"src", $"dst").agg(max($"batch").as("bd"))
-    ev.filter($"op" === 1)
-      .groupBy($"src", $"dst", $"w").agg(max($"batch").as("bi"))
-      .join(del, Seq("src", "dst"), "left")
-      .filter($"bd".isNull || $"bi" >= $"bd")
-      .select($"src", $"dst", $"w")
+    Stores.liveAfterDeletes(ev, Seq("src", "dst"), Seq("w"))
   }
 
   /** Deterministic min per node over (dist, pred) candidates. */
@@ -300,21 +294,12 @@ object SsspDeltaStream {
       .select($"node", $"dist")
   }
 
-  /** File-source wiring (the family shape: durable checkpoint beside the
-    * store so restarts resume the batch-id sequence). */
+  /** File-source wiring ([[Stores.fileStream]]). */
   def start(s: SparkSession, eventsDir: String, storeDir: String,
       source: Long, budget: Long,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    s.readStream.schema(eventSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(eventsDir)
-      .writeStream
-      .option("checkpointLocation", s"$storeDir.ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) processBatch(batch, batchId, storeDir, source, budget)
-      }
-      .trigger(trigger)
-      .start()
+    Stores.fileStream(s, eventSchema, eventsDir, storeDir, trigger)(
+      processBatch(_, _, storeDir, source, budget))
 
   /** Fold batches ≤ `throughBatch` (plus prior generations) of both
     * stores ([[Stores.fold]] — atomic, manifested): events resolve to the
@@ -325,15 +310,9 @@ object SsspDeltaStream {
     * (everything a tombstone shadowed folds away with it). */
   def compact(s: SparkSession, storeDir: String, throughBatch: Long): Unit = {
     import s.implicits._
-    Stores.fold(s, s"$storeDir/events", throughBatch, Seq(EventBucket)) { src =>
-      val del = src.filter($"op" === -1)
-        .groupBy($"src", $"dst").agg(max($"batch").as("bd"))
-      src.filter($"op" === 1)
-        .groupBy($"src", $"dst", $"w").agg(max($"batch").as("bi"))
-        .join(del, Seq("src", "dst"), "left")
-        .filter($"bd".isNull || $"bi" >= $"bd")
-        .select($"src", $"dst", $"w", lit(1).as("op"))
-    }
+    Stores.fold(s, s"$storeDir/events", throughBatch, Seq(EventBucket))(src =>
+      Stores.liveAfterDeletes(src, Seq("src", "dst"), Seq("w"))
+        .withColumn("op", lit(1)))
     // each replica folds under ITS key's layout; a pre-replica store has
     // no distsp root — compactReplicas seeds it from the primary's
     // folded rows so the cone probe never silently misses history (the

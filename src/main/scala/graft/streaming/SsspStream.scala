@@ -187,23 +187,15 @@ object SsspStream {
       Stores.writeBatch(improvedAll, batchId, s"$storeDir/dists", Seq(DistBucket))
   }
 
-  /** File-source stream over an edges directory; durable checkpoint
-    * beside the store (`<storeDir>.ckpt`) keeps restarts incremental
-    * (re-delivery would converge — relaxation from a valid table is
-    * idempotent — but re-relax every batch). */
+  /** File-source stream over an edges directory ([[Stores.fileStream]]);
+    * the durable checkpoint keeps restarts incremental (re-delivery would
+    * converge — relaxation from a valid table is idempotent — but
+    * re-relax every batch). */
   def start(s: SparkSession, edgesDir: String, storeDir: String,
       source: Long, budget: Long,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    s.readStream.schema(edgeSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(edgesDir)
-      .writeStream
-      .option("checkpointLocation", s"$storeDir.ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) processBatch(batch, batchId, storeDir, source, budget)
-      }
-      .trigger(trigger)
-      .start()
+    Stores.fileStream(s, edgeSchema,
+      edgesDir, storeDir, trigger)(processBatch(_, _, storeDir, source, budget))
 
   /** Fold batches ≤ `throughBatch` (plus prior generations) into one
     * negative generation: edges dedup, dists keep each node's freshest

@@ -3,12 +3,17 @@ package graft.streaming
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** Shared negative-generation fold + read for the maintained
   * batch-partitioned stores — ONE implementation of the compaction
   * sequence CcStream, TriangleStream, KCoreStream, SsspStream and
   * FunnelStream previously hand-rolled (the copies had already diverged
   * on the missing-store guard before round 9 unified three of them).
+  * The family's other shared decisions live here too: the file-source
+  * stream ([[fileStream]]), the ±op liveness rule ([[liveAfterDeletes]]),
+  * freshest-row precedence ([[freshestPerKey]]) and the bucketed layout.
   *
   * ATOMICITY (round 10): the round-9 fold wrote the staging generation
   * into the live root and only then deleted its sources — any reader in
@@ -169,7 +174,7 @@ private[graft] object Stores {
 
   /** Buckets per key at local test scale (see the layout note above).
     * Overridable via `-Dgraft.stores.numBuckets=<n>` — the deployment
-    * sizing knob (and the NBSWEEP lever). Read ONCE at class init and
+    * sizing knob. Read ONCE at class init and
     * process-lifetime by design: a store must be written and pruned
     * under ONE nb for pruning to be sound, so the knob must never change
     * between a store's writes and its reads within a JVM; across JVMs a
@@ -177,43 +182,7 @@ private[graft] object Stores {
     * VALUES shift even though the directory names don't, so fold through
     * the highest live batch under the new nb before appending). */
   val NumBuckets: Int =
-    sys.props.get("graft.stores.numBuckets")
-      .orElse(sys.env.get("GRAFT_NUM_BUCKETS")) // forked-JVM lever (sbt run)
-      .map(_.toInt).getOrElse(8)
-
-  /** Layout/pruning isolation switches (round 12, THREAD-SCOPED since
-    * round 13): inside [[withLayoutArm]]'s dynamic extent on the CALLING
-    * THREAD, `bucketing = false` makes [[writeBatch]] and [[fold]] treat
-    * their `buckets` as empty (flat layout — [[pruneTo]] then falls back
-    * unfiltered via its missing-column path) and `pruning = false` makes
-    * [[pruneTo]] skip the bucket filter (and its bucket-id driver action)
-    * while the layout stays bucketed. They exist so
-    * [[graft.tools.MaintAb]] can interleave bucketed / unpruned /
-    * unbucketed arms of the SAME binary in one JVM, splitting the
-    * layout's write cost from pruning's read cost. The round-12 version
-    * was a pair of process-wide `@volatile var`s — any OTHER stream in
-    * the same JVM during a flat arm would have written flat batches into
-    * its bucketed stores (review finding); the ThreadLocal scopes the
-    * arm to the bench thread, and production code (which never calls
-    * [[withLayoutArm]]) cannot observe a non-default value. All reads
-    * happen at plan-construction time on the calling thread, so the
-    * scope is exact. */
-  private val layoutArm = new ThreadLocal[(Boolean, Boolean)] {
-    override def initialValue(): (Boolean, Boolean) = (true, true)
-  }
-  private def bucketingEnabled: Boolean = layoutArm.get._1
-  private def pruningEnabled: Boolean = layoutArm.get._2
-
-  /** Run `body` with the layout switches above set on this thread —
-    * bench-tool-only entry point ([[graft.tools.MaintAb]]); a toggled
-    * write against a store built under the other arm still trips the
-    * mixed-layout guard by design. */
-  private[graft] def withLayoutArm[T](bucketing: Boolean, pruning: Boolean)(
-      body: => T): T = {
-    val prev = layoutArm.get
-    layoutArm.set((bucketing, pruning))
-    try body finally layoutArm.set(prev)
-  }
+    sys.props.get("graft.stores.numBuckets").map(_.toInt).getOrElse(8)
 
   /** THE bucket hash — write layout and read pruning must share it for
     * pruning to be sound. xxhash64 is deterministic across JVMs and
@@ -233,13 +202,12 @@ private[graft] object Stores {
     * by the task count. */
   def writeBatch(df: DataFrame, batchId: Long, path: String,
       buckets: Seq[Bucket] = Nil): Unit = {
-    val bks = if (bucketingEnabled) buckets else Nil
-    requireLayoutMatches(df.sparkSession, new Path(path), bks.map(_.pbCol), "writeBatch")
-    val parts = "batch" +: bks.map(_.pbCol)
-    val withPb = withBucketCols(df, bks).withColumn("batch", lit(batchId))
+    requireLayoutMatches(df.sparkSession, new Path(path), buckets.map(_.pbCol), "writeBatch")
+    val parts = "batch" +: buckets.map(_.pbCol)
+    val withPb = withBucketCols(df, buckets).withColumn("batch", lit(batchId))
     val out =
-      if (bks.isEmpty) withPb
-      else withPb.repartition(bks.map(b => col(b.pbCol)): _*)
+      if (buckets.isEmpty) withPb
+      else withPb.repartition(buckets.map(b => col(b.pbCol)): _*)
     out.write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
       .partitionBy(parts: _*).parquet(path)
   }
@@ -355,7 +323,7 @@ private[graft] object Stores {
     * bucket column (a legacy layout, or a spec's hand-built fixture)
     * falls back unfiltered. */
   def pruneTo(df: DataFrame, b: Bucket, keys: DataFrame): DataFrame =
-    if (!pruningEnabled || !df.columns.contains(b.pbCol)) df
+    if (!df.columns.contains(b.pbCol)) df
     else {
       val ids = bucketIdsOf(keys, b)
       // a restriction touching EVERY bucket prunes nothing — skip the
@@ -511,6 +479,46 @@ private[graft] object Stores {
     if (!df.columns.contains("op")) df.withColumn("op", lit(1))
     else df.withColumn("op", coalesce(col("op"), lit(1)))
 
+  /** THE family's ±op liveness rule: per `key`, the latest insert batch
+    * (grouped by `key ++ payload`) must reach the key's latest delete
+    * batch (grouped by `key` alone — a delete kills every payload), the
+    * insert winning same-batch ties (a batch's deletes apply before its
+    * inserts). Folded generations carry only +1 rows at negative ids, so
+    * a later live delete still outranks them. Restriction by any subset
+    * of `key` commutes with the resolution. `rows` carries `op` and
+    * `batch`; returns `key ++ payload`. */
+  def liveAfterDeletes(rows: DataFrame, key: Seq[String],
+      payload: Seq[String] = Nil): DataFrame = {
+    val del = rows.filter(col("op") === -1)
+      .groupBy(key.map(col): _*).agg(max(col("batch")).as("bd"))
+    rows.filter(col("op") === 1)
+      .groupBy((key ++ payload).map(col): _*).agg(max(col("batch")).as("bi"))
+      .join(del, key, "left")
+      .filter(col("bd").isNull || col("bi") >= col("bd"))
+      .select((key ++ payload).map(col): _*)
+  }
+
+  /** THE family's file-source stream: one micro-batch per arriving
+    * parquet file of `inDir` (`maxFilesPerTrigger = 1` keeps batches
+    * file-sized), each handed to `process` with its batch id. The
+    * checkpoint lives beside the store (`<storeDir>.ckpt`) and is as
+    * durable as it: a fresh checkpoint restarts ids at 0 and re-delivers
+    * EVERY file — a full recompute at best, and after a compaction a
+    * re-creation of already-folded batches. Resuming the id sequence keeps
+    * restarts incremental. `process` owns the empty-batch guard (every
+    * `processBatch` returns early on one). */
+  def fileStream(s: SparkSession, schema: StructType, inDir: String,
+      storeDir: String, trigger: Trigger)(
+      process: (DataFrame, Long) => Unit): StreamingQuery =
+    s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(inDir)
+      .writeStream
+      .option("checkpointLocation", s"$storeDir.ckpt")
+      .foreachBatch { (batch: DataFrame, batchId: Long) => process(batch, batchId) }
+      .trigger(trigger)
+      .start()
+
   private case class Survey(present: Set[Long], validGens: Set[Long],
       covered: Set[Long], staleManifests: Seq[Path], tmps: Seq[Path])
 
@@ -587,7 +595,6 @@ private[graft] object Stores {
   def fold(s: SparkSession, path: String, throughBatch: Long,
       buckets: Seq[Bucket] = Nil)(
       stage: DataFrame => DataFrame): Unit = {
-    val bks = if (bucketingEnabled) buckets else Nil
     val root = new Path(path)
     val fs = fsOf(s, root)
     if (!fs.exists(root)) return
@@ -625,8 +632,8 @@ private[graft] object Stores {
     // another layout beside it); deterministic order for a stable message
     leftover.toSeq.sorted.foreach { lb =>
       layoutColsOf(fs, new Path(root, s"batch=$lb")).foreach { was =>
-        if (was != bks.map(_.pbCol)) throw new IllegalStateException(
-          s"fold($root): staging a [${bks.map(_.pbCol).mkString(",")}] generation " +
+        if (was != buckets.map(_.pbCol)) throw new IllegalStateException(
+          s"fold($root): staging a [${buckets.map(_.pbCol).mkString(",")}] generation " +
             s"beside [${was.mkString(",")}] live batch $lb of " +
             s"${leftover.toSeq.sorted.mkString("{", ",", "}")} would mix directory " +
             "layouts and wedge partition discovery. A layout migration must fold " +
@@ -645,16 +652,16 @@ private[graft] object Stores {
       // layouts write it under an all-zeros bucket path so partition
       // discovery keeps one consistent directory depth
       val leaf =
-        if (bks.isEmpty) tmp
-        else new Path(tmp, bks.map(b => s"${b.pbCol}=0").mkString("/"))
+        if (buckets.isEmpty) tmp
+        else new Path(tmp, buckets.map(b => s"${b.pbCol}=0").mkString("/"))
       staged.repartition(1).write.mode(SaveMode.Overwrite).parquet(leaf.toString)
-    } else if (bks.isEmpty) {
+    } else if (buckets.isEmpty) {
       staged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     } else {
-      withBucketCols(staged, bks)
-        .repartition(bks.map(b => col(b.pbCol)): _*)
+      withBucketCols(staged, buckets)
+        .repartition(buckets.map(b => col(b.pbCol)): _*)
         .write.mode(SaveMode.Overwrite)
-        .partitionBy(bks.map(_.pbCol): _*)
+        .partitionBy(buckets.map(_.pbCol): _*)
         .parquet(tmp.toString)
     }
     if (!fs.rename(tmp, new Path(root, s"batch=$stagingId")))

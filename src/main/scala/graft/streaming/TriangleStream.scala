@@ -154,24 +154,11 @@ object TriangleStream {
         .select($"p", $"su", $"op", $"batch")
   }
 
-  /** LIVE (p, su) witnesses of raw ± rows: the pair's latest insert must
-    * outrank its latest delete, the insert winning same-batch ties (a
-    * batch's deletes apply before its inserts — the [[SsspDeltaStream]]
-    * rule, verbatim). Folded generations carry only +1 rows at negative
-    * ids, so a later live delete still outranks them. Restriction by p
-    * or su commutes with the resolution (both are components of the
-    * group key). */
-  private def livePairs(raw: DataFrame): DataFrame = {
-    val s = raw.sparkSession
-    import s.implicits._
-    val del = raw.filter($"op" === -1)
-      .groupBy($"p", $"su").agg(max($"batch").as("bd"))
-    raw.filter($"op" === 1)
-      .groupBy($"p", $"su").agg(max($"batch").as("bi"))
-      .join(del, Seq("p", "su"), "left")
-      .filter($"bd".isNull || $"bi" >= $"bd")
-      .select($"p", $"su")
-  }
+  /** LIVE (p, su) witnesses of raw ± rows — [[Stores.liveAfterDeletes]]
+    * per pair. Restriction by p or su commutes with the resolution (both
+    * are components of the group key). */
+  private def livePairs(raw: DataFrame): DataFrame =
+    Stores.liveAfterDeletes(raw, Seq("p", "su"))
 
   /** Net-positive projected edges INCIDENT TO `endpoints` (one column
     * `n`) at store prefix `< upTo` — restriction-first (round 10): the
@@ -400,23 +387,15 @@ object TriangleStream {
       .filter($"n_triangles" > 0)
   }
 
-  /** File-source wiring, the [[CcStream.start]] shape: durable checkpoint
-    * beside the store so a restart resumes the batch-id sequence and only
-    * ever delivers unseen files (delta stores double-fold otherwise). */
+  /** File-source wiring ([[Stores.fileStream]]): the durable checkpoint
+    * means a restart only ever delivers unseen files (delta stores
+    * double-fold otherwise). */
   def start(s: SparkSession, pairsDir: String, storeDir: String,
       cap: Long = GraphQueries.TriDegreeCap,
       trigger: Trigger = Trigger.AvailableNow(),
       withOps: Boolean = false): StreamingQuery =
-    s.readStream.schema(if (withOps) deltaSchema else pairSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(pairsDir)
-      .writeStream
-      .option("checkpointLocation", s"$storeDir.ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) processBatch(batch, batchId, storeDir, cap)
-      }
-      .trigger(trigger)
-      .start()
+    Stores.fileStream(s, if (withOps) deltaSchema else pairSchema,
+      pairsDir, storeDir, trigger)(processBatch(_, _, storeDir, cap))
 
   /** Fold batches ≤ `throughBatch` (plus prior generations) of all three
     * stores into one fresh negative generation ([[Stores.fold]]): pairs

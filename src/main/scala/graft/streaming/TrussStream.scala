@@ -139,23 +139,14 @@ object TrussStream {
       .partitionBy("batch").parquet(s"$storeDir/results")
   }
 
-  /** File-source wiring, the [[CcStream.start]] shape (durable
-    * checkpoint beside the store — restarts resume the id sequence). */
+  /** File-source wiring ([[Stores.fileStream]]). */
   def start(s: SparkSession, edgesDir: String, storeDir: String,
       k: Int = GraphQueries.TrussK,
       rounds: Int = GraphQueries.TrussRounds,
       trigger: Trigger = Trigger.AvailableNow(),
       withOps: Boolean = false): StreamingQuery =
-    s.readStream.schema(if (withOps) deltaSchema else edgeSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(edgesDir)
-      .writeStream
-      .option("checkpointLocation", s"$storeDir.ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) processBatch(batch, batchId, storeDir, k, rounds)
-      }
-      .trigger(trigger)
-      .start()
+    Stores.fileStream(s, if (withOps) deltaSchema else edgeSchema,
+      edgesDir, storeDir, trigger)(processBatch(_, _, storeDir, k, rounds))
 
   /** Fold batches ≤ `throughBatch` of the nested CC store AND the
     * results store into fresh negative generations — results keep each

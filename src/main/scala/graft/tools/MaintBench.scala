@@ -6,10 +6,8 @@
 // Each maintainer ingests its standard three-slice split at each SF with
 // per-batch wall times; emits one JSON artifact.
 //
-// The lane fixtures and schedules live in [[MaintLanes]], shared with
-// [[MaintAb]] (the bucketed-vs-flat isolation A/B) so the two artifacts
-// measure THE SAME ingest schedules — divergent copies would make the
-// A/B incomparable to the headline lanes.
+// The lane fixtures and schedules live in [[MaintLanes]] (MAINTAB_r12,
+// the bucketed-vs-flat isolation A/B, measured the same schedules).
 //
 // Run: sbt 'runMain graft.tools.MaintBench [outFile] [sfDirs,comma-sep] [lanes,comma-sep]'
 package graft.tools
@@ -230,8 +228,8 @@ object MaintBench {
     *    ring+chord giant by node residue — its chord-3 edges formed a
     *    3,600-hop chain whose labels could NOT converge in 20 rounds,
     *    silently violating the engines' documented fixpoint
-    *    precondition (caught by KCoarseProbe's fine≡coarse equality
-    *    check, which now guards exactly this);
+    *    precondition (caught by a fine≡coarse equality check,
+    *    KCOARSE_r10.json);
     *  - the fringe is sized to a multiple of 4 so every 4-cycle closes
     *    (an open tail path would peel out of the 2-core).
     *
@@ -308,8 +306,8 @@ object MaintBench {
       // attempts of several sf0.1 lanes in MAINTBENCH_r13_minof2 were
       // poisoned together; single-shot lanes took 5-20x spikes — one
       // sf0.01 batch read 207 s on one run, 12 s on the next). Attempt
-      // k of every lane runs before attempt k+1 of any lane — the MaintAb
-      // arm-interleaving trick applied to the headline bench — so a burst
+      // k of every lane runs before attempt k+1 of any lane — A/B
+      // arm interleaving applied to the headline bench — so a burst
       // lands in at most one attempt per lane and the best-total attempt
       // filters it. Every attempt's total is emitted so a reader still
       // sees the spread.
@@ -345,7 +343,7 @@ object MaintBench {
     }
 
     val json = "{" + sfJsons.mkString(",") +
-      ""","note":"per-micro-batch wall seconds for each maintained-store graph maintainer ingesting its standard split (three slices; the *_delta lanes use the 4-batch insert/insert/delete/re-insert schedule of q102/q103), per scale factor (one JVM, sequential). The claim under test: per-batch cost tracks the touched working set (affected components / delta-edge adjacency / dup volume), not corpus volume - so cost should grow sub-linearly in SF wherever the touched volume does. kcore_skew = the honest degenerate case, a giant component holding ~99% of the edges that every node-sliced batch touches, so each batch re-peels ~the whole graph by design (see KCoreStream scaladoc). r12 additions: truss_delta (the q106 edge-granular 4-batch schedule over the capped part-part projection - the composed nested-CC + support-peel maintainer, the family's most expensive member) now has a measured lane; FunnelStream's events store joined the bucketed layout; lane fixtures are shared with MaintAb (MAINTAB_r12), the same-JVM bucketed/unpruned/flat isolation A/B that splits the r11 lane regression into layout cost vs liveness cost. r14 additions: dedup_takedown - the q112 insert/insert/retire/late-insert schedule through DedupClusterStream (pair withdrawals via the nested CC store + the probe mask; batch 3 measures the masked-probe path); ann_delta - the q110 insert/insert/delete/re-insert schedule over the embedding corpus through AnnDeltaStream (per-batch cost is assignment of the batch's own rows + a partitioned write; the index is never read on ingest, so batches should cost their own size at every SF; centroid training is excluded - it is the shared prepare stage, forced in an untimed prepare step before each attempt). r15 additions: funnel_delta - the q113 insert/insert/retract/re-insert schedule through FunnelStream (per-batch cost is the touched users' histories; the retraction batch touches the retired users, so its cost is their history volume plus the funnel-row rewrite); dedup_takedown now also emits a 'post' cell = the q114 PHYSICAL index purge (one mask-aware rewrite of the band/shingle index, a maintenance job priced separately from ingest). r13 addition: truss_skew - the kcore_skew giant-component fixture fed through TrussStream, measuring the documented degenerate-component cliff (every batch re-peels ~the whole giant's supports by design) for the truss maintainer directly instead of transferring the kcore number. Same-box variance caveat of MAINTBENCH_r10 applies; with SPARK_GRAFT_MAINT_RUNS=N>1 each lane repeats its full schedule N times against a fresh store and the per-batch row is the best-total run (all run totals in 'runs'); attempts are INTERLEAVED across lanes (r14: attempt k of every lane runs before attempt k+1 of any lane), so a multi-minute ambient burst poisons at most one attempt per lane instead of all attempts of one lane."}"""
+      ""","note":"per-micro-batch wall seconds for each maintained-store graph maintainer ingesting its standard split (three slices; the *_delta lanes use the 4-batch insert/insert/delete/re-insert schedule of q102/q103), per scale factor (one JVM, sequential). The claim under test: per-batch cost tracks the touched working set (affected components / delta-edge adjacency / dup volume), not corpus volume - so cost should grow sub-linearly in SF wherever the touched volume does. kcore_skew = the honest degenerate case, a giant component holding ~99% of the edges that every node-sliced batch touches, so each batch re-peels ~the whole graph by design (see KCoreStream scaladoc). r12 additions: truss_delta (the q106 edge-granular 4-batch schedule over the capped part-part projection - the composed nested-CC + support-peel maintainer, the family's most expensive member) now has a measured lane; FunnelStream's events store joined the bucketed layout; lane fixtures are the ones MAINTAB_r12 measured, the same-JVM bucketed/unpruned/flat isolation A/B that splits the r11 lane regression into layout cost vs liveness cost. r14 additions: dedup_takedown - the q112 insert/insert/retire/late-insert schedule through DedupClusterStream (pair withdrawals via the nested CC store + the probe mask; batch 3 measures the masked-probe path); ann_delta - the q110 insert/insert/delete/re-insert schedule over the embedding corpus through AnnDeltaStream (per-batch cost is assignment of the batch's own rows + a partitioned write; the index is never read on ingest, so batches should cost their own size at every SF; centroid training is excluded - it is the shared prepare stage, forced in an untimed prepare step before each attempt). r15 additions: funnel_delta - the q113 insert/insert/retract/re-insert schedule through FunnelStream (per-batch cost is the touched users' histories; the retraction batch touches the retired users, so its cost is their history volume plus the funnel-row rewrite); dedup_takedown now also emits a 'post' cell = the q114 PHYSICAL index purge (one mask-aware rewrite of the band/shingle index, a maintenance job priced separately from ingest). r13 addition: truss_skew - the kcore_skew giant-component fixture fed through TrussStream, measuring the documented degenerate-component cliff (every batch re-peels ~the whole giant's supports by design) for the truss maintainer directly instead of transferring the kcore number. Same-box variance caveat of MAINTBENCH_r10 applies; with SPARK_GRAFT_MAINT_RUNS=N>1 each lane repeats its full schedule N times against a fresh store and the per-batch row is the best-total run (all run totals in 'runs'); attempts are INTERLEAVED across lanes (r14: attempt k of every lane runs before attempt k+1 of any lane), so a multi-minute ambient burst poisons at most one attempt per lane instead of all attempts of one lane."}"""
     println(json)
     out.foreach(p => java.nio.file.Files.writeString(java.nio.file.Paths.get(p), json + "\n"))
     spark.stop()

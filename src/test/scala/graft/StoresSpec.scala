@@ -120,4 +120,29 @@ class StoresSpec extends AnyFunSuite {
     writeBatch(p, 2, Seq((7L, 1L)))
     assert(sums(Stores.read(spark, p)) === Map(7L -> 1L))
   }
+
+  test("liveAfterDeletes: latest insert vs latest delete, inserts win ties") {
+    import spark.implicits._
+    // (case, rows as (src, dst, w, op, batch), payload, expected live rows)
+    val cases = Seq(
+      ("same-batch insert + delete stays live",
+        Seq((1L, 2L, 5L, 1, 3L), (1L, 2L, 5L, -1, 3L)), Nil, Set(Seq(1L, 2L))),
+      ("a later delete kills the row",
+        Seq((1L, 2L, 5L, 1, 0L), (1L, 2L, 5L, -1, 1L)), Nil, Set.empty[Seq[Long]]),
+      ("a re-insert after a delete resurrects it",
+        Seq((1L, 2L, 5L, 1, 0L), (1L, 2L, 5L, -1, 1L), (1L, 2L, 5L, 1, 2L)), Nil,
+        Set(Seq(1L, 2L))),
+      ("a folded +1 row is outranked by a later live delete",
+        Seq((1L, 2L, 5L, 1, -1L), (3L, 4L, 5L, 1, -1L), (1L, 2L, 5L, -1, 0L)), Nil,
+        Set(Seq(3L, 4L))),
+      ("one (src, dst) delete kills every weight",
+        Seq((1L, 2L, 5L, 1, 0L), (1L, 2L, 7L, 1, 1L), (1L, 2L, 0L, -1, 2L),
+          (1L, 3L, 4L, 1, 0L)), Seq("w"), Set(Seq(1L, 3L, 4L))))
+    cases.foreach { case (name, rows, payload, want) =>
+      val got = Stores.liveAfterDeletes(
+          rows.toDF("src", "dst", "w", "op", "batch"), Seq("src", "dst"), payload)
+        .collect().map(r => (0 until r.length).map(r.getLong)).toSet
+      assert(got === want, name)
+    }
+  }
 }
