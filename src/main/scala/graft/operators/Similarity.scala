@@ -195,24 +195,22 @@ object Similarity {
     * scan. */
   private def q28(s: SparkSession, dir: String): DataFrame = {
     val (idxDir, cents) = ivfIndex(s, dir)
-    ivfServeTopK(s, dir, idxDir, cents)
+    ivfServeTopK(s, dir, s.read.parquet(idxDir), cents)
   }
 
-  /** The q28 serving path against ANY persisted IVF index directory laid
-    * out by [[assignToCentroids]] partitioning (cell-partitioned parquet;
+  /** The q28 serving path against ANY persisted IVF index frame laid out
+    * by [[assignToCentroids]] partitioning (cell-partitioned parquet;
     * extra partition columns such as a streamed index's `batch` ride along
     * unreferenced): driver-side probe selection over the k centroids,
     * partition-pruned scan of the probed cells, exact re-rank. Shared by
     * q28 (batch-built index) and q89 ([[graft.streaming.AnnStream]]-built
-    * index) — one code path, so the streamed serve is oracle-comparable
-    * by construction. */
-  private[graft] def ivfServeTopK(s: SparkSession, dir: String, idxDir: String,
+    * index, read through its store's live batches) — one code path, so
+    * the streamed serve is oracle-comparable by construction. */
+  private[graft] def ivfServeTopK(s: SparkSession, dir: String, index: DataFrame,
       cents: Seq[(Long, Seq[Double])]): DataFrame = {
     import s.implicits._
     val qvec = queryVector(s, dir)
-    val cells = probeCells(qvec, cents)
-    val cand = s.read.parquet(idxDir).filter($"cell".isInCollection(cells))
-    rankTopK(cand, qvec)
+    rankTopK(index.filter($"cell".isInCollection(probeCells(qvec, cents))), qvec)
   }
 
   /** The registered query vector (vec 0) — driver-side, one point lookup. */
@@ -450,9 +448,14 @@ object Similarity {
   /** Query a persisted index: nprobe nearest cells → pruned scan → exact
     * re-rank. `cells` are the probed cell ids (from centroid similarity). */
   def queryIvfIndex(s: SparkSession, indexDir: String, qvec: Seq[Double],
-      cells: Seq[Long], k: Int = K): DataFrame = {
-    import s.implicits._
-    val idx = s.read.parquet(indexDir).filter($"cell".isin(cells: _*))
+      cells: Seq[Long], k: Int = K): DataFrame =
+    queryIvfIndex(s.read.parquet(indexDir), qvec, cells, k)
+
+  /** [[queryIvfIndex]] over an already-resolved index frame. */
+  def queryIvfIndex(index: DataFrame, qvec: Seq[Double], cells: Seq[Long],
+      k: Int): DataFrame = {
+    import index.sparkSession.implicits._
+    val idx = index.filter($"cell".isin(cells: _*))
     idx.withColumn("sim", round(cosine($"vec",
         array(qvec.map(lit): _*).cast("array<double>")), 3))
       .orderBy($"sim".desc, $"vec_id")

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Similarity
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -20,11 +20,11 @@ import org.apache.spark.sql.types._
   * convention).
   *
   * Layout: `<dir>/live/batch=<b>/cell=<c>` holds assigned rows
-  * (vec_id, vec, srcb); `<dir>/dead/batch=<b>` holds tombstones
-  * (vec_id, deadb). Both sides dynamically overwrite only their own
-  * batch partitions with deterministic bytes, so redelivery (full or
-  * after a partial crash) converges — the [[DedupStream]] recovery
-  * design on both stores.
+  * (vec_id, vec, srcb) — `cell` is the [[Stores.Carried]] layout column;
+  * `<dir>/dead/batch=<b>` holds tombstones (vec_id, deadb). Both sides
+  * are [[Stores]] stores: written by [[Stores.writeBatch]] (redelivery
+  * overwrites only its own batch partitions with deterministic bytes, so
+  * it converges), folded by [[Stores.fold]], read by [[Stores.read]].
   *
   * EVERY EVENT TOMBSTONES STRICTLY-OLDER COPIES of its vec_id (round
   * 15): a delete hides them; an insert SUPERSEDES them — upsert
@@ -97,15 +97,12 @@ object AnnDeltaStream {
     // root; the tombstone side needs no probe — a non-empty batch always
     // has ids
     if (!ins.isEmpty)
-      Similarity.assignToCentroids(ins, cents)
-        .withColumn("srcb", lit(batchId))
-        .withColumn("batch", lit(batchId))
-        .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch", "cell").parquet(livePath(storeDir))
-    batch.select($"vec_id").distinct()
-      .select($"vec_id", lit(batchId).as("deadb"), lit(batchId).as("batch"))
-      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch").parquet(deadPath(storeDir))
+      Stores.writeBatch(
+        Similarity.assignToCentroids(ins, cents).withColumn("srcb", lit(batchId)),
+        batchId, livePath(storeDir), AnnStream.Layout)
+    Stores.writeBatch(
+      batch.select($"vec_id").distinct().select($"vec_id", lit(batchId).as("deadb")),
+      batchId, deadPath(storeDir))
   }
 
   /** File-source stream over an events directory of (vec_id, vec, op)
@@ -117,60 +114,64 @@ object AnnDeltaStream {
     Stores.fileStream(s, evSchema,
       evDir, storeDir, trigger)(processBatch(_, _, storeDir, cents))
 
-  /** Liveness-resolved rows of the store, optionally restricted to probed
-    * cells (partition-pruned): freshest copy per vec_id within the
-    * scanned cells (max `srcb`; duplicate copies a crashed compaction
-    * leaves behind are content-identical and collapse here), then
-    * tombstone resolution — dead iff some tombstone STRICTLY post-dates
-    * the copy's `srcb`. Because every event tombstones older copies (see
-    * class doc), the tombstone join — not the window — is what retires a
-    * stale copy whose fresher re-insert drifted to an unscanned cell, so
-    * the pruned path never serves a replaced vector. */
+  /** Liveness-resolved rows of the store STRICTLY BEFORE `horizon`,
+    * optionally restricted to probed cells (partition-pruned): the
+    * [[resolveLive]] rule over inserts with `srcb < horizon` and
+    * tombstones with `deadb < horizon` — the state the store was in when
+    * batch `horizon` first arrived, regardless of what has landed since
+    * (the [[SemDedupStream]] redelivery contract). The default horizon
+    * resolves the current state. Returns (vec_id, vec, cell, srcb);
+    * empty-store-safe. */
   def liveRows(s: SparkSession, storeDir: String,
-      cells: Option[Seq[Long]] = None): DataFrame = {
+      cells: Option[Seq[Long]] = None, horizon: Long = Long.MaxValue): DataFrame = {
     import s.implicits._
-    // either side's root can be missing (a store that has only ever seen
-    // the other op) or exist with no batch dirs (compaction swept it) —
-    // parquet cannot infer a schema from an empty dir, so gate BOTH
-    // sides on the batch listing, not bare existence
-    val fresh =
-      if (batchIdsUnder(s, livePath(storeDir)).isEmpty)
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(
-            StructField("vec_id", LongType, nullable = false),
-            StructField("vec", ArrayType(DoubleType, containsNull = true)),
-            StructField("cell", LongType),
-            StructField("srcb", LongType))))
-      else {
-        val live = s.read.parquet(livePath(storeDir))
-        val pruned = cells.fold(live)(cs => live.filter($"cell".isInCollection(cs)))
-        pruned
-          .withColumn("rn", row_number().over(
-            Window.partitionBy($"vec_id").orderBy($"srcb".desc, $"batch".desc)))
-          .filter($"rn" === 1)
-          .select($"vec_id", $"vec", $"cell", $"srcb")
-      }
-    val resolved =
-      if (batchIdsUnder(s, deadPath(storeDir)).isEmpty) fresh
-      else {
-        // the tombstone side is events-since-last-sweep (upsert semantics
-        // write one per EVENT, not per delete), so its size is a
-        // compaction-cadence choice, not a bound — broadcast only when
-        // the on-disk bytes (hydration-scaled) fit the session's
-        // broadcast threshold, and let the planner (AQE) pick the
-        // strategy otherwise; the aggregate below never exceeds its
-        // input, so the gate is sound
-        val agg = s.read.parquet(deadPath(storeDir))
-          .groupBy($"vec_id").agg(max($"deadb").as("deadb"))
-        val dead = Stores.broadcastIfUnder(agg, deadPath(storeDir))
-        fresh.join(dead, Seq("vec_id"), "left")
-          .filter($"deadb".isNull || $"srcb" >= $"deadb")
-      }
-    resolved.select($"vec_id", $"vec", $"cell")
+    // a store that has only ever seen deletes has no live side
+    if (Stores.batchIdsUnder(s, livePath(storeDir)).isEmpty)
+      return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        StructType(Seq(
+          StructField("vec_id", LongType, nullable = false),
+          StructField("vec", ArrayType(DoubleType, containsNull = true)),
+          StructField("cell", LongType),
+          StructField("srcb", LongType))))
+    val live = Stores.read(s, livePath(storeDir)).filter($"srcb" < horizon)
+    resolveLive(cells.fold(live)(cs => live.filter($"cell".isInCollection(cs))),
+      storeDir, horizon)
   }
 
-  private def batchIdsUnder(s: SparkSession, path: String): Array[Long] =
-    Stores.batchIdsUnder(s, path)
+  /** THE ANN liveness rule over `rows` of the live store: freshest copy
+    * per vec_id by (`srcb`, `batch`) desc (duplicate copies are
+    * content-identical and collapse here), then tombstone resolution
+    * against the tombstones with `deadb < deadBefore` — dead iff one
+    * STRICTLY post-dates the copy's `srcb`. Because every event
+    * tombstones older copies (see class doc), the tombstone join — not
+    * the window — is what retires a stale copy whose fresher re-insert
+    * drifted to an unscanned cell, so a cell-pruned read never serves a
+    * replaced vector. Returns (vec_id, vec, cell, srcb). */
+  private def resolveLive(rows: DataFrame, storeDir: String,
+      deadBefore: Long): DataFrame = {
+    val s = rows.sparkSession
+    import s.implicits._
+    val fresh = rows
+      .withColumn("rn", row_number().over(
+        Window.partitionBy($"vec_id").orderBy($"srcb".desc, $"batch".desc)))
+      .filter($"rn" === 1)
+      .select($"vec_id", $"vec", $"cell", $"srcb")
+    if (Stores.batchIdsUnder(s, deadPath(storeDir)).isEmpty) fresh
+    else {
+      // the tombstone side is events-since-last-sweep (upsert semantics
+      // write one per EVENT, not per delete), so its size is a
+      // compaction-cadence choice, not a bound — broadcast only when
+      // the on-disk bytes (hydration-scaled) fit the session's
+      // broadcast threshold, and let the planner (AQE) pick the
+      // strategy otherwise; the aggregate below never exceeds its
+      // input, so the gate is sound
+      val agg = Stores.read(s, deadPath(storeDir)).filter($"deadb" < deadBefore)
+        .groupBy($"vec_id").agg(max($"deadb").as("deadb"))
+      fresh.join(Stores.broadcastIfUnder(agg, deadPath(storeDir)), Seq("vec_id"), "left")
+        .filter($"deadb".isNull || $"srcb" >= $"deadb")
+        .select($"vec_id", $"vec", $"cell", $"srcb")
+    }
+  }
 
   /** q28's serving path against the liveness-resolved store: driver-side
     * probe selection, cell-pruned candidate scan, tombstone resolution on
@@ -186,56 +187,21 @@ object AnnDeltaStream {
 
   /** Fold every live batch at or below `throughBatch` — plus any previous
     * generation — into one consolidated negative-id generation,
-    * RESOLVING liveness through the folded tombstones: rows a folded
+    * RESOLVING liveness through the folded tombstones ([[resolveLive]]
+    * with the tombstones at or below `throughBatch`): rows a folded
     * tombstone kills are dropped, surviving rows keep their original
-    * `srcb`, and tombstones at or below `throughBatch` are deleted (a
-    * tombstone only ever kills inserts with a smaller batch id, all of
-    * which are folded here — fresher inserts are resurrections by
-    * definition). Tombstones ABOVE `throughBatch` remain and continue to
-    * resolve against the generation's preserved `srcb`. Staging id,
-    * crash-safety and the one-compactor contract follow
-    * [[AnnStream.compact]] verbatim; the extra crash window here —
-    * sources deleted after staging, tombstones last — converges because
-    * leftover tombstones ≤ `throughBatch` can only re-kill rows the
-    * staged generation already excluded (`srcb` provenance), never a
-    * fresher row. */
+    * `srcb`. Then the tombstones at or below `throughBatch` fold to an
+    * empty generation (a tombstone only ever kills inserts with a
+    * smaller batch id, all of which are folded here — fresher inserts
+    * are resurrections by definition). Tombstones ABOVE `throughBatch`
+    * remain and continue to resolve against the generation's preserved
+    * `srcb`. Each fold follows [[Stores.fold]]'s cover-manifest rules; a
+    * crash between the two folds leaves tombstones ≤ `throughBatch`
+    * that can only re-kill rows the generation already excluded (`srcb`
+    * provenance), never a fresher row. */
   def compact(s: SparkSession, storeDir: String, throughBatch: Long): Unit = {
-    import s.implicits._
-    val root = new org.apache.hadoop.fs.Path(livePath(storeDir))
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val batchIds = batchIdsUnder(s, livePath(storeDir))
-    val sources = batchIds.filter(b => b < 0 || b <= throughBatch)
-    if (sources.nonEmpty) {
-      val stagingId = batchIds.filter(_ < 0).minOption.getOrElse(0L) - 1L
-      val folded = s.read.parquet(livePath(storeDir))
-        .filter($"batch".isInCollection(sources))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy($"vec_id").orderBy($"srcb".desc, $"batch".desc)))
-        .filter($"rn" === 1)
-        .select($"vec_id", $"vec", $"cell", $"srcb")
-      val deadIds = batchIdsUnder(s, deadPath(storeDir)).filter(_ <= throughBatch)
-      val surv =
-        if (deadIds.isEmpty) folded
-        else {
-          val dead = s.read.parquet(deadPath(storeDir))
-            .filter($"batch".isInCollection(deadIds))
-            .groupBy($"vec_id").agg(max($"deadb").as("deadb"))
-          folded.join(dead, Seq("vec_id"), "left")
-            .filter($"deadb".isNull || $"srcb" >= $"deadb")
-            .select($"vec_id", $"vec", $"cell", $"srcb")
-        }
-      // localCheckpoint materializes the slice BEFORE the overwrite of a
-      // path the plan still reads (the family-wide compaction rule)
-      val staged = surv.localCheckpoint()
-      staged.select($"vec_id", $"vec", $"srcb", lit(stagingId).as("batch"), $"cell")
-        .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch", "cell").parquet(livePath(storeDir))
-      sources.foreach { b =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, s"batch=$b"), true)
-      }
-      deadIds.foreach { b =>
-        fs.delete(new org.apache.hadoop.fs.Path(deadPath(storeDir), s"batch=$b"), true)
-      }
-    }
+    Stores.fold(s, livePath(storeDir), throughBatch, AnnStream.Layout)(
+      resolveLive(_, storeDir, throughBatch + 1))
+    Stores.fold(s, deadPath(storeDir), throughBatch)(_.select("vec_id", "deadb").limit(0))
   }
 }

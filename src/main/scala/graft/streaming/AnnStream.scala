@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Similarity
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -24,13 +24,16 @@ import org.apache.spark.sql.types._
   * pins content equality under different batch splits, and probe-query
   * equality against the batch-built index.
   *
-  * Layout: parquet partitioned by (batch, cell). Probes prune on `cell`
-  * exactly as the batch index does (Spark prunes any partition column,
-  * whatever its depth); `batch` being a partition column is what makes
-  * redelivery exactly-once — each micro-batch DYNAMICALLY OVERWRITES only
-  * its own `batch=<id>` partitions with deterministic bytes, so a replay
-  * (full or after a partial crash) converges instead of double-appending
-  * (the [[DedupStream]] recovery design, applied to the index).
+  * Layout: parquet partitioned by (batch, cell) — `cell` is the
+  * [[Stores.Carried]] layout column, written by [[Stores.writeBatch]]
+  * and folded by [[Stores.fold]]. Probes prune on `cell` exactly as the
+  * batch index does (Spark prunes any partition column, whatever its
+  * depth); `batch` being a partition column is what makes redelivery
+  * exactly-once — each micro-batch DYNAMICALLY OVERWRITES only its own
+  * `batch=<id>` partitions with deterministic bytes, so a replay (full or
+  * after a partial crash) converges instead of double-appending (the
+  * [[DedupStream]] recovery design, applied to the index). Every probe
+  * reads through [[Stores.read]].
   *
   * Scale shape: per batch the work is O(new vectors × k) comparisons in
   * one zero-shuffle projection ([[Similarity.assignToCentroids]] embeds
@@ -56,11 +59,11 @@ object AnnStream {
       cents: Seq[(Long, Seq[Double])]): Unit = {
     // an empty batch would leave a zero-partition all-_SUCCESS index root
     if (batch.isEmpty) return
-    Similarity.assignToCentroids(batch, cents)
-      .withColumn("batch", lit(batchId))
-      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch", "cell").parquet(indexDir)
+    Stores.writeBatch(Similarity.assignToCentroids(batch, cents), batchId, indexDir, Layout)
   }
+
+  /** The index's layout below `batch=<id>`: the assigned cell. */
+  private[graft] val Layout = Seq(Stores.Carried("cell"))
 
   /** File-source stream over a vectors directory: every arriving parquet
     * file of (vec_id, vec) rows is assigned and indexed
@@ -69,10 +72,10 @@ object AnnStream {
     * The checkpoint lives beside the index (`<indexDir>.ckpt`) and is as
     * durable as the index — load-bearing once [[compact]] has run: a
     * fresh (temp) checkpoint restarts ids at 0 and re-lists EVERY source
-    * file, re-creating the already-folded batch partitions beside the
-    * consolidated negative generation, so every compacted vector is
-    * present twice and probes return duplicate candidates until the next
-    * compaction dedups them. A durable checkpoint resumes after the last
+    * file, re-indexing already-folded vectors under ids that need not
+    * match the ones the generation's manifest covers, so compacted
+    * vectors can appear twice (or new ones hide under covered ids) until
+    * the next compaction. A durable checkpoint resumes after the last
     * delivered id, so only genuinely new files index. (Pre-compaction a
     * full re-delivery is merely wasteful — same ids, same bytes,
     * idempotent overwrites.) */
@@ -83,11 +86,18 @@ object AnnStream {
       vecsDir, indexDir, trigger)(processBatch(_, _, indexDir, cents))
 
   /** Probe the streamed index: identical plan to the batch-index query
-    * ([[Similarity.queryIvfIndex]] — cell-pruned scan, exact re-rank);
-    * the extra `batch` partition column rides along unreferenced. */
+    * ([[Similarity.queryIvfIndex]] — cell-pruned scan, exact re-rank)
+    * over the store's live batches; the extra `batch` partition column
+    * rides along unreferenced. */
   def query(s: SparkSession, indexDir: String, qvec: Seq[Double],
       cells: Seq[Long], k: Int = Similarity.K): DataFrame =
-    Similarity.queryIvfIndex(s, indexDir, qvec, cells, k)
+    Similarity.queryIvfIndex(Stores.read(s, indexDir), qvec, cells, k)
+
+  /** q28's serving path over the streamed index (q89): the same
+    * [[Similarity.ivfServeTopK]] ranking, handed the live batches. */
+  def serveTopK(s: SparkSession, dir: String, indexDir: String,
+      cents: Seq[(Long, Seq[Double])]): DataFrame =
+    Similarity.ivfServeTopK(s, dir, Stores.read(s, indexDir), cents)
 
   /** Fold every ingested batch at or below `throughBatch` — plus any
     * previous compaction generation — into one consolidated partition:
@@ -97,57 +107,14 @@ object AnnStream {
     * squashed to keep file counts governed by corpus size, not ingest
     * granularity.
     *
-    * Consolidated generations live at strictly NEGATIVE batch ids (−1,
-    * −2, …, each compaction one lower): the streaming engine's live ids
-    * are non-negative and monotonically increasing, so a staged
-    * generation can never collide with a batch the stream has written or
-    * will write — ingest proceeds concurrently, and a checkpoint-resumed
-    * stream re-delivering old ids overwrites only its own non-negative
-    * partitions. (The first cut of this staged at `throughBatch + 1`,
-    * which is exactly the resumed stream's next id — a replay would have
-    * overwritten the consolidated corpus.)
-    *
     * Content-neutral: rows carry no batch provenance, and probes never
-    * reference the column. Crash-safe without a transaction log: rows
-    * are staged first (deduplicated on vec_id, so the union of sources
-    * and a half-finished previous generation stages the same set), and
-    * the source directories are dropped only after; a crash between the
-    * two leaves duplicate rows visible to probes until the re-run —
-    * which, folding the leftover generation back in, converges.
-    *
-    * CONTRACT — one compactor at a time (the [[graft.store.Materialized]]
-    * concurrent-build note, applied to maintenance): the staging id is
-    * derived from a directory listing with no mutual exclusion, so two
-    * compactions racing (two JVMs, or a re-run racing a crashed run's
-    * leftover delete) can pick the SAME generation id and dynamically
-    * overwrite each other's partitions. Compaction is a periodic
-    * single-owner maintenance job here and in any real deployment — a
-    * multi-maintainer deployment must serialize it externally (a lease
-    * on the index root). Ingest needs no such care: live batches touch
-    * only their own non-negative ids. */
-  def compact(s: SparkSession, indexDir: String, throughBatch: Long): Unit = {
-    import s.implicits._
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(indexDir), s.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val batchIds = fs.listStatus(root).map(_.getPath.getName)
-      .filter(_.startsWith("batch=")).map(_.stripPrefix("batch=").toLong)
-    val sources = batchIds.filter(b => b < 0 || b <= throughBatch)
-    if (sources.nonEmpty) {
-      val stagingId = batchIds.filter(_ < 0).minOption.getOrElse(0L) - 1L
-      // localCheckpoint materializes the slice BEFORE the write: Spark
-      // (rightly) refuses a plan that overwrites a path it still reads,
-      // and compaction inherently pays one read of the old rows
-      val staged = s.read.parquet(indexDir)
-        .filter($"batch".isInCollection(sources))
-        .select($"vec_id", $"vec", $"cell")
-        .dropDuplicates("vec_id").localCheckpoint()
-      staged.select($"vec_id", $"vec", lit(stagingId).as("batch"), $"cell")
-        .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch", "cell").parquet(indexDir)
-      sources.foreach { b =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, s"batch=$b"), true)
-      }
-    }
-  }
+    * reference the column; the stage keeps one row per vec_id (a
+    * redelivered batch beside an older generation holds the same rows).
+    * Staging ids, crash safety and the one-compactor contract are
+    * [[Stores.fold]]'s cover-manifest rules: a fold that dies before its
+    * manifest lands is invisible to [[Stores.read]], and the next fold
+    * repairs it. */
+  def compact(s: SparkSession, indexDir: String, throughBatch: Long): Unit =
+    Stores.fold(s, indexDir, throughBatch, Layout)(
+      _.select("vec_id", "vec", "cell").dropDuplicates("vec_id"))
 }

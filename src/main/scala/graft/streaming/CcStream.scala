@@ -1,8 +1,7 @@
 package graft.streaming
 
 import graft.operators.GraphQueries
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -167,9 +166,6 @@ object CcStream {
       .join(touchedComps, Seq("component"), "left_semi")
   }
 
-  private def labelsExist(s: SparkSession, storeDir: String): Boolean =
-    Stores.exists(s, s"$storeDir/labels")
-
   /** LIVE symmetrized edges of the store prefix ≤ `batchId`, restricted
     * src-side to `nodes` (one column `node`) BEFORE the per-pair
     * liveness resolution — latest insert vs the pair's latest delete,
@@ -229,7 +225,7 @@ object CcStream {
     // induced semi-join, AND the tombstone anti-join — without the cut
     // each action re-runs the full membership subtree
     val affectedNodes = (
-      if (!labelsExist(s, storeDir)) touched
+      if (!Stores.exists(s, s"$storeDir/labels")) touched
       else membersOf(s, storeDir, touched).union(touched).distinct()
     ).localCheckpoint()
     // store edges join same-component vertices, and batch edges have both

@@ -44,13 +44,9 @@ object ContaminationStream {
     * batch to pin this). */
   def processBatch(s: SparkSession, batch: DataFrame, batchId: Long,
       bitsDir: String, outDir: String): Unit =
-    graft.store.Bucketing.withDynamicPartitionOverwrite(s, batch.sparkSession) {
-      val bits = s.read.parquet(bitsDir)
-      TextOps.bloomProbe(
-          TextOps.bloomPositions(TextOps.contaminationGramsOf(batch)), bits)
-        .withColumn("batch", lit(batchId))
-        .write.mode(SaveMode.Overwrite).partitionBy("batch").parquet(outDir)
-    }
+    Stores.writeBatch(TextOps.bloomProbe(
+        TextOps.bloomPositions(TextOps.contaminationGramsOf(batch)), s.read.parquet(bitsDir)),
+      batchId, outDir)
 
   /** File-source wiring: new training-document parquet files appear in
     * `srcDir`; each micro-batch overwrites its own manifest partition. */

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.functions.HashFamily
 import graft.operators.Dedup
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -41,11 +40,6 @@ object DedupClusterStream {
   private def pairsDir(root: String) = s"$root/pairs"
   private def ccDir(root: String) = s"$root/cc"
   private def removedDir(root: String) = s"$root/removed"
-
-  private def exists(s: SparkSession, path: String): Boolean = {
-    val p = new Path(path)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-  }
 
   private val pairsSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("doc_a", org.apache.spark.sql.types.LongType),
@@ -120,10 +114,8 @@ object DedupClusterStream {
     if (anyDels)
       // recorded BEFORE the insert path runs, so this batch's own new
       // docs already see the mask
-      dels.select($"doc_id", lit(batchId).as("rmb"), lit(batchId).as("batch"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch").parquet(removedDir(rootDir))
+      Stores.writeBatch(dels.select($"doc_id", lit(batchId).as("rmb")),
+        batchId, removedDir(rootDir))
     // gate on the POST-anti-join add count: op ≠ −1 rows may still
     // anti-join to nothing (every add retired in the same batch), and
     // while the insert path tolerates an empty frame it is not free — it
@@ -142,7 +134,7 @@ object DedupClusterStream {
     // pair leaves pairsDir missing or an all-_SUCCESS root with no data
     // files — both must read as empty, not throw
     val pairsSrc =
-      if (exists(s, pairsDir(rootDir)))
+      if (Stores.exists(s, pairsDir(rootDir)))
         s.read.schema(pairsSchema).parquet(pairsDir(rootDir))
       else s.createDataFrame(
         s.sparkContext.emptyRDD[org.apache.spark.sql.Row], pairsSchema)
@@ -165,7 +157,7 @@ object DedupClusterStream {
         // never expired) — broadcast only while the on-disk bytes fit
         // the session threshold; the planner decides past it
         val prevRm = Stores.broadcastIfUnder(
-          s.read.parquet(removedDir(rootDir))
+          Stores.read(s, removedDir(rootDir))
             .filter($"batch" < batchId).select($"doc_id".as("__prm")),
           removedDir(rootDir))
         val prior = pairsSrc.filter($"batch" < batchId)
@@ -195,7 +187,7 @@ object DedupClusterStream {
     * keep ⇔ the document IS its cluster's canonical survivor. */
   def snapshot(s: SparkSession, rootDir: String): DataFrame = {
     import s.implicits._
-    if (!exists(s, s"${ccDir(rootDir)}/labels"))
+    if (!Stores.exists(s, s"${ccDir(rootDir)}/labels"))
       return s.emptyDataFrame.select(lit(0L).as("doc_id"), lit(0L).as("cluster_id"),
         lit(0L).as("cluster_size"), lit(false).as("keep")).limit(0)
     val lab = CcStream.snapshot(s, ccDir(rootDir))

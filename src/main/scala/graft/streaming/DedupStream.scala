@@ -78,13 +78,8 @@ object DedupStream {
     * small since every batch writes one file per bucket it touches. */
   val IndexBuckets = 8
 
-  private def pathExists(s: SparkSession, path: String): Boolean = {
-    val p = new Path(path)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   private def readIfExists(s: SparkSession, path: String, schema: StructType): DataFrame =
-    if (pathExists(s, path)) s.read.parquet(path)
+    if (Stores.exists(s, path)) Stores.read(s, path)
     else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
   /** `indexDir/shingles` holds xxhash64-HASHED shingle sets (round 18):
@@ -126,7 +121,7 @@ object DedupStream {
     val name = bandsTable(indexDir)
     if (!s.catalog.tableExists(name)) {
       val bandsPath = s"$indexDir/bands"
-      val populated = pathExists(s, bandsPath)
+      val populated = Stores.exists(s, bandsPath)
       s.sql(s"""CREATE TABLE $name (doc_id BIGINT, band INT, bhash BIGINT, batch BIGINT)
         USING PARQUET
         PARTITIONED BY (batch)
@@ -166,11 +161,6 @@ object DedupStream {
     probeIndex(s, newBands, batchId, indexDir).union(newNew).distinct()
   }
 
-  private val removedSchema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("rmb", LongType),
-    StructField("batch", LongType)))
-
   /** Process one micro-batch of new documents against the persisted index
     * — also the unit the spec drives directly. Idempotent under
     * redelivery of the same `batchId` (see class doc).
@@ -209,9 +199,8 @@ object DedupStream {
     // an op-less stream never materializes the removed store — one cheap
     // existence probe keeps the mask joins and the revived-check action
     // entirely off the insert-only hot path
-    val removedPath = removedDir.filter(pathExists(s, _))
-    val removed = removedPath.map(d => s.read.schema(removedSchema).parquet(d))
-    removed.foreach { rm =>
+    val removedPath = removedDir.filter(Stores.exists(s, _))
+    removedPath.map(Stores.read(s, _)).foreach { rm =>
       // loud refusal of retired-id re-inserts (strictly earlier batches:
       // a doc added and removed in ONE batch was already dropped from
       // `batch` by the caller's removal-wins split, and this batch's own
@@ -254,8 +243,7 @@ object DedupStream {
       // lifetime — the broadcast is size-gated on its on-disk bytes
       // (years of takedowns must not force an unbounded driver collect;
       // past the threshold the planner picks the join strategy)
-      val mask = s.read.schema(removedSchema).parquet(d)
-        .filter(col("batch") <= batchId)
+      val mask = Stores.read(s, d).filter(col("batch") <= batchId)
       cand0
         .join(Stores.broadcastIfUnder(
             mask.select(col("doc_id").as("__rm_a")), d),
@@ -269,30 +257,21 @@ object DedupStream {
 
     // three per-batch-partition dynamic overwrites: each rewrites ONLY
     // partition batch=<id>, so any replay (full or after a partial crash)
-    // converges to the same bytes in any write order. The path writes
-    // request dynamic mode PER WRITE (the documented data-source option,
-    // which outranks any session conf — including the foreachBatch
-    // clone-session conf that bit the conf-only approach); only
-    // insertInto, whose API carries no write options, still needs the
-    // scoped session-conf wrapper
-    verified.withColumn("batch", lit(batchId))
-      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch").parquet(pairsDir)
+    // converges to the same bytes in any write order. The path writes are
+    // Stores.writeBatch (dynamic mode PER WRITE — the data-source option
+    // outranks any session conf, including the foreachBatch clone-session
+    // conf that bit the conf-only approach); only insertInto, whose API
+    // carries no write options, still needs the scoped session-conf wrapper
+    Stores.writeBatch(verified, batchId, pairsDir)
     graft.store.Bucketing.withDynamicPartitionOverwrite(s, batch.sparkSession) {
       newBands.select(col("doc_id"), col("band"), col("bhash"))
         .withColumn("batch", lit(batchId))
         .write.mode(SaveMode.Overwrite).insertInto(table)
     }
-    newShH.withColumn("batch", lit(batchId))
-      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch").parquet(s"$indexDir/shingles")
+    Stores.writeBatch(newShH, batchId, s"$indexDir/shingles")
     newBands.unpersist()
     newSh.unpersist()
   }
-
-  /** [[Stores.batchIdsUnder]], shared with [[AnnDeltaStream]]. */
-  private def batchIdsUnder(s: SparkSession, path: String): Array[Long] =
-    Stores.batchIdsUnder(s, path)
 
   /** PHYSICAL purge of retired documents from the append-layout index —
     * the other half of the q112 takedown story: the probe MASK makes
@@ -306,51 +285,47 @@ object DedupStream {
     * recorded retirement applies, not just those ≤ `throughBatch`).
     *
     * Probe equivalence is by construction: the probe's `batch < id`
-    * prefix filter admits negative generations, retirement is terminal
-    * so a purged row could only ever have produced candidates the mask
-    * already suppressed, and the generation keeps the bands table's
-    * bucketed-sorted layout because it is written through the same
-    * bucketed `insertInto` path as ingest (a plain parquet write here
-    * would silently break the co-located probe join). The pairs store
-    * is deliberately NOT rewritten: its rows carry ids and a score — no
-    * content — and the withdrawal derivation needs the prior-pair record
-    * (already guarded against re-withdrawal by the removed-store
-    * anti-join).
+    * prefix filter admits negative generations, and retirement is
+    * terminal so a purged row could only ever have produced candidates
+    * the mask already suppressed. The pairs store is deliberately NOT
+    * rewritten: its rows carry ids and a score — no content — and the
+    * withdrawal derivation needs the prior-pair record (already guarded
+    * against re-withdrawal by the removed-store anti-join).
     *
-    * CONTRACT — single-owner maintenance, stream stopped (the family's
-    * compaction rule), and `throughBatch` at most the last COMMITTED
-    * batch: this layout has no cover manifests, so a replay of a folded
-    * batch would see its own rows in the generation (the `batch < id`
-    * filter cannot exclude them) and double its shingle rows. Crash
-    * anywhere leaves sources and/or an extra generation visible
-    * together; re-running the purge to completion converges (previous
-    * generations are folded as sources, duplicates collapse through the
-    * per-(doc, band) distinct candidates and the terminal retirement
-    * set) — run it before serving resumes, exactly as
-    * [[AnnDeltaStream.compact]] documents.
+    * The shingles and removed stores fold through [[Stores.fold]] and
+    * are read through [[Stores.read]], so its cover-manifest contract
+    * governs them: a crashed fold is invisible and the next one repairs
+    * it. The bands table keeps its own loop below: it is a
+    * catalog-registered, bucketed and sorted table written by
+    * `insertInto` (the co-located probe join depends on that layout),
+    * which the plain-parquet fold cannot write — so it has no manifest:
+    * run the purge single-owner with the stream stopped and
+    * `throughBatch` at most the last COMMITTED batch (a replay of a
+    * folded batch would see its own band rows in the generation), and
+    * after a crash re-run it to completion before serving resumes
+    * (previous generations fold as sources; duplicate band rows collapse
+    * in the distinct candidate set).
     *
-    * Also folds the REMOVED store itself into one distinct generation:
-    * the takedown path writes one `batch=<id>` partition per retirement
-    * batch, and without compaction every later mask read lists one
-    * directory per takedown EVER — unbounded over the store's lifetime.
-    * The folded (doc_id, min rmb) generation carries a negative id, so
-    * every consumer's prefix filter still admits it. */
+    * Also folds the REMOVED store itself into one distinct
+    * (doc_id, min rmb) generation: the takedown path writes one
+    * `batch=<id>` partition per retirement batch, and without compaction
+    * every later mask read lists one directory per takedown EVER —
+    * unbounded over the store's lifetime. The generation carries a
+    * negative id, so every consumer's prefix filter still admits it. */
   def purgeRetired(s: SparkSession, indexDir: String, removedDir: String,
       throughBatch: Long): Unit = {
     import s.implicits._
-    if (!pathExists(s, removedDir)) return
+    if (!Stores.exists(s, removedDir)) return
     // the retirement set is lifetime-unbounded (terminal retirement, no
     // expiry) — size-gate its broadcast like every other removed-store
     // consumer; the distinct set never exceeds the store it came from
     val retired = Stores.broadcastIfUnder(
-      s.read.schema(removedSchema).parquet(removedDir)
-        .select($"doc_id").distinct().localCheckpoint(),
+      Stores.read(s, removedDir).select($"doc_id").distinct().localCheckpoint(),
       removedDir)
     val table = ensureBandsTable(s, indexDir)
     val bandsPath = s"$indexDir/bands"
-    val bandIds = batchIdsUnder(s, bandsPath)
+    val bandIds = Stores.batchIdsUnder(s, bandsPath)
     val bSources = bandIds.filter(b => b < 0 || b <= throughBatch)
-    val fs = new Path(indexDir).getFileSystem(s.sparkContext.hadoopConfiguration)
     if (bSources.nonEmpty) {
       val stagingId = bandIds.filter(_ < 0).minOption.getOrElse(0L) - 1L
       // localCheckpoint materializes the survivors BEFORE touching the
@@ -363,51 +338,18 @@ object DedupStream {
       graft.store.Bucketing.withDynamicPartitionOverwrite(s) {
         staged.write.mode(SaveMode.Overwrite).insertInto(table)
       }
+      val fs = new Path(bandsPath).getFileSystem(s.sparkContext.hadoopConfiguration)
       bSources.foreach { b =>
         s.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION (batch=$b)")
         fs.delete(new Path(bandsPath, s"batch=$b"), true)
       }
     }
-    val shPath = s"$indexDir/shingles"
-    val shIds = batchIdsUnder(s, shPath)
-    val shSources = shIds.filter(b => b < 0 || b <= throughBatch)
-    if (shSources.nonEmpty) {
-      val stagingId = shIds.filter(_ < 0).minOption.getOrElse(0L) - 1L
-      val staged = s.read.parquet(shPath)
-        .filter($"batch".isInCollection(shSources))
-        .join(retired, Seq("doc_id"), "left_anti")
-        .select($"doc_id", $"sh")
-        .localCheckpoint()
-      // direct leaf write (partition dir supplies `batch`): an all-retired
-      // fold must still leave ONE schema-bearing file so the store stays
-      // readable — the Stores.fold reserved-task trick
-      (if (staged.isEmpty) staged.repartition(1) else staged)
-        .write.mode(SaveMode.Overwrite).parquet(s"$shPath/batch=$stagingId")
-      shSources.foreach(b => fs.delete(new Path(shPath, s"batch=$b"), true))
-    }
-    // fold the removed store itself: without this, every takedown batch
-    // leaves a `batch=<id>` directory FOREVER and each mask read lists one
-    // dir per takedown ever taken — the family's one-distinct-generation
-    // fold discipline applies here too. Retirement is terminal, so the
-    // fold is a plain (doc_id, min rmb) distinct; the generation's
-    // negative id passes every consumer's prefix filter (`batch < id` /
-    // `<= id` with non-negative live ids). Crash between the generation
-    // write and the source deletes leaves duplicates visible — every
-    // reader is duplicate-tolerant (anti/semi joins, the distinct above)
-    // and a re-run folds the old generation back in and converges.
-    val rmIds = batchIdsUnder(s, removedDir)
-    val rmSources = rmIds.filter(b => b < 0 || b <= throughBatch)
-    if (rmSources.nonEmpty) {
-      val stagingId = rmIds.filter(_ < 0).minOption.getOrElse(0L) - 1L
-      val staged = s.read.schema(removedSchema).parquet(removedDir)
-        .filter($"batch".isInCollection(rmSources))
-        .groupBy($"doc_id").agg(min($"rmb").as("rmb"))
-        .localCheckpoint()
-      (if (staged.isEmpty) staged.repartition(1) else staged)
-        .write.mode(SaveMode.Overwrite).parquet(s"$removedDir/batch=$stagingId")
-      val rmFs = new Path(removedDir).getFileSystem(s.sparkContext.hadoopConfiguration)
-      rmSources.foreach(b => rmFs.delete(new Path(removedDir, s"batch=$b"), true))
-    }
+    Stores.fold(s, s"$indexDir/shingles", throughBatch)(
+      _.join(retired, Seq("doc_id"), "left_anti").select($"doc_id", $"sh"))
+    // retirement is terminal, so the removed store folds to a plain
+    // (doc_id, min rmb) distinct
+    Stores.fold(s, removedDir, throughBatch)(
+      _.groupBy($"doc_id").agg(min($"rmb").as("rmb")))
   }
 
   /** File-source stream over a documents directory: every arriving parquet

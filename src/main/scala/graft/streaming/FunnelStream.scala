@@ -1,8 +1,7 @@
 package graft.streaming
 
 import graft.operators.TemporalJoins
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -161,10 +160,8 @@ object FunnelStream {
     val touched = batch.select($"user_id").distinct().localCheckpoint()
     // touched feeds the pruned read's bucket-id action AND the semi-join
     // (the round-11 once-per-batch rule) — hence the eager checkpoint
-    recomputeRows(touched, batchId, storeDir)
-      .withColumn("batch", lit(batchId))
-      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch").parquet(s"$storeDir/funnel")
+    Stores.writeBatch(recomputeRows(touched, batchId, storeDir), batchId,
+      s"$storeDir/funnel")
   }
 
   /** The touched users' refreshed funnel rows — surviving-history

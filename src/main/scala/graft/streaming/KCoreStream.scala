@@ -1,8 +1,7 @@
 package graft.streaming
 
 import graft.operators.GraphQueries
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -123,12 +122,11 @@ object KCoreStream {
     // groupBy yields each live pair once).
     val induced = CcStream.liveEdgesRestricted(s, ccDir(storeDir), batchId, members)
     val core = GraphQueries.kCorePeel(induced, k, rounds)
-    members.join(core, Seq("node"), "left")
-      .select($"node", coalesce($"deg", lit(0L)).as("deg"),
-        $"deg".isNotNull.as("alive"))
-      .withColumn("batch", lit(batchId))
-      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch").parquet(s"$storeDir/results")
+    Stores.writeBatch(
+      members.join(core, Seq("node"), "left")
+        .select($"node", coalesce($"deg", lit(0L)).as("deg"),
+          $"deg".isNotNull.as("alive")),
+      batchId, s"$storeDir/results")
   }
 
   /** File-source wiring ([[Stores.fileStream]]). */

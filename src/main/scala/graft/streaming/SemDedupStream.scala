@@ -1,8 +1,7 @@
 package graft.streaming
 
 import graft.operators.Similarity
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -71,46 +70,6 @@ object SemDedupStream {
       .select($"vec_id", $"cell", $"qs", $"nq")
   }
 
-  /** Liveness-resolved member rows STRICTLY BEFORE `horizon`: freshest
-    * copy per vec_id among inserts with srcb < horizon, minus ids whose
-    * latest tombstone in (srcb, horizon) kills them — the state the
-    * store was in when batch `horizon` first arrived, regardless of what
-    * has landed since (see class doc: determinism under redelivery).
-    * `horizon = Long.MaxValue` resolves the current state. Returns
-    * (vec_id, vec, cell, srcb); empty-store-safe. */
-  def liveRowsBefore(s: SparkSession, storeDir: String, horizon: Long,
-      cells: Option[Seq[Long]] = None): DataFrame = {
-    import s.implicits._
-    val fresh =
-      if (Stores.batchIdsUnder(s, s"$storeDir/live").isEmpty)
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(
-            StructField("vec_id", LongType, nullable = false),
-            StructField("vec", ArrayType(DoubleType, containsNull = true)),
-            StructField("cell", LongType),
-            StructField("srcb", LongType))))
-      else {
-        val live = s.read.parquet(s"$storeDir/live").filter($"srcb" < horizon)
-        val pruned = cells.fold(live)(cs => live.filter($"cell".isInCollection(cs)))
-        pruned
-          .withColumn("rn", row_number().over(
-            Window.partitionBy($"vec_id").orderBy($"srcb".desc, $"batch".desc)))
-          .filter($"rn" === 1)
-          .select($"vec_id", $"vec", $"cell", $"srcb")
-      }
-    if (Stores.batchIdsUnder(s, s"$storeDir/dead").isEmpty) fresh
-    else {
-      // size-gated like AnnDeltaStream.liveRows: tombstone volume is a
-      // compaction-cadence choice, not a bound
-      val agg = s.read.parquet(s"$storeDir/dead").filter($"deadb" < horizon)
-        .groupBy($"vec_id").agg(max($"deadb").as("deadb"))
-      val dead = Stores.broadcastIfUnder(agg, s"$storeDir/dead")
-      fresh.join(dead, Seq("vec_id"), "left")
-        .filter($"deadb".isNull || $"srcb" >= $"deadb")
-        .select($"vec_id", $"vec", $"cell", $"srcb")
-    }
-  }
-
   /** Fold one ±op micro-batch: members delegate to
     * [[AnnDeltaStream.processBatch]] (same store, same semantics); the
     * pairs side appends this batch's discovered τ-pairs — new×prior-live
@@ -135,7 +94,7 @@ object SemDedupStream {
       // ingest against the same frozen centroids) — quantize in place,
       // one projection, no re-assignment and no self-rejoin
       val prior = Similarity.withInt8Codes(
-          liveRowsBefore(s, storeDir, batchId, Some(touched)))
+          AnnDeltaStream.liveRows(s, storeDir, Some(touched), horizon = batchId))
         .withColumn("nq", Similarity.longDot($"qs", $"qs"))
       val newSide = nw.select($"vec_id".as("n_id"), $"cell",
         $"qs".as("nqs"), $"nq".as("nn"), lit(batchId).as("n_srcb"))
@@ -160,10 +119,7 @@ object SemDedupStream {
         .filter(Similarity.intDupCond($"dot", $"nn", $"mn"))
         .select($"cell", $"n_id".as("a_id"), lit(batchId).as("a_srcb"),
           $"m_id".as("b_id"), lit(batchId).as("b_srcb"))
-      cross.unionByName(self)
-        .withColumn("batch", lit(batchId))
-        .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch").parquet(pairsPath(storeDir))
+      Stores.writeBatch(cross.unionByName(self), batchId, pairsPath(storeDir))
       nw.unpersist()
     }
     // members AFTER the pair discovery: the prior-live read above must
@@ -193,23 +149,28 @@ object SemDedupStream {
           StructField("cell", LongType),
           StructField("dup_of", LongType),
           StructField("n_dups", LongType, nullable = false))))
-    // materialized once: both endpoint joins reference the liveness
-    // resolution (store read + freshest-row window + tombstone join) —
-    // uncut, Catalyst re-derives that chain per join side (the q129
-    // plan-cut discipline)
-    val live = liveRowsBefore(s, storeDir, Long.MaxValue)
+    livePairs(Stores.read(s, pairsPath(storeDir)), storeDir)
+      .groupBy($"b_id", $"cell")
+      .agg(min($"a_id").as("dup_of"), count(lit(1)).as("n_dups"))
+      .select($"b_id".as("vec_id"), $"cell", $"dup_of", $"n_dups")
+      .orderBy($"vec_id")
+  }
+
+  /** The `pairs` rows whose BOTH endpoint copies are still the live
+    * ones — the liveness resolution is materialized once: both endpoint
+    * joins reference it (store read + freshest-row window + tombstone
+    * join), and uncut, Catalyst re-derives that chain per join side (the
+    * q129 plan-cut discipline). */
+  private def livePairs(pairs: DataFrame, storeDir: String): DataFrame = {
+    import pairs.sparkSession.implicits._
+    val live = AnnDeltaStream.liveRows(pairs.sparkSession, storeDir)
       .select($"vec_id", $"srcb")
       .localCheckpoint()
-    val pairs = s.read.parquet(pairsPath(storeDir))
     pairs
       .join(live.select($"vec_id".as("a_id"), $"srcb".as("a_srcb")),
         Seq("a_id", "a_srcb"))
       .join(live.select($"vec_id".as("b_id"), $"srcb".as("b_srcb")),
         Seq("b_id", "b_srcb"))
-      .groupBy($"b_id", $"cell")
-      .agg(min($"a_id").as("dup_of"), count(lit(1)).as("n_dups"))
-      .select($"b_id".as("vec_id"), $"cell", $"dup_of", $"n_dups")
-      .orderBy($"vec_id")
   }
 
   /** Compact members through `throughBatch` ([[AnnDeltaStream.compact]]
@@ -218,36 +179,13 @@ object SemDedupStream {
     * one negative generation, dropping pairs that no longer resolve
     * (either endpoint dead or superseded as of NOW — a dropped pair can
     * never resolve again: srcb never reverts and resurrection lays down
-    * fresh pairs). Same staging-id and crash rules as the member side;
-    * a redelivered pair batch ≤ throughBatch after the fold rebuilds its
-    * partition from the same deterministic inputs and is dropped by the
-    * next sweep. */
+    * fresh pairs). Both folds follow [[Stores.fold]]'s cover-manifest
+    * rules; a redelivered pair batch ≤ throughBatch after the fold
+    * rebuilds its partition from the same deterministic inputs, hidden
+    * by the manifest and dropped by the next sweep. */
   def compact(s: SparkSession, storeDir: String, throughBatch: Long): Unit = {
-    import s.implicits._
     AnnDeltaStream.compact(s, storeDir, throughBatch)
-    val root = new org.apache.hadoop.fs.Path(pairsPath(storeDir))
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val batchIds = Stores.batchIdsUnder(s, pairsPath(storeDir))
-    val sources = batchIds.filter(b => b < 0 || b <= throughBatch)
-    if (sources.nonEmpty) {
-      val stagingId = batchIds.filter(_ < 0).minOption.getOrElse(0L) - 1L
-      val live = liveRowsBefore(s, storeDir, Long.MaxValue)
-        .select($"vec_id", $"srcb")
-        .localCheckpoint() // referenced by both endpoint joins (see serveRemoved)
-      val folded = s.read.parquet(pairsPath(storeDir))
-        .filter($"batch".isInCollection(sources))
-        .join(live.select($"vec_id".as("a_id"), $"srcb".as("a_srcb")),
-          Seq("a_id", "a_srcb"))
-        .join(live.select($"vec_id".as("b_id"), $"srcb".as("b_srcb")),
-          Seq("b_id", "b_srcb"))
-        .select($"cell", $"a_id", $"a_srcb", $"b_id", $"b_srcb")
-        .localCheckpoint() // materialize before overwriting a read path
-      folded.withColumn("batch", lit(stagingId))
-        .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch").parquet(pairsPath(storeDir))
-      sources.foreach { b =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, s"batch=$b"), true)
-      }
-    }
+    Stores.fold(s, pairsPath(storeDir), throughBatch)(
+      livePairs(_, storeDir).select("cell", "a_id", "a_srcb", "b_id", "b_srcb"))
   }
 }

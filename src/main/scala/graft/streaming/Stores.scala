@@ -6,14 +6,22 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-/** Shared negative-generation fold + read for the maintained
-  * batch-partitioned stores — ONE implementation of the compaction
-  * sequence CcStream, TriangleStream, KCoreStream, SsspStream and
-  * FunnelStream previously hand-rolled (the copies had already diverged
-  * on the missing-store guard before round 9 unified three of them).
+/** Shared per-batch write, negative-generation fold and read for the
+  * maintained batch-partitioned stores — ONE implementation of the
+  * sequence every maintainer once hand-rolled (the copies had already
+  * diverged on the missing-store guard before round 9 unified three of
+  * them). Every store of CcStream, SsspStream, SsspDeltaStream,
+  * TriangleStream, KCoreStream, TrussStream, FunnelStream, AnnStream,
+  * AnnDeltaStream, SemDedupStream, DedupStream/DedupClusterStream
+  * (shingles, pairs, removed) and ContaminationStream's manifest writes
+  * through [[writeBatch]]; every store they compact folds through
+  * [[fold]]. The one exception is DedupStream's bands table: a
+  * catalog-registered bucketed, sorted table written by `insertInto`,
+  * which keeps its own purge loop.
   * The family's other shared decisions live here too: the file-source
   * stream ([[fileStream]]), the ±op liveness rule ([[liveAfterDeletes]]),
-  * freshest-row precedence ([[freshestPerKey]]) and the bucketed layout.
+  * freshest-row precedence ([[freshestPerKey]]) and the layout columns
+  * ([[Bucket]], [[Carried]]).
   *
   * ATOMICITY (round 10): the round-9 fold wrote the staging generation
   * into the live root and only then deleted its sources — any reader in
@@ -41,8 +49,10 @@ import org.apache.spark.sql.types.StructType
   * cleanup pass (delete stale temps, finish interrupted deletions, drop
   * unmanifested generations — their rows still live in their sources)
   * and that [[read]] already serves correctly. Every reader of a folded
-  * store must go through [[read]]; a raw `spark.read.parquet` over the
-  * root would double-count exactly the windows the manifest closes.
+  * store must go through [[read]] — the graph stores, the ANN index and
+  * live/dead stores, the SemDedup pairs and the dedup shingles and
+  * removed stores all do; a raw `spark.read.parquet` over the root would
+  * double-count exactly the windows the manifest closes.
   *
   * The staged generation always contains at least one real parquet file
   * (an empty fold result is written through a single reserved task, whose
@@ -168,9 +178,19 @@ private[graft] object Stores {
   // + per-read bucket-id action) against the flat r10 layout.
   // ---------------------------------------------------------------------
 
-  /** One bucket column of a store's layout: `pbCol` is the partition
-    * directory column, derived from `keyCol` via [[bucketId]]. */
+  /** One partition column of a store's layout below `batch=<id>`. */
+  sealed trait LayoutCol { def pbCol: String }
+
+  /** A hash-bucket column: `pbCol` is the partition directory column,
+    * derived from `keyCol` via [[bucketId]]. */
   case class Bucket(pbCol: String, keyCol: String, nb: Int = NumBuckets)
+      extends LayoutCol
+
+  /** A partition column the rows already CARRY — no hash: the IVF
+    * stores' `cell` is the assigned centroid, and probes prune on it
+    * directly. Written, folded and guarded exactly like a [[Bucket]]
+    * column; a zero-row generation keeps it in the directory name only. */
+  case class Carried(pbCol: String) extends LayoutCol
 
   /** Buckets per key at local test scale (see the layout note above).
     * Overridable via `-Dgraft.stores.numBuckets=<n>` — the deployment
@@ -191,17 +211,21 @@ private[graft] object Stores {
   def bucketId(key: Column, nb: Int): Column =
     pmod(xxhash64(key), lit(nb.toLong)).cast("int")
 
-  private def withBucketCols(df: DataFrame, buckets: Seq[Bucket]): DataFrame =
-    buckets.foldLeft(df)((d, b) => d.withColumn(b.pbCol, bucketId(col(b.keyCol), b.nb)))
+  private def withBucketCols(df: DataFrame, buckets: Seq[LayoutCol]): DataFrame =
+    buckets.foldLeft(df) {
+      case (d, b: Bucket) => d.withColumn(b.pbCol, bucketId(col(b.keyCol), b.nb))
+      case (d, _: Carried) => d
+    }
 
   /** Write one micro-batch under `batch=<id>[/pb=<bucket>…]` with a
     * dynamic partition overwrite (the family's idempotent-replay
-    * primitive). Bucketed writes repartition on the bucket columns
-    * first so each bucket is written by one task — without it every
-    * task writes a sliver of every bucket and the file count multiplies
-    * by the task count. */
+    * primitive) — THE per-batch write of every maintained store, so
+    * every append passes the layout guard. Bucketed writes repartition
+    * on the bucket columns first so each bucket is written by one task —
+    * without it every task writes a sliver of every bucket and the file
+    * count multiplies by the task count. */
   def writeBatch(df: DataFrame, batchId: Long, path: String,
-      buckets: Seq[Bucket] = Nil): Unit = {
+      buckets: Seq[LayoutCol] = Nil): Unit = {
     requireLayoutMatches(df.sparkSession, new Path(path), buckets.map(_.pbCol), "writeBatch")
     val parts = "batch" +: buckets.map(_.pbCol)
     val withPb = withBucketCols(df, buckets).withColumn("batch", lit(batchId))
@@ -588,12 +612,12 @@ private[graft] object Stores {
   /** Fold batches ≤ `throughBatch` (plus prior generations) of the
     * batch-partitioned store at `path` into one fresh manifested negative
     * generation, staging the rows through `stage` (whose output must NOT
-    * carry the `batch` or bucket columns — the generation directories
-    * supply them; pass the store's `buckets` so the generation keeps the
-    * bucketed layout and stays prunable). No-op if the store was never
-    * created. */
+    * carry the `batch` or [[Bucket]] columns — the generation directories
+    * supply them — but MUST carry every [[Carried]] column; pass the
+    * store's layout so the generation keeps it and stays prunable). No-op
+    * if the store was never created. */
   def fold(s: SparkSession, path: String, throughBatch: Long,
-      buckets: Seq[Bucket] = Nil)(
+      buckets: Seq[LayoutCol] = Nil)(
       stage: DataFrame => DataFrame): Unit = {
     val root = new Path(path)
     val fs = fsOf(s, root)
@@ -650,11 +674,13 @@ private[graft] object Stores {
       // a single reserved task creates its parquet file eagerly even with
       // zero rows, keeping the generation's schema readable; bucketed
       // layouts write it under an all-zeros bucket path so partition
-      // discovery keeps one consistent directory depth
+      // discovery keeps one consistent directory depth (a carried column
+      // lives in that path, not in the file)
       val leaf =
         if (buckets.isEmpty) tmp
         else new Path(tmp, buckets.map(b => s"${b.pbCol}=0").mkString("/"))
-      staged.repartition(1).write.mode(SaveMode.Overwrite).parquet(leaf.toString)
+      staged.drop(buckets.collect { case c: Carried => c.pbCol }: _*)
+        .repartition(1).write.mode(SaveMode.Overwrite).parquet(leaf.toString)
     } else if (buckets.isEmpty) {
       staged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     } else {

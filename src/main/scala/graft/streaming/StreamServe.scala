@@ -107,7 +107,7 @@ object StreamServe {
     * same frozen trained codebook q28 uses, the first two batches
     * compacted into a consolidated generation with the third left live,
     * then probed through the identical serving path
-    * ([[Similarity.ivfServeTopK]]). Frozen codebook ⇒ the streamed index
+    * ([[AnnStream.serveTopK]]). Frozen codebook ⇒ the streamed index
     * holds exactly the batch index's (vec_id, cell) assignments, so q28's
     * oracle applies unchanged. */
   private def q89(s: SparkSession, dir: String): DataFrame = {
@@ -124,7 +124,7 @@ object StreamServe {
     // fold batches 0 and 1 into generation -1; batch 2 stays live — the
     // probe scans a mixed generation/live layout
     AnnStream.compact(s, indexDir, throughBatch = 1L)
-    Similarity.ivfServeTopK(s, dir, indexDir, cents)
+    AnnStream.serveTopK(s, dir, indexDir, cents)
   }
 
   /** q92 — the EXACT component of the [[KllStream]] state served across

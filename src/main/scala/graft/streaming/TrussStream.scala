@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.GraphQueries
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -131,12 +131,11 @@ object TrussStream {
     // the second leg flips just-deleted edges' rows to tombstones
     val universe = induced
       .union(normalized.select($"src".as("a"), $"dst".as("b"))).distinct()
-    universe.join(truss, Seq("a", "b"), "left")
-      .select($"a", $"b", coalesce($"sup", lit(0L)).as("sup"),
-        $"sup".isNotNull.as("alive"))
-      .withColumn("batch", lit(batchId))
-      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch").parquet(s"$storeDir/results")
+    Stores.writeBatch(
+      universe.join(truss, Seq("a", "b"), "left")
+        .select($"a", $"b", coalesce($"sup", lit(0L)).as("sup"),
+          $"sup".isNotNull.as("alive")),
+      batchId, s"$storeDir/results")
   }
 
   /** File-source wiring ([[Stores.fileStream]]). */

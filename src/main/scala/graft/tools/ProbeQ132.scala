@@ -38,7 +38,7 @@ object ProbeQ132 {
       val touched = t("touched-cells collect")(
         nw.select($"cell").distinct().as[Long].collect().toSeq)
       val prior = Similarity.withInt8Codes(
-          SemDedupStream.liveRowsBefore(s, storeDir, batchId, Some(touched)))
+          AnnDeltaStream.liveRows(s, storeDir, Some(touched), horizon = batchId))
         .withColumn("nq", Similarity.longDot($"qs", $"qs"))
       val newSide = nw.select($"vec_id".as("n_id"), $"cell",
         $"qs".as("nqs"), $"nq".as("nn"), lit(batchId).as("n_srcb"))
@@ -62,11 +62,8 @@ object ProbeQ132 {
         .select($"cell", $"n_id".as("a_id"), lit(batchId).as("a_srcb"),
           $"m_id".as("b_id"), lit(batchId).as("b_srcb"))
       t("pair joins + pairs write")(
-        cross.unionByName(self)
-          .withColumn("batch", lit(batchId))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch").parquet(s"$storeDir/pairs"))
+        graft.streaming.Stores.writeBatch(cross.unionByName(self), batchId,
+          s"$storeDir/pairs"))
       nw.unpersist()
     }
     t("AnnDeltaStream member fold")(

@@ -200,4 +200,16 @@ class AnnDeltaStreamSpec extends AnyFunSuite {
     assert(served.nonEmpty, "serve returned nothing — vacuous")
     assert(served.forall(id => id % 5 != 0), "serve returned a deleted vector")
   }
+
+  test("the liveness-resolved serve's candidate scan prunes on cell") {
+    import spark.implicits._
+    val e = emb.cache()
+    val store = tmpStore()
+    AnnDeltaStream.processBatch(ins(e.filter($"vec_id" % 2 === 0)), 0L, store, cents)
+    AnnDeltaStream.processBatch(del(e.filter($"vec_id" % 4 === 0)), 1L, store, cents)
+    AnnDeltaStream.compact(spark, store, throughBatch = 0L)
+    val plan = AnnDeltaStream.serveTopK(spark, dir, store, cents)
+      .queryExecution.executedPlan.toString
+    assert("PartitionFilters: \\[[^\\]]*cell".r.findFirstIn(plan).isDefined, plan)
+  }
 }

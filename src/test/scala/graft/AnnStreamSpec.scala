@@ -109,6 +109,42 @@ class AnnStreamSpec extends AnyFunSuite {
     assert(batches === Set("batch=-2"), s"expected generation -2, got $batches")
   }
 
+  test("crash window: an unmanifested generation leaves the probe unchanged, and compaction repairs it") {
+    import spark.implicits._
+    val e = emb.cache()
+    val streamed = streamSliced(Seq(
+      e.filter($"vec_id" % 3 === 0), e.filter($"vec_id" % 3 === 1), e.filter($"vec_id" % 3 === 2)))
+    val qvec = Similarity.queryVector(spark, dir)
+    val cells = Similarity.probeCells(qvec, cents)
+    def probe(): Seq[(Long, Double)] = AnnStream.query(spark, streamed, qvec, cells)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val want = probe()
+    assert(want.nonEmpty, "probe returned nothing — vacuous")
+    // a fold that died after landing its generation but before renaming
+    // its manifest in: batches 0–1 copied into batch=-1, no _cover_1
+    for (b <- 0 to 1) org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(s"$streamed/batch=$b"), new java.io.File(s"$streamed/batch=-1"))
+    val got = probe()
+    assert(got.map(_._1).distinct.length === got.length, s"duplicate vec_ids served: $got")
+    assert(got === want, "half-landed generation changed the probe")
+    AnnStream.compact(spark, streamed, throughBatch = 1L)
+    assert(probe() === want, "repairing compaction changed the probe")
+    val gens = new java.io.File(streamed).listFiles()
+      .filter(_.getName.startsWith("batch=-")).map(_.getName).toSet
+    assert(gens === Set("batch=-1"), s"expected exactly one generation, got $gens")
+  }
+
+  test("the streamed probe's candidate scan prunes on cell") {
+    import spark.implicits._
+    val e = emb.cache()
+    val streamed = streamSliced(Seq(e.filter($"vec_id" % 2 === 0), e.filter($"vec_id" % 2 === 1)))
+    AnnStream.compact(spark, streamed, throughBatch = 0L)
+    val qvec = Similarity.queryVector(spark, dir)
+    val plan = AnnStream.query(spark, streamed, qvec, Similarity.probeCells(qvec, cents))
+      .queryExecution.executedPlan.toString
+    assert("PartitionFilters: \\[[^\\]]*cell".r.findFirstIn(plan).isDefined, plan)
+  }
+
   test("restart after compaction: durable checkpoint prevents re-indexing folded files") {
     import spark.implicits._
     val e = emb.cache()

@@ -172,4 +172,31 @@ class SemDedupStreamSpec extends AnyFunSuite {
     assert(!got.get(removed).exists(_._2 == witness),
       "a retired witness still serves as dup_of")
   }
+
+  test("crash window: unmanifested generations leave n_dups unchanged, and compaction repairs them") {
+    val store = tmpStore()
+    val ids = universe.map(_._1).filter(_ < 150)
+    for (b <- 0 to 2)
+      SemDedupStream.processBatch(ins(byIds(ids.filter(_ % 3 == b))), b.toLong, store, cents)
+    val want = served(store)
+    assert(want.nonEmpty, "fixture witnessed no dups — vacuous")
+    // a compaction that died after landing its generations but before
+    // renaming their manifests in: batches 0–1 of the member and pair
+    // stores copied into batch=-1, no _cover_1
+    val copied = for (side <- Seq("live", "pairs"); b <- 0 to 1
+        if new java.io.File(s"$store/$side/batch=$b").exists) yield {
+      org.apache.commons.io.FileUtils.copyDirectory(
+        new java.io.File(s"$store/$side/batch=$b"), new java.io.File(s"$store/$side/batch=-1"))
+      side
+    }
+    assert(copied.contains("pairs"), "batches 0–1 discovered no pairs — vacuous")
+    assert(served(store) == want, "half-landed generation changed the served n_dups")
+    SemDedupStream.compact(spark, store, throughBatch = 1L)
+    assert(served(store) == want, "repairing compaction changed the serve")
+    for (side <- Seq("live", "dead", "pairs")) {
+      val gens = new java.io.File(s"$store/$side").listFiles()
+        .filter(_.getName.startsWith("batch=-")).map(_.getName).toSet
+      assert(gens === Set("batch=-1"), s"$side: expected exactly one generation, got $gens")
+    }
+  }
 }

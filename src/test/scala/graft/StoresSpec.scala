@@ -121,6 +121,34 @@ class StoresSpec extends AnyFunSuite {
     assert(sums(Stores.read(spark, p)) === Map(7L -> 1L))
   }
 
+  test("carried layout column: writeBatch + fold keep batch=<g>/cell=<c>, an empty fold stays readable, a flat append is refused") {
+    import spark.implicits._
+    val p = newStore()
+    val layout = Seq(Stores.Carried("cell"))
+    Stores.writeBatch(Seq((1L, 3L), (2L, 4L)).toDF("id", "cell"), 0L, p, layout)
+    Stores.writeBatch(Seq((3L, 3L)).toDF("id", "cell"), 1L, p, layout)
+    def cellDirs(gen: Long): Set[String] = new java.io.File(s"$p/batch=$gen").listFiles()
+      .filter(_.isDirectory).map(_.getName).toSet
+    def rows(): Set[(Long, Long)] = Stores.read(spark, p)
+      .select($"id", $"cell".cast("long")).as[(Long, Long)].collect().toSet
+    Stores.fold(spark, p, 1L, layout)(_.select("id", "cell"))
+    assert(cellDirs(-1) === Set("cell=3", "cell=4"), "fold lost the carried layout")
+    assert(rows() === Set((1L, 3L), (2L, 4L), (3L, 3L)))
+    // a stage yielding no rows: the generation keeps the layout depth and
+    // the carried column lives in the directory name only
+    Stores.fold(spark, p, 1L, layout)(_.select("id", "cell").limit(0))
+    assert(cellDirs(-2) === Set("cell=0"))
+    assert(spark.read.parquet(s"$p/batch=-2/cell=0").columns.toSeq === Seq("id"))
+    val got = Stores.read(spark, p)
+    assert(got.count() === 0L && got.columns.toSet === Set("id", "cell", "batch"))
+    val err = intercept[IllegalStateException](
+      Stores.writeBatch(Seq((9L, 1L)).toDF("id", "cell"), 2L, p))
+    assert(err.getMessage.contains("conflicts"), err.getMessage)
+    // the store keeps working in its own layout
+    Stores.writeBatch(Seq((9L, 1L)).toDF("id", "cell"), 2L, p, layout)
+    assert(rows() === Set((9L, 1L)))
+  }
+
   test("liveAfterDeletes: latest insert vs latest delete, inserts win ties") {
     import spark.implicits._
     // (case, rows as (src, dst, w, op, batch), payload, expected live rows)
