@@ -3,7 +3,7 @@ package graft.api
 import graft.sources.EveSource
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import java.net.InetSocketAddress
+import java.net.{InetSocketAddress, URLDecoder}
 import java.nio.charset.StandardCharsets
 
 /** Thin HTTP wrapper completing the reference's public contract
@@ -37,16 +37,21 @@ final class HttpApi(engine: EveGraph, source: () => EveSource) {
 
   private val RoutePattern = "/([a-z]+)-route/([^/]+)/to/([^/]+)".r
 
+  /** Percent-decodes one raw path segment exactly once, by path rules:
+    * `+` stays a literal plus (form decoding would make it a space).
+    * Matching the raw path keeps an encoded `/` inside its segment. */
+  private def decodeSegment(raw: String): String =
+    URLDecoder.decode(raw.replace("+", "%2B"), StandardCharsets.UTF_8)
+
   private def handle(ex: HttpExchange): Unit =
     try {
-      val path = ex.getRequestURI.getPath
+      val path = ex.getRequestURI.getRawPath
       val method = ex.getRequestMethod
       (method, path) match {
         case ("GET", RoutePattern(kind, from, to)) =>
-          val dec = (s: String) => java.net.URLDecoder.decode(s, "UTF-8")
           val route = kind match {
-            case "shortest" => engine.shortestRoute(dec(from), dec(to))
-            case "safest" => engine.safestRoute(dec(from), dec(to))
+            case "shortest" => engine.shortestRoute(decodeSegment(from), decodeSegment(to))
+            case "safest" => engine.safestRoute(decodeSegment(from), decodeSegment(to))
             case _ => None
           }
           route match {

@@ -14,8 +14,8 @@ import scala.reflect.ClassTag
   * Design for scale: vertex state is `(dist, predecessor)` — O(1) per vertex,
   * not O(path) — so messages stay constant-size no matter how long paths get.
   * Path reconstruction is a separate walk over the predecessor pointers; for
-  * the reference's 8.5k-node map a driver-side walk over the collected
-  * (id → pred) map is optimal, while `reconstructDistributed` does the same
+  * the reference's 8.5k-node map a driver-side walk over the local kernel's
+  * pred array is optimal, while `reconstructDistributed` does the same
   * via iterative joins for graphs whose vertex set cannot be collected.
   *
   * Semantics preserved from GDS (SURVEY.md §2.7): directed traversal,
@@ -569,84 +569,220 @@ object Dijkstra {
   // Pregel supersteps cost whole Spark jobs; on a fixture-sized graph that
   // overhead dwarfs the work (analogous to Catalyst choosing a broadcast
   // join for a small side). Below `threshold` edges the edge list is
-  // collected ONCE per graph instance into a driver-side adjacency, and
-  // every path query on that instance runs a driver-local heap Dijkstra
-  // with identical semantics and tie-breaking — without starting a Spark
-  // job; above it, the delta-stepping program runs unchanged on the
-  // cluster. The reference universe (~13.8k edges) always takes the local
-  // path; the threshold keeps the distributed path for genuinely large
-  // graphs.
+  // collected ONCE per graph instance into a driver-side CSR adjacency
+  // ([[Csr]]), and every path query on that instance runs the flat-array
+  // heap Dijkstra ([[Csr.search]]) without starting a Spark job; above it,
+  // the delta-stepping program runs unchanged on the cluster. The
+  // reference universe (~13.8k edges) always takes the local path; the
+  // threshold keeps the distributed path for genuinely large graphs.
+  //
+  // The physical plan follows the data size: at 13.8k edges a query is a
+  // few thousand heap operations, so boxed collections (a tuple per heap
+  // comparison, a HashMap copied into an immutable Map per query) cost more
+  // than the search itself. The kernel therefore works on dense Int vertex
+  // indices and primitive arrays only, and a single-pair query stops as
+  // soon as its answer is final.
 
   val DefaultLocalThreshold: Long = 2000000L
 
-  /** A collected edge list grouped by source vertex: the input of the
-    * driver-local kernel. */
-  private final class Adjacency(val edges: Long, val out: Map[VertexId, Array[(VertexId, Double)]])
+  /** A collected edge list in compressed-sparse-row form: the input of the
+    * driver-local kernel. Vertex ids are sorted ascending and numbered
+    * densely, so index order IS id order and the min-pred tie-break can
+    * compare indices. The out-edges of vertex `i` are `dst`/`w` over
+    * `off(i) until off(i + 1)`. */
+  private final class Csr(val ids: Array[Long], val off: Array[Int],
+      val dst: Array[Int], val w: Array[Double]) {
+    /** Dense index of `id`, or -1 when it appears in no edge. */
+    def indexOf(id: VertexId): Int = {
+      val i = java.util.Arrays.binarySearch(ids, id)
+      if (i >= 0) i else -1
+    }
 
-  private def adjacency(edges: Iterable[(VertexId, VertexId, Double)]): Adjacency =
-    new Adjacency(edges.size.toLong,
-      edges.groupBy(_._1).map { case (s, es) => s -> es.map(e => (e._2, e._3)).toArray })
-
-  /** Driver-local Dijkstra over an edge list; same (dist, pred) state and
-    * min-pred tie-break as the Pregel program. */
-  def localSssp(edges: Iterable[(VertexId, VertexId, Double)], source: VertexId): Map[VertexId, State] =
-    localDijkstra(adjacency(edges), source)
-
-  private def localDijkstra(adj: Adjacency, source: VertexId): Map[VertexId, State] = {
-    val dist = scala.collection.mutable.HashMap.empty[VertexId, State]
-    // min-heap on (dist, pred): with positive weights every equal-dist entry
-    // for a vertex is enqueued before its first pop, so settling in
-    // (dist, pred) order reproduces the Pregel min-pred tie-break exactly
-    val pq = scala.collection.mutable.PriorityQueue.empty[(Double, VertexId, VertexId)](
-      Ordering.by[(Double, VertexId, VertexId), (Double, VertexId, VertexId)](t => (t._1, t._3, t._2)).reverse)
-    pq.enqueue((0.0, source, source))
-    while (pq.nonEmpty) {
-      val (d, id, pred) = pq.dequeue()
-      val known = dist.get(id)
-      val better = known.forall { case (kd, kp) => d < kd || (d == kd && pred < kp) }
-      if (known.isEmpty) {
-        dist(id) = (d, pred)
-        adj.out.getOrElse(id, Array.empty[(VertexId, Double)]).foreach { case (nxt, w) =>
-          dist.get(nxt) match {
-            case None => pq.enqueue((d + w, nxt, id))
-            // zero-weight edges allow an equal-dist candidate to arrive
-            // AFTER the neighbor settled; Pregel would still deliver that
-            // message, so apply the min-pred tie-break directly (a pred
-            // change never cascades: downstream tie-breaks compare this
-            // vertex's id, which is unchanged)
-            case Some((kd, kp)) => if (d + w == kd && id < kp) dist(nxt) = (kd, id)
+    /** Heap Dijkstra from index `s` with the same (dist, pred) fixpoint as
+      * the Pregel program: an equal-distance candidate goes to the smaller
+      * pred, and a settled vertex reached again at its own distance (only
+      * possible over a zero-weight edge) takes the smaller pred directly
+      * — a pred change never cascades, since downstream tie-breaks compare
+      * this vertex's id, which is unchanged.
+      *
+      * The heap holds (dist, pred, vertex) entries in three parallel
+      * primitive arrays, ordered lexicographically; an entry is pushed only
+      * when it improves its vertex's tentative (dist, pred), so a vertex's
+      * first pop is its final state and later pops of it are stale.
+      *
+      * With `target >= 0` the search stops early: once the target settles
+      * at `dt` it keeps popping while the heap top is ≤ `dt`, then stops.
+      * That still yields the full-run (dist, pred) of every vertex at
+      * distance ≤ `dt` — the whole target path: every such vertex settles
+      * before the heap top exceeds `dt`, and its candidate preds lie at
+      * distance ≤ its own, so each of them has settled and relaxed its
+      * out-edges (zero-weight fix-ups at `dt` included) by then.
+      *
+      * Returns (dist, pred, settled) by index; unsettled entries are
+      * meaningless. */
+    def search(s: Int, target: Int): (Array[Double], Array[Int], Array[Boolean]) = {
+      val n = ids.length
+      val dist = Array.fill(n)(Double.PositiveInfinity)
+      val pred = Array.fill(n)(-1)
+      val settled = new Array[Boolean](n)
+      val heap = new SearchHeap
+      dist(s) = 0.0; pred(s) = s
+      heap.push(0.0, s, s)
+      var bound = Double.PositiveInfinity // the target's distance once settled
+      while (heap.size > 0 && heap.topDist <= bound) {
+        val d = heap.topDist
+        val u = heap.pop()
+        if (!settled(u)) {
+          settled(u) = true
+          if (u == target) bound = d
+          var e = off(u)
+          val end = off(u + 1)
+          while (e < end) {
+            val v = dst(e)
+            val nd = d + w(e)
+            if (!settled(v)) {
+              if (nd < dist(v) || (nd == dist(v) && u < pred(v))) {
+                dist(v) = nd; pred(v) = u
+                heap.push(nd, u, v)
+              }
+            } else if (nd == dist(v) && u < pred(v)) pred(v) = u
+            e += 1
           }
         }
-      } else if (better) {
-        dist(id) = (d, pred) // equal-dist deterministic min-pred tie-break
       }
+      (dist, pred, settled)
     }
-    dist.toMap
   }
 
-  /** [[autoPath]]'s dispatch memo, keyed by graph identity: the instance's
-    * edge count (Left) until a query takes the local branch, then its
-    * collected adjacency (Right). Sound because a graph instance is an
-    * immutable snapshot: [[GraphCatalog]] projections read one versioned
-    * store directory, and a refresh builds a new instance rather than
-    * mutating the old one. The keys are weak, so a retired projection's
-    * adjacency is freed with it. */
-  private val localPlans = new java.util.WeakHashMap[AnyRef, Either[Long, Adjacency]]()
+  /** Binary min-heap of (dist, pred, vertex) entries in three parallel
+    * primitive arrays, ordered lexicographically: no tuple, no Ordering. */
+  private final class SearchHeap {
+    private var hd = new Array[Double](16)
+    private var hp = new Array[Int](16)
+    private var hv = new Array[Int](16)
+    var size = 0
 
-  /** The adjacency of `g` if it has at most `threshold` edges. Counts the
-    * edges at most once and collects them at most once per instance; the
-    * lock is held across those first jobs so concurrent callers never
-    * collect twice. */
-  private def localAdjacency(g: Graph[_, Double], threshold: Long): Option[Adjacency] =
-    localPlans.synchronized {
-      val plan = Option(localPlans.get(g)).getOrElse(Left(g.edges.count())) match {
-        case Left(n) if n <= threshold =>
-          Right(adjacency(g.edges.map(e => (e.srcId, e.dstId, e.attr)).collect()))
-        case known => known
-      }
-      localPlans.put(g, plan)
-      plan.toOption.filter(_.edges <= threshold)
+    def topDist: Double = hd(0)
+
+    private def less(i: Int, j: Int): Boolean =
+      hd(i) < hd(j) || (hd(i) == hd(j) &&
+        (hp(i) < hp(j) || (hp(i) == hp(j) && hv(i) < hv(j))))
+
+    private def swap(i: Int, j: Int): Unit = {
+      val d = hd(i); hd(i) = hd(j); hd(j) = d
+      val p = hp(i); hp(i) = hp(j); hp(j) = p
+      val v = hv(i); hv(i) = hv(j); hv(j) = v
     }
+
+    def push(d: Double, p: Int, v: Int): Unit = {
+      if (size == hd.length) {
+        hd = java.util.Arrays.copyOf(hd, size * 2)
+        hp = java.util.Arrays.copyOf(hp, size * 2)
+        hv = java.util.Arrays.copyOf(hv, size * 2)
+      }
+      hd(size) = d; hp(size) = p; hv(size) = v
+      var i = size
+      size += 1
+      while (i > 0 && less(i, (i - 1) >> 1)) { swap(i, (i - 1) >> 1); i = (i - 1) >> 1 }
+    }
+
+    /** Removes the top entry; returns its vertex. */
+    def pop(): Int = {
+      val top = hv(0)
+      size -= 1
+      if (size > 0) {
+        swap(0, size)
+        var i = 0
+        var done = false
+        while (!done) {
+          val l = 2 * i + 1
+          val m = if (l + 1 < size && less(l + 1, l)) l + 1 else l
+          if (l < size && less(m, i)) { swap(i, m); i = m } else done = true
+        }
+      }
+      top
+    }
+  }
+
+  private object Csr {
+    def apply(edges: Iterable[(VertexId, VertexId, Double)]): Csr = {
+      val es = edges.toArray
+      val ids = es.flatMap(e => Array(e._1, e._2)).distinct.sorted
+      val src = es.map(e => java.util.Arrays.binarySearch(ids, e._1))
+      val off = new Array[Int](ids.length + 1)
+      src.foreach(u => off(u + 1) += 1)
+      for (i <- ids.indices) off(i + 1) += off(i)
+      val fill = java.util.Arrays.copyOf(off, ids.length)
+      val dst = new Array[Int](es.length)
+      val w = new Array[Double](es.length)
+      for (i <- es.indices) {
+        val k = fill(src(i)); fill(src(i)) += 1
+        dst(k) = java.util.Arrays.binarySearch(ids, es(i)._2)
+        w(k) = es(i)._3
+      }
+      new Csr(ids, off, dst, w)
+    }
+  }
+
+  /** Driver-local SSSP over an edge list: the (dist, pred) of every vertex
+    * reachable from `source`, identical to the Pregel program's fixpoint
+    * including the min-pred tie-break. Runs the [[Csr]] kernel with no
+    * target. A source that appears in no edge reaches only itself. */
+  def localSssp(edges: Iterable[(VertexId, VertexId, Double)], source: VertexId): Map[VertexId, State] = {
+    val csr = Csr(edges)
+    val s = csr.indexOf(source)
+    if (s < 0) Map(source -> ((0.0, source)))
+    else {
+      val (dist, pred, settled) = csr.search(s, -1)
+      val out = Map.newBuilder[VertexId, State]
+      var i = 0
+      while (i < settled.length) {
+        if (settled(i)) out += csr.ids(i) -> ((dist(i), csr.ids(pred(i))))
+        i += 1
+      }
+      out.result()
+    }
+  }
+
+  /** The per-instance half of [[autoPath]]'s dispatch memo: the edge count,
+    * then — once a query takes the local branch — the collected CSR. Its
+    * own lock serializes the first count and collect of ONE instance, so
+    * each runs at most once, while routes on other instances go on. It
+    * holds no reference to the graph: a value that reached its own key
+    * would keep the weak entry alive forever. */
+  private final class LocalPlan {
+    private var edgeCount = -1L
+    private var csr: Csr = null
+
+    def adjacency(g: Graph[_, Double], threshold: Long): Option[Csr] = synchronized {
+      if (edgeCount < 0L) edgeCount = g.edges.count()
+      if (edgeCount > threshold) None
+      else {
+        if (csr == null) csr = Csr(g.edges.map(e => (e.srcId, e.dstId, e.attr)).collect())
+        Some(csr)
+      }
+    }
+  }
+
+  /** [[autoPath]]'s dispatch memo, keyed by graph identity. Sound because a
+    * graph instance is an immutable snapshot: [[GraphCatalog]] projections
+    * read one versioned store directory, and a refresh builds a new
+    * instance rather than mutating the old one. The keys are weak, so a
+    * retired projection's adjacency is freed with it. The map's lock
+    * guards only the get/put, never a Spark job. */
+  private val localPlans = new java.util.WeakHashMap[AnyRef, LocalPlan]()
+
+  /** The CSR of `g` if it has at most `threshold` edges. */
+  private def localAdjacency(g: Graph[_, Double], threshold: Long): Option[Csr] = {
+    val plan = localPlans.synchronized {
+      Option(localPlans.get(g)).getOrElse {
+        val p = new LocalPlan
+        localPlans.put(g, p)
+        p
+      }
+    }
+    plan.adjacency(g, threshold)
+  }
 
   /** DataFrame-level adaptive SSSP: `edges` must have (src, dst, w) columns.
     * Small edge sets are collected and solved driver-local without ever
@@ -693,17 +829,35 @@ object Dijkstra {
   }
 
   /** Single-pair path with local-vs-distributed dispatch. A warm call on a
-    * graph at or below `threshold` edges starts no Spark job. */
+    * graph at or below `threshold` edges starts no Spark job: it runs the
+    * [[Csr]] kernel from `source`, stops once the target's (dist, pred)
+    * and those of every vertex on its path are final (see [[Csr.search]]),
+    * and walks the preds by index. The answer is the full run's min-pred
+    * path, the one the distributed reconstruction returns. */
   def autoPath[V: ClassTag](
       g: Graph[V, Double], source: VertexId, target: VertexId,
       threshold: Long = DefaultLocalThreshold): Option[(Double, Seq[VertexId])] =
     localAdjacency(g, threshold) match {
-      case Some(adj) =>
-        val state = localDijkstra(adj, source)
-        state.get(target).map { case (d, _) =>
-          var ids = List(target)
-          while (ids.head != source) ids = state(ids.head)._2 :: ids
-          (d, ids)
+      case Some(_) if source == target => Some((0.0, List(source)))
+      case Some(csr) =>
+        val s = csr.indexOf(source)
+        val t = csr.indexOf(target)
+        if (s < 0 || t < 0) None
+        else {
+          val (dist, pred, settled) = csr.search(s, t)
+          if (!settled(t)) None
+          else {
+            var ids = List(target)
+            var i = t
+            var hops = 0
+            while (i != s && hops <= csr.ids.length) {
+              i = pred(i); ids = csr.ids(i) :: ids; hops += 1
+            }
+            // a zero-weight cycle can close a pred cycle under the min-pred
+            // rule; fail like the distributed walk instead of spinning
+            require(i == s, s"predecessor cycle on the path from $source to $target")
+            Some((dist(t), ids))
+          }
         }
       // large graphs: never collect the reachable vertex set to the driver —
       // walk predecessors distributively (O(pathLen) small lookup jobs)

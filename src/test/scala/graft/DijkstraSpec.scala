@@ -4,6 +4,10 @@ import graft.graph.Dijkstra
 import org.apache.spark.graphx.{Edge, Graph}
 import org.scalatest.funsuite.AnyFunSuite
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+
 /** Dijkstra invariants (SURVEY.md §5): optimality vs brute force on random
   * graphs, path validity, local/Pregel agreement, unreachable → None. */
 class DijkstraSpec extends AnyFunSuite {
@@ -357,4 +361,135 @@ class DijkstraSpec extends AnyFunSuite {
     assert(local === pregel)
     assert(local(2L) === ((1.0, 1L)))
   }
+
+  /** Random graph with many equal-distance ties: weights in {0, 1, 2},
+    * parallel edges allowed, sparse ids (so dense indices differ from
+    * ids). Zero-weight edges only run from a smaller to a larger id: a
+    * zero-weight cycle can close a pred cycle under the min-pred rule,
+    * which no walk can leave (see the next test). */
+  private def tieHeavyEdges(rng: scala.util.Random, ids: IndexedSeq[Long]): Seq[(Long, Long, Double)] = {
+    val n = ids.size
+    (0 until 1 + rng.nextInt(3 * n)).map { _ =>
+      val a = rng.nextInt(n)
+      var b = rng.nextInt(n)
+      while (b == a) b = rng.nextInt(n)
+      val w = rng.nextInt(3)
+      (ids(a), ids(b), (if (w == 0 && a > b) 1 else w).toDouble)
+    }.distinct
+  }
+
+  /** The path an SSSP (dist, pred) map implies from `src` to `dst`. */
+  private def walk(state: collection.Map[Long, Dijkstra.State], src: Long, dst: Long)
+      : Option[(Double, Seq[Long])] =
+    state.get(dst).filter(!_._1.isInfinite).map { case (d, _) =>
+      var ids = List(dst)
+      while (ids.head != src) {
+        assert(ids.size <= state.size, s"pred cycle walking $src -> $dst")
+        ids = state(ids.head)._2 :: ids
+      }
+      (d, ids)
+    }
+
+  test("early-exit autoPath ≡ full localSssp walk ≡ distributed reconstruction (240 graphs)") {
+    // every (src, dst) pair of 240 small tie-heavy graphs, plus a source
+    // that appears in no edge (an isolated vertex of the graph) and a
+    // target that is no vertex at all
+    val rng = new scala.util.Random(2024)
+    val graphs = (0 until 240).map { _ =>
+      val n = 2 + rng.nextInt(7)
+      val ids = (0 until n).map(i => (3 * i + rng.nextInt(3)).toLong)
+      val isolated = 3L * n + 1L
+      (ids, isolated, tieHeavyEdges(rng, ids))
+    }
+    val absent = 999L
+    // the distributed side: one deltaSssp per round over the disjoint union
+    // of all graphs (graph k shifted by k * 1000, which keeps id order and
+    // hence every tie-break), each graph's round-r source fed by a
+    // zero-weight edge from a super-source below every id — the same
+    // (dist, pred) per graph as a single-source run, in one job sequence
+    // instead of one per source
+    val shift = 1000L
+    val superSource = -1L
+    val unionVerts = spark.sparkContext.parallelize(graphs.zipWithIndex.flatMap {
+      case ((ids, iso, _), k) => (ids :+ iso).map(v => (v + k * shift, 0L))
+    } :+ ((superSource, 0L)), 4)
+    val unionEdges = graphs.zipWithIndex.flatMap { case ((_, _, es), k) =>
+      es.map(e => Edge(e._1 + k * shift, e._2 + k * shift, e._3))
+    }
+    val plans = graphs.map { case (ids, iso, es) =>
+      Graph(spark.sparkContext.parallelize((ids :+ iso).map(v => (v, 0L)), 2),
+        spark.sparkContext.parallelize(es.map(e => Edge(e._1, e._2, e._3)), 2), 0L)
+    }
+    val rounds = graphs.map(_._1.size + 1).max
+    var pairs = 0
+    for (r <- 0 until rounds) {
+      val sources = graphs.zipWithIndex.collect {
+        case ((ids, iso, _), k) if r <= ids.size => k -> (ids :+ iso)(r)
+      }
+      val feed = sources.map { case (k, s) => Edge(superSource, s + k * shift, 0.0) }
+      val union = Graph(unionVerts,
+        spark.sparkContext.parallelize(unionEdges ++ feed, 4), 0L)
+      val state = Dijkstra.deltaSssp(union, superSource).vertices.collect().toMap
+      for ((k, src) <- sources) {
+        val (ids, iso, es) = graphs(k)
+        val full = Dijkstra.localSssp(es, src)
+        for (dst <- ids ++ Seq(iso, absent)) {
+          val early = Dijkstra.autoPath(plans(k), src, dst)
+          val dist = walk(state, src + k * shift, dst + k * shift)
+            .map { case (d, p) => (d, p.map(_ - k * shift)) }
+          val ctx = s"graph $k src=$src dst=$dst edges=$es"
+          assert(early === walk(full, src, dst), ctx)
+          assert(early === dist, ctx)
+          pairs += 1
+        }
+      }
+    }
+    assert(pairs > 240 * 4)
+    // and the public distributed entry point itself, on one pair per graph
+    // for the first graphs
+    for (k <- 0 until 12) {
+      val (ids, _, _) = graphs(k)
+      val (src, dst) = (ids.head, ids.last)
+      assert(Dijkstra.autoPath(plans(k), src, dst, threshold = 0L) ===
+        Dijkstra.autoPath(plans(k), src, dst), s"graph $k")
+    }
+  }
+
+  test("a zero-weight pred cycle fails the local walk instead of spinning") {
+    // 10 reaches 1 and 2 at the same distance and the zero-weight pair
+    // 1 ⇄ 2 makes each the other's min pred: no walk from 1 reaches 10
+    val edges = Seq((10L, 1L, 1.0), (10L, 2L, 1.0), (1L, 2L, 0.0), (2L, 1L, 0.0))
+    intercept[IllegalArgumentException](Dijkstra.autoPath(graphOf(edges), 10L, 1L))
+  }
+
+  test("a cold collect on one graph does not stall warm routes on another") {
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val warm = graphOf(Seq((0L, 1L, 1.0), (1L, 2L, 1.0)))
+    val want = Dijkstra.autoPath(warm, 0L, 2L)
+    assert(want === Some((2.0, Seq(0L, 1L, 2L))))
+    DijkstraSpec.entered = new CountDownLatch(1)
+    DijkstraSpec.gate = new CountDownLatch(1)
+    // the cold graph's first job (its edge count) parks on the gate
+    val cold = Future {
+      val edges = spark.sparkContext.parallelize(Seq(Edge(0L, 1L, 1.0), Edge(1L, 2L, 3.0)), 1)
+        .map { e =>
+          DijkstraSpec.entered.countDown()
+          DijkstraSpec.gate.await(60, TimeUnit.SECONDS)
+          e
+        }
+      Dijkstra.autoPath(Graph.fromEdges(edges, 0L), 0L, 2L)
+    }
+    try {
+      assert(DijkstraSpec.entered.await(60, TimeUnit.SECONDS), "cold job never started")
+      assert(Await.result(Future(Dijkstra.autoPath(warm, 0L, 2L)), 10.seconds) === want)
+    } finally DijkstraSpec.gate.countDown()
+    assert(Await.result(cold, 60.seconds) === Some((4.0, Seq(0L, 1L, 2L))))
+  }
+}
+
+object DijkstraSpec {
+  // task-side latches: read through this object so the closure captures
+  // no spec instance
+  @volatile var entered = new CountDownLatch(0)
+  @volatile var gate = new CountDownLatch(0)
 }

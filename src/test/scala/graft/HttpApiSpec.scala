@@ -21,11 +21,30 @@ class HttpApiSpec extends AnyFunSuite {
     (a, a.start())
   }
 
+  /** A second server over the same map with names that need escaping:
+    * the shortest Jita→Amarr corridor becomes Jita, "Peri+meter",
+    * "Ur%len", "Am arr". */
+  private lazy val oddPort = {
+    import graft.sources.FixtureSource
+    val renamed = Map(StarMap.Perimeter -> "Peri+meter", StarMap.Urlen -> "Ur%len",
+      StarMap.Amarr -> "Am arr")
+    val src = new FixtureSource(
+      systems = StarMap.systemResponses.map(s =>
+        renamed.get(s.system_id).fold(s)(n => s.copy(name = Some(n)))),
+      stargates = StarMap.stargateResponses,
+      kills = StarMap.killSnapshots,
+      jumps = StarMap.jumpSnapshots)
+    val dir = java.nio.file.Files.createTempDirectory("evestore-http-names").toString
+    val eng = new EveGraph(new EveStore(spark, dir))
+    eng.bootstrap(src)
+    new HttpApi(eng, () => src).start()
+  }
+
   private val client = HttpClient.newHttpClient()
 
-  private def get(path: String): (Int, String) = {
+  private def get(path: String, at: Int = port): (Int, String) = {
     val r = client.send(
-      HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path")).GET().build(),
+      HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$at$path")).GET().build(),
       HttpResponse.BodyHandlers.ofString())
     (r.statusCode(), r.body())
   }
@@ -62,6 +81,25 @@ class HttpApiSpec extends AnyFunSuite {
   test("unknown path and wrong method → 404") {
     assert(get("/nonsense")._1 === 404)
     assert(post("/shortest-route/Jita/to/Amarr")._1 === 404)
+  }
+
+  test("route names are percent-decoded once: '+' stays a plus") {
+    assert(get("/shortest-route/Peri+meter/to/Am%20arr", oddPort) ===
+      (200, """["Peri+meter","Ur%len","Am arr"]"""))
+    assert(get("/shortest-route/Jita/to/Peri%2Bmeter", oddPort) ===
+      (200, """["Jita","Peri+meter"]"""))
+  }
+
+  test("route names are percent-decoded once: '%' (sent as %25) is a name character") {
+    assert(get("/shortest-route/Ur%25len/to/Am%20arr", oddPort) ===
+      (200, """["Ur%len","Am arr"]"""))
+    assert(get("/safest-route/Ur%25len/to/Jita", oddPort)._1 === 200)
+  }
+
+  test("route names are percent-decoded once: a space arrives as %20") {
+    assert(get("/shortest-route/Am%20arr/to/Jita", oddPort) ===
+      (200, """["Am arr","Ur%len","Peri+meter","Jita"]"""))
+    assert(get("/shortest-route/Am+arr/to/Jita", oddPort)._1 === 404)
   }
 
   test("POST /wormholes/refresh changes the next shortest answer") {
