@@ -2,9 +2,10 @@ package graft.api
 
 import graft.graph.{Dijkstra, GraphCatalog}
 import graft.model._
-import graft.sources.EveSource
+import graft.sources.{EveSource, Normalize}
 import graft.store.EveStore
 import org.apache.spark.graphx.{Edge, Graph}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 
 /** Engine facade mirroring the reference's public contract (SURVEY.md §2.11):
@@ -35,12 +36,7 @@ final class EveGraph private[graft] (val store: EveStore, localThreshold: Long) 
 
   // ---- projections (G1/G2, `database.rs:422-456`) ----
 
-  // jumps-table version each projection was built from: the incremental
-  // risk path is only sound while the edge topology is unchanged
-  private val builtAgainst = scala.collection.concurrent.TrieMap.empty[String, Long]
-
-  private def buildProjection(name: String, weightCol: String): Graph[Long, Double] = {
-    builtAgainst.put(name, store.jumpsVersion)
+  private def buildProjection(weightCol: String): Graph[Long, Double] = {
     val edges = store.jumps.toDF()
       .select(col("src_system_id"), col("dst_system_id"), col(weightCol).cast("double"))
       .rdd.map(r => Edge(r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -50,40 +46,9 @@ final class EveGraph private[graft] (val store: EveStore, localThreshold: Long) 
       .partitionBy(org.apache.spark.graphx.PartitionStrategy.EdgePartition2D)
   }
 
-  def refreshSystemMap(): Unit =
-    catalog.refresh("system-map", () => buildProjection("system-map", "cost"))
+  def refreshSystemMap(): Unit = catalog.refresh("system-map", () => buildProjection("cost"))
 
-  def refreshJumpRisk(): Unit =
-    catalog.refresh("jump-risk", () => buildProjection("jump-risk", "risk"))
-
-  /** G5 at scale: risk is a function of the *destination* system, so a
-    * risk-only refresh need not rebuild the edge structure — join the new
-    * per-system risks onto the vertices and re-derive edge weights with
-    * `mapTriplets`. Topology RDDs are reused; only the vertex values and
-    * edge attrs change (SURVEY §2.7 "incremental joinVertices" note).
-    *
-    * Risk comes from [[EveStore.riskBySystem]] — the systems table, the
-    * same source the full refresh writes onto edges — never from existing
-    * edge rows (wormhole edges carry risk=0.0 until the next full refresh,
-    * so an edge-derived dedup would nondeterministically pick stale
-    * weights). Falls back to a full build when no projection exists yet OR
-    * the edge set changed since the projection was built (the reused
-    * topology would silently be stale). */
-  def refreshJumpRiskIncremental(): Unit = {
-    val current = store.jumpsVersion
-    if (!catalog.exists("jump-risk") || !builtAgainst.get("jump-risk").contains(current)) {
-      refreshJumpRisk(); return
-    }
-    val riskVerts = store.riskBySystem()
-      .rdd.map(r => (r.getLong(0), r.getDouble(1)))
-    catalog.refresh("jump-risk", () => {
-      val old = catalog.getOrCreate("jump-risk", () => buildProjection("jump-risk", "risk"))
-      old.mapVertices((_, _) => 0.0)
-        .joinVertices(riskVerts)((_, _, r) => r)
-        .mapTriplets(t => t.dstAttr)
-        .mapVertices((_, _) => 0L)
-    })
-  }
+  def refreshJumpRisk(): Unit = catalog.refresh("jump-risk", () => buildProjection("risk"))
 
   // ---- route queries (G8/G9/G10, `database.rs:484-544`) ----
 
@@ -143,7 +108,7 @@ final class EveGraph private[graft] (val store: EveStore, localThreshold: Long) 
     for {
       src <- systemIdByName(index, from)
       dst <- systemIdByName(index, to)
-      res <- catalog.withGraph(graphName, () => buildProjection(graphName, weightCol))(
+      res <- catalog.withGraph(graphName, () => buildProjection(weightCol))(
         Dijkstra.autoPath(_, src, dst, localThreshold))
     } yield {
       val names = namesByIds(index, res._2.distinct)
@@ -164,19 +129,14 @@ final class EveGraph private[graft] (val store: EveStore, localThreshold: Long) 
   // ---- refresh endpoints (§2.11, `main.rs:201-245`) ----
 
   /** POST /systems/refresh — diff-sync (SURVEY.md §3.2): stale ids removed
-    * (DETACH), new ids pulled/normalized/appended, dedup repair. */
+    * (DETACH), new ids pulled/normalized/appended, dedup repair — one store
+    * call. */
   def refreshSystems(source: EveSource): Unit = {
     import spark.implicits._
-    val esiIds = source.systemIds(spark).cache()
+    val esiIds = source.systemIds(spark)
     val dbIds = store.systems.select($"system_id").as[Long]
-    val stale = dbIds.except(esiIds) // J1: db − esi
-    if (!stale.isEmpty) store.removeSystems(stale)
-    val fresh = esiIds.except(dbIds) // J2: esi − db
-    if (!fresh.isEmpty) {
-      val details = source.systemDetails(spark, fresh)
-      store.appendSystems(graft.sources.Normalize.systems(details))
-    }
-    store.dedupSystems()
+    store.syncSystems(dbIds.except(esiIds), // J1: db − esi
+      Normalize.systems(source.systemDetails(spark, esiIds.except(dbIds)))) // J2: esi − db
   }
 
   /** POST /stargates/refresh — stargate diff-sync driven by the systems'
@@ -185,47 +145,34 @@ final class EveGraph private[graft] (val store: EveStore, localThreshold: Long) 
     * skipped, matching `pull_stargate` (`sync.rs:323-350`). */
   def refreshStargates(source: EveSource): Unit = {
     import spark.implicits._
-    val expected = store.systems
-      .select(explode($"stargates").as("stargate_id"))
-      .distinct().as[Long].cache()
+    val expected = store.systems.select(explode($"stargates").as("stargate_id")).distinct().as[Long]
     val dbIds = store.stargates.select($"stargate_id").as[Long]
-    val stale = dbIds.except(expected)
-    if (!stale.isEmpty) store.removeStargates(stale)
-    val fresh = expected.except(dbIds)
-    if (!fresh.isEmpty) {
-      val details = source.stargateDetails(spark, fresh)
-      store.appendStargates(graft.sources.Normalize.stargates(details))
-    }
-    store.dedupStargates()
-    store.deriveJumps()
+    store.syncStargates(dbIds.except(expected),
+      Normalize.stargates(source.stargateDetails(spark, expected.except(dbIds))))
     refreshSystemMap()
   }
 
   /** POST /systems/risk — kills/jumps snapshot upsert, baseline, edge-risk
     * update join, jump-risk rebuild (SURVEY.md §3.3). */
-  def refreshRisks(source: EveSource): Unit = {
-    store.updateKillsJumps(source.systemKills(spark), source.systemJumps(spark))
-    store.refreshJumpRisks()
+  def refreshRisks(source: EveSource): Unit =
+    refreshRisks(source.systemKills(spark), source.systemJumps(spark))
+
+  /** The risk refresh over given snapshots, shared by the endpoint and
+    * [[graft.streaming.RiskStream]]'s micro-batches. The projection swap is
+    * build-then-swap: readers never see a half-refresh. */
+  def refreshRisks(kills: Dataset[SystemKills], jumps: Dataset[SystemJumps]): Unit = {
+    store.updateRisks(kills, jumps)
     refreshJumpRisk()
   }
 
   /** POST /wormholes/refresh — snapshot-replace protocol (`sync.rs:66-94`):
-    * drop all Thera/Turnur edges first, then re-add current wormhole
-    * signatures bidirectionally, then rebuild system-map. */
+    * drop all Thera/Turnur edges, re-add current wormhole signatures
+    * bidirectionally, then rebuild system-map. */
   def refreshWormholes(source: EveSource): Unit = {
     import spark.implicits._
-    store.dropConnectionsOf("Thera")
-    store.dropConnectionsOf("Turnur")
-    val whs = source.signatures(spark)
+    store.replaceWormholes(Seq("Thera", "Turnur"), source.signatures(spark)
       .filter($"signature_type" === "wormhole") // P7
-      .select($"in_system_id", $"out_system_id").as[(Long, Long)]
-    // edge only if both endpoints exist (same validation as J3)
-    val sys = store.systems.select($"system_id").distinct()
-    val valid = whs.toDF("in_id", "out_id")
-      .join(sys.toDF("a"), $"in_id" === $"a", "left_semi")
-      .join(sys.toDF("b"), $"out_id" === $"b", "left_semi")
-      .as[(Long, Long)]
-    store.addWormholes(valid)
+      .select($"in_system_id", $"out_system_id").as[(Long, Long)])
     refreshSystemMap()
   }
 

@@ -1,7 +1,7 @@
 package graft.store
 
 import graft.model._
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -11,8 +11,11 @@ import scala.collection.concurrent.TrieMap
 /** Parquet-backed mutable tables with the reference's write semantics
   * re-expressed as bulk relational rewrites (SURVEY.md §2.1 S9-S12, §4).
   *
-  * Neo4j-style point mutations (`SET`, `DETACH DELETE`) become
-  * read→transform→overwrite of whole tables. Each overwrite writes a fresh
+  * The reference mutates its graph with a chain of Cypher statements
+  * (`SET`, `DETACH DELETE`, `MERGE`), one per step. Here each refresh is one
+  * store call that builds one plan per table it touches and writes that
+  * table once: deletes, inserts, dedup repair and risk updates fold into the
+  * same read→transform→overwrite. Each overwrite writes a fresh
   * versioned directory and then atomically swaps a manifest pointer, so a
   * reader (or a cached graph projection) started against version N never
   * observes a half-written version N+1 — the refresh-atomicity fix called
@@ -73,12 +76,6 @@ final class EveStore(val spark: SparkSession, root: String) {
   def jumps: Dataset[Jump] =
     JumpKinds.map(k => read(jumpTable(k))).reduce(_ unionByName _).as[Jump]
 
-  /** Combined version of the jump partitions: strictly increases whenever
-    * either partition is rewritten (projection-staleness detection). */
-  def jumpsVersion: Long =
-    version(jumpTable("gate")).getOrElse(0L) * 1000003L +
-      version(jumpTable("wormhole")).getOrElse(0L)
-
   def initEmpty(): Unit = {
     if (!exists("systems")) write("systems", spark.emptyDataset[System].toDF())
     if (!exists("stargates")) write("stargates", spark.emptyDataset[Stargate].toDF())
@@ -87,76 +84,50 @@ final class EveStore(val spark: SparkSession, root: String) {
     }
   }
 
-  // ---- node sinks (S9/S10) ----
+  // ---- refresh plans: one write per table ----
 
-  def appendSystems(rows: Dataset[System]): Unit =
-    write("systems", systems.toDF().unionByName(rows.toDF()))
+  /** A3 keyed dedup (`database.rs:546-578`): one arbitrary-but-deterministic
+    * survivor per key. */
+  private def keepFirst(df: DataFrame, key: Seq[String], order: Column*): DataFrame =
+    df.withColumn("rn", row_number().over(Window.partitionBy(key.map(col): _*).orderBy(order: _*)))
+      .filter($"rn" === 1).drop("rn")
 
-  def appendStargates(rows: Dataset[Stargate]): Unit =
-    write("stargates", stargates.toDF().unionByName(rows.toDF()))
-
-  // ---- dedup repair (A3, `database.rs:546-578`) ----
-
-  /** Keep one arbitrary-but-deterministic survivor per key; edges are
-    * deduped on (src,dst) afterwards — the relational equivalent of the
-    * reference's per-instance DETACH (SURVEY.md §7.4 "Dedup + DETACH"). */
-  def dedupSystems(): Unit = {
-    val w = Window.partitionBy($"system_id").orderBy($"name", $"constellation_id")
-    write("systems", systems.toDF()
-      .withColumn("rn", row_number().over(w)).filter($"rn" === 1).drop("rn"))
-    dedupJumps()
+  /** Runs `f` over `df` persisted, and releases it before returning. */
+  private def persisted[T](df: DataFrame)(f: DataFrame => T): T = {
+    val p = df.persist()
+    try f(p) finally p.unpersist()
   }
 
-  def dedupStargates(): Unit = {
-    val w = Window.partitionBy($"stargate_id").orderBy($"name")
-    write("stargates", stargates.toDF()
-      .withColumn("rn", row_number().over(w)).filter($"rn" === 1).drop("rn"))
-  }
+  /** Writes each kind partition once, all from one evaluation of `edges`. */
+  private def writeJumps(edges: DataFrame): Unit =
+    persisted(edges)(e => JumpKinds.foreach(k => write(jumpTable(k), e.filter($"kind" === k))))
 
-  /** Repair pass — dedups on (src,dst) ACROSS kinds (same survivor choice
-    * as before the partition split), so it rewrites every partition; the
-    * hot mutation paths below stay partition-local. */
-  def dedupJumps(): Unit = {
-    val w = Window.partitionBy($"src_system_id", $"dst_system_id").orderBy($"cost", $"risk")
-    val deduped = jumps.toDF()
-      .withColumn("rn", row_number().over(w)).filter($"rn" === 1).drop("rn")
-      .cache()
-    JumpKinds.foreach(k => write(jumpTable(k), deduped.filter($"kind" === k)))
-    deduped.unpersist()
-  }
-
-  // ---- deletes (J4 + G6 DETACH, `database.rs:557-607`) ----
-
-  /** DETACH DELETE by id list: anti-join the node table *and* both edge
-    * endpoints. */
-  def removeSystems(ids: Dataset[Long]): Unit = {
-    // id set scales with the diff, not the table: let AQE pick the strategy
-    val idDf = ids.toDF("rid")
-    write("systems", systems.toDF().join(idDf, $"system_id" === $"rid", "left_anti"))
-    JumpKinds.foreach { k =>
-      write(jumpTable(k), read(jumpTable(k))
-        .join(idDf, $"src_system_id" === $"rid", "left_anti")
-        .join(idDf, $"dst_system_id" === $"rid", "left_anti"))
+  /** Systems diff-sync (S9 + J4/G6 DETACH + A3): the `stale` ids leave the
+    * systems table together with every edge touching them, both directions;
+    * the `fresh` rows are appended. Then one survivor per `system_id`, and
+    * one edge per (src, dst) across kinds, the smallest by (cost, risk) —
+    * the relational form of the reference's per-instance DETACH (SURVEY.md
+    * §7.4 "Dedup + DETACH"). */
+  def syncSystems(stale: Dataset[Long], fresh: Dataset[System]): Unit =
+    persisted(stale.toDF("rid")) { ids =>
+      write("systems", keepFirst(
+        systems.toDF().join(ids, $"system_id" === $"rid", "left_anti").unionByName(fresh.toDF()),
+        Seq("system_id"), $"name", $"constellation_id"))
+      writeJumps(keepFirst(
+        jumps.toDF()
+          .join(ids, $"src_system_id" === $"rid", "left_anti")
+          .join(ids, $"dst_system_id" === $"rid", "left_anti"),
+        Seq("src_system_id", "dst_system_id"), $"cost", $"risk"))
     }
-  }
 
-  def removeStargates(ids: Dataset[Long]): Unit =
-    write("stargates", stargates.toDF()
-      .join(ids.toDF("rid"), $"stargate_id" === $"rid", "left_anti"))
-
-  /** G7 — drop every edge touching the named system, both directions
-    * (undirected match, `database.rs:458-466`; wormhole expiry). Each kind
-    * partition is probed read-only first and rewritten only when it
-    * actually references the system — the Thera/Turnur expiry touches just
-    * the wormhole partition, never the gate one. */
-  def dropConnectionsOf(systemName: String): Unit = {
-    val ids = systems.filter($"name" === systemName).select($"system_id".as("rid"))
-    JumpKinds.foreach { k =>
-      val part = read(jumpTable(k))
-      val touches = $"src_system_id" === $"rid" || $"dst_system_id" === $"rid"
-      if (!part.join(broadcast(ids), touches, "left_semi").isEmpty)
-        write(jumpTable(k), part.join(broadcast(ids), touches, "left_anti"))
-    }
+  /** Stargate diff-sync (S10 + J4 + A3): drop `stale`, append `fresh`, one
+    * survivor per `stargate_id`; then the gate edges are re-derived. */
+  def syncStargates(stale: Dataset[Long], fresh: Dataset[Stargate]): Unit = {
+    write("stargates", keepFirst(
+      stargates.toDF().join(stale.toDF("rid"), $"stargate_id" === $"rid", "left_anti")
+        .unionByName(fresh.toDF()),
+      Seq("stargate_id"), $"name"))
+    deriveJumps()
   }
 
   // ---- edge derivation (S11/J3, `database.rs:367-385`) ----
@@ -186,41 +157,38 @@ final class EveStore(val spark: SparkSession, root: String) {
     write(jumpTable("gate"), gates)
   }
 
-  /** S12 — wormhole edges are inserted in both directions, *without* an
-    * existence check (reference contract: idempotence comes from the
-    * drop-Thera/Turnur-first refresh protocol, `sync.rs:66-94`). */
-  def addWormholes(pairs: Dataset[(Long, Long)]): Unit = {
+  /** Wormhole snapshot-replace (G7 + S12, `sync.rs:66-94`): every edge
+    * touching a system named in `hubs` is dropped, both directions
+    * (undirected match, `database.rs:458-466`), then each pair whose
+    * endpoints both exist (the J3 validation) is inserted in both directions
+    * *without* an existence check — idempotence comes from the drop-first
+    * protocol. The wormhole partition is rewritten once. The gate partition
+    * is probed read-only and rewritten only when a gate edge touches a hub
+    * (Turnur's gates, which stay dropped until the next stargate refresh). */
+  def replaceWormholes(hubs: Seq[String], pairs: Dataset[(Long, Long)]): Unit = {
+    val ids = broadcast(systems.filter($"name".isin(hubs: _*)).select($"system_id".as("rid")))
+    val touches = $"src_system_id" === $"rid" || $"dst_system_id" === $"rid"
+    val gate = read(jumpTable("gate"))
+    if (!gate.join(ids, touches, "left_semi").isEmpty)
+      write(jumpTable("gate"), gate.join(ids, touches, "left_anti"))
+    val sys = systems.select($"system_id")
     val p = pairs.toDF("in_id", "out_id")
+      .join(sys.toDF("a"), $"in_id" === $"a", "left_semi")
+      .join(sys.toDF("b"), $"out_id" === $"b", "left_semi")
     val both = p.select($"in_id".as("src_system_id"), $"out_id".as("dst_system_id"))
       .union(p.select($"out_id", $"in_id"))
       .withColumn("cost", lit(1.0)).withColumn("risk", lit(0.0))
       .withColumn("kind", lit("wormhole"))
-    // partition-local: the (huge, stable) gate partition is untouched
-    write(jumpTable("wormhole"), read(jumpTable("wormhole")).unionByName(both))
+    write(jumpTable("wormhole"),
+      read(jumpTable("wormhole")).join(ids, touches, "left_anti").unionByName(both))
   }
 
-  // ---- snapshot upsert (J7, `database.rs:256-292`) ----
-
-  /** Bulk form of the reference's per-system SET fan-out: one join per
-    * snapshot, unmatched systems keep their previous value. */
-  def updateKillsJumps(kills: Dataset[SystemKills], jumps_ : Dataset[SystemJumps]): Unit = {
-    val k = kills.toDF("k_id", "ship_kills")
-    val j = jumps_.toDF("j_id", "ship_jumps")
-    write("systems", systems.toDF()
-      .join(k, $"system_id" === $"k_id", "left")
-      .join(j, $"system_id" === $"j_id", "left")
-      .withColumn("kills", coalesce($"ship_kills", $"kills"))
-      .withColumn("jumps", coalesce($"ship_jumps", $"jumps"))
-      .drop("k_id", "ship_kills", "j_id", "ship_jumps"))
-  }
-
-  // ---- risk update (J5 + E1/E2, `database.rs:294-332`, `sync.rs:296-321`) ----
+  // ---- risk (J7 + J5 + E1/E2, `database.rs:256-332`, `sync.rs:296-321`) ----
 
   /** Per-system E1 risk over the current systems snapshot with the E2
-    * baseline — (system_id, risk). The single source of truth for risk:
-    * both the edge-table refresh and the incremental projection rebuild
-    * derive from it (never from previously-written edge rows, which could
-    * carry stale or not-yet-refreshed values). */
+    * baseline — (system_id, risk). The single source of truth for risk: the
+    * edge-table refresh derives from it, never from previously-written edge
+    * rows, which could carry stale or not-yet-refreshed values. */
   def riskBySystem(): DataFrame = {
     val sys = systems.toDF()
     val totals = sys.agg(
@@ -233,18 +201,26 @@ final class EveStore(val spark: SparkSession, root: String) {
         graft.risk.Risk.totalRisk($"kills", $"jumps", baseline).as("risk"))
   }
 
-  /** One edge-table join replaces the reference's ~8.5k per-system
-    * statements: every edge's risk becomes its *destination* system's
-    * kills²/jumps + baseline (baseline = Σkills/Σjumps, fallback 0.01). */
-  def refreshJumpRisks(): Unit = {
-    val rbs = riskBySystem()
-      .select($"system_id".as("risk_id"), $"risk".as("new_risk"))
-    // risk applies to every edge kind; each partition joins independently
-    JumpKinds.foreach { k =>
-      write(jumpTable(k), read(jumpTable(k))
-        .join(rbs, $"dst_system_id" === $"risk_id", "left")
-        .withColumn("risk", coalesce($"new_risk", $"risk"))
-        .drop("risk_id", "new_risk"))
-    }
+  /** Risk refresh over a kills/jumps snapshot. The bulk form of the
+    * reference's per-system SET fan-out upserts the snapshot onto systems,
+    * one join per snapshot, unmatched systems keeping their previous value
+    * (J7). Then one edge-table join replaces the reference's ~8.5k
+    * per-system statements (J5): every edge's risk becomes its *destination*
+    * system's kills²/jumps + baseline (baseline = Σkills/Σjumps, fallback
+    * 0.01), with [[riskBySystem]] evaluated once for both partitions. */
+  def updateRisks(kills: Dataset[SystemKills], jumps_ : Dataset[SystemJumps]): Unit = {
+    val k = kills.toDF("k_id", "ship_kills")
+    val j = jumps_.toDF("j_id", "ship_jumps")
+    write("systems", systems.toDF()
+      .join(k, $"system_id" === $"k_id", "left")
+      .join(j, $"system_id" === $"j_id", "left")
+      .withColumn("kills", coalesce($"ship_kills", $"kills"))
+      .withColumn("jumps", coalesce($"ship_jumps", $"jumps"))
+      .drop("k_id", "ship_kills", "j_id", "ship_jumps"))
+    val rbs = riskBySystem().select($"system_id".as("risk_id"), $"risk".as("new_risk"))
+    writeJumps(jumps.toDF()
+      .join(rbs, $"dst_system_id" === $"risk_id", "left")
+      .withColumn("risk", coalesce($"new_risk", $"risk"))
+      .drop("risk_id", "new_risk"))
   }
 }

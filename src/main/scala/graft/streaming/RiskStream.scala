@@ -29,13 +29,9 @@ object RiskStream {
     val stream = spark.readStream.schema(snapshotSchema).parquet(snapshotDir)
     stream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val kills = batch.select($"system_id", $"ship_kills").as[SystemKills]
-          val jumps = batch.select($"system_id", $"ship_jumps").as[SystemJumps]
-          engine.store.updateKillsJumps(kills, jumps)
-          engine.store.refreshJumpRisks()
-          engine.refreshJumpRisk() // build-then-swap: readers never see a half-refresh
-        }
+        if (!batch.isEmpty)
+          engine.refreshRisks(batch.select($"system_id", $"ship_kills").as[SystemKills],
+            batch.select($"system_id", $"ship_jumps").as[SystemJumps])
       }
       .trigger(trigger)
       .start()

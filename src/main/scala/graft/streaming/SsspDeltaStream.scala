@@ -21,7 +21,8 @@ import org.apache.spark.sql.types._
   *      (src-bucketed, [[EventBucket]]; op = +1 inserts a weighted
   *      edge; op = −1 deletes EVERY edge
   *      between its endpoints — the reference's expiry granularity,
-  *      `dropConnectionsOf`; both orientations stored). An edge is LIVE
+  *      the hub drop in `EveStore.replaceWormholes`; both orientations
+  *      stored). An edge is LIVE
   *      at a prefix iff its latest insert outranks the pair's latest
   *      delete (same-batch ties: the insert wins — a batch's deletes
   *      apply before its inserts, deterministically);

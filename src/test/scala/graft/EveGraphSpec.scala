@@ -189,39 +189,6 @@ class EveGraphSpec extends AnyFunSuite {
     }
   }
 
-  test("incremental risk projection refresh equals full rebuild") {
-    import graft.model.{SystemJumps, SystemKills}
-    val dir = java.nio.file.Files.createTempDirectory("evestore-inc").toString
-    val eng = new EveGraph(new EveStore(spark, dir))
-    eng.bootstrap(StarMap.source(withWormholes = false))
-    // new snapshot arrives: SafeB becomes dangerous
-    import spark.implicits._
-    eng.store.updateKillsJumps(
-      Seq(SystemKills(StarMap.SafeB, 50)).toDS(),
-      Seq.empty[SystemJumps].toDS())
-    eng.store.refreshJumpRisks()
-    // full rebuild vs incremental vertex-join update
-    eng.refreshJumpRisk()
-    val full = eng.catalog.getOrCreate("jump-risk", () => fail("must exist"))
-      .triplets.map(t => (t.srcId, t.dstId, t.attr)).collect().toSet
-    eng.refreshJumpRiskIncremental()
-    val inc = eng.catalog.getOrCreate("jump-risk", () => fail("must exist"))
-      .triplets.map(t => (t.srcId, t.dstId, t.attr)).collect().toSet
-    assert(inc === full)
-    // and the dangerous SafeB reroutes the safest path
-    assert(eng.safestRoute("Jita", "Amarr") ===
-      Some(Seq("Jita", "Perimeter", "Urlen", "Amarr")))
-    // topology change after the projection was built: the incremental path
-    // must detect the stale edge set and fall back to a full rebuild that
-    // includes the new edge
-    eng.store.addWormholes(Seq((StarMap.Jita, StarMap.Amarr)).toDS())
-    eng.refreshJumpRiskIncremental()
-    val rebuilt = eng.catalog.getOrCreate("jump-risk", () => fail("must exist"))
-      .triplets.map(t => (t.srcId, t.dstId)).collect().toSet
-    assert(rebuilt.contains((StarMap.Jita, StarMap.Amarr)))
-    assert(rebuilt.contains((StarMap.Amarr, StarMap.Jita)))
-  }
-
   test("streaming risk refresh equals the batch refresh (foreachBatch cadence)") {
     import spark.implicits._
     // engine bootstrapped with NO kill/jump data
@@ -420,6 +387,103 @@ class EveGraphSpec extends AnyFunSuite {
         if (k.system_id == StarMap.SafeB) k.copy(ship_kills = 50) else k),
       jumps = StarMap.jumpSnapshots))
     assert(eng.safestRoute("Jita", "Amarr") === Some(Seq("Jita", "Perimeter", "Urlen", "Amarr")))
+  }
+
+  // ---- one sync, table by table ----
+
+  private val Tables = Seq("systems", "stargates", "jumps_gate", "jumps_wormhole")
+
+  /** What one fixture engine records on its way through bootstrap, a
+    * stargate refresh, and one full sync against a source that drops Turnur
+    * and adds Newcomer. Its signatures add a Jita ↔ SafeA wormhole parallel
+    * to the Jita ↔ SafeA gates. */
+  private final case class Churn(
+      gateRisks: (Map[(Long, Long), Double], Map[(Long, Long), Double]),
+      turnurEdges: Set[(Long, Long)],
+      deltas: Map[String, Map[String, Long]],
+      afterSystems: Seq[graft.model.Jump],
+      idsStorage: org.apache.spark.storage.StorageLevel,
+      newcomerRoute: Option[Seq[String]])
+
+  private lazy val churn: Churn = {
+    import graft.model._
+    import spark.implicits._
+    val newcomer = 30003001L
+    val sigs = StarMap.wormholeSignatures :+ StarMap.wormholeSignatures(0).copy(id = "sig4",
+      in_system_id = StarMap.Jita, out_system_id = StarMap.SafeA, out_system_name = "SafeA")
+    val source = new graft.sources.FixtureSource(StarMap.systemResponses, StarMap.stargateResponses,
+      kills = StarMap.killSnapshots, jumps = StarMap.jumpSnapshots, sigs = sigs)
+    val gate = StargateResponse(59000001L, "Stargate (Amarr)", newcomer, 29624L,
+      Position(0, 0, 0), StargateDestination(59000002L, StarMap.Amarr))
+    val churned = new graft.sources.FixtureSource(
+      StarMap.systemResponses.filterNot(_.system_id == StarMap.Turnur) :+ SystemResponse(newcomer,
+        Some("Newcomer"), Some(20000020L), 0.9, Some(40000849L), Some("A"), Position(1, 2, 3),
+        Some(Seq.empty), Some(Seq(gate.stargate_id))),
+      StarMap.stargateResponses :+ gate,
+      kills = StarMap.killSnapshots, jumps = StarMap.jumpSnapshots, sigs = sigs)
+    val eng = new EveGraph(storeDir())
+    eng.bootstrap(source)
+    def gateRisks() = eng.store.read("jumps_gate").as[Jump].collect()
+      .map(j => (j.src_system_id, j.dst_system_id) -> j.risk).toMap
+    val before = gateRisks()
+    eng.refreshStargates(source)
+    val after = gateRisks()
+    def delta(refresh: graft.sources.EveSource => Unit): Map[String, Long] = {
+      def versions() = Tables.map(t => t -> eng.store.version(t).get).toMap
+      val v0 = versions()
+      refresh(churned)
+      val v1 = versions()
+      Tables.map(t => t -> (v1(t) - v0(t))).toMap
+    }
+    val systemsDelta = delta(eng.refreshSystems)
+    val afterSystems = eng.store.jumps.collect().toSeq
+    val idsStorage = churned.systemIds(spark).storageLevel
+    val stargatesDelta = delta(eng.refreshStargates)
+    val risksDelta = delta(eng.refreshRisks(_))
+    val wormholesDelta = delta(eng.refreshWormholes)
+    Churn((before, after),
+      after.keySet.filter(e => e._1 == StarMap.Turnur || e._2 == StarMap.Turnur),
+      Map("systems" -> systemsDelta, "stargates" -> stargatesDelta,
+        "risks" -> risksDelta, "wormholes" -> wormholesDelta),
+      afterSystems, idsStorage, eng.shortestRoute("Newcomer", "Jita"))
+  }
+
+  test("each refresh writes every table it touches once") {
+    def d(systems: Long, stargates: Long, gate: Long, wormhole: Long) = Map("systems" -> systems,
+      "stargates" -> stargates, "jumps_gate" -> gate, "jumps_wormhole" -> wormhole)
+    assert(churn.deltas === Map(
+      "systems" -> d(1, 0, 1, 1),
+      "stargates" -> d(0, 1, 1, 0),
+      "risks" -> d(1, 0, 1, 1),
+      // Turnur left with this sync, and Thera has no gates: no gate edge to drop
+      "wormholes" -> d(0, 0, 0, 1)))
+  }
+
+  test("a systems refresh releases what it caches") {
+    assert(churn.idsStorage === org.apache.spark.storage.StorageLevel.NONE)
+  }
+
+  test("a systems refresh keeps one edge per (src, dst), the smallest by (cost, risk)") {
+    val edges = churn.afterSystems.groupBy(j => (j.src_system_id, j.dst_system_id))
+    assert(edges.values.forall(_.size == 1), edges.filter(_._2.size > 1))
+    // the wormhole came after the risk refresh (risk 0), the gate carries SafeA's risk
+    for (e <- Seq((StarMap.Jita, StarMap.SafeA), (StarMap.SafeA, StarMap.Jita))) {
+      assert(churn.gateRisks._1(e) > 0.0)
+      assert(edges(e).map(j => (j.kind, j.cost, j.risk)) === Seq(("wormhole", 1.0, 0.0)))
+    }
+  }
+
+  test("a stargate refresh keeps every surviving gate edge's risk") {
+    val (before, after) = churn.gateRisks
+    assert(before.values.exists(_ > 0.0))
+    before.foreach { case (edge, risk) => assert(after.get(edge) === Some(risk), edge) }
+  }
+
+  test("one sync with stale and fresh systems: stale edges go both ways, the fresh system routes") {
+    assert(churn.turnurEdges === Set((StarMap.SafeB, StarMap.Turnur), (StarMap.Turnur, StarMap.SafeB)))
+    assert(!churn.afterSystems.exists(j =>
+      j.src_system_id == StarMap.Turnur || j.dst_system_id == StarMap.Turnur))
+    assert(churn.newcomerRoute === Some(Seq("Newcomer", "Amarr", "Thera", "Jita")))
   }
 
   /** Routes the name index and the distributed lookups must answer alike. */
