@@ -4,7 +4,6 @@ import graft.graph.{Dijkstra, GraphCatalog}
 import graft.model._
 import graft.sources.{EveSource, Normalize}
 import graft.store.EveStore
-import org.apache.spark.graphx.{Edge, Graph}
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 
@@ -15,35 +14,35 @@ import org.apache.spark.sql.functions._
   * Projections: two weighted graphs, `system-map` (cost) and `jump-risk`
   * (risk), managed by [[GraphCatalog]] with the reference's lifecycle —
   * rebuilt on refresh (`database.rs:468-482`), `jump-risk` built lazily on
-  * first safest-route query (`main.rs:178-185`).
+  * first safest-route query (`main.rs:178-185`). Each build is one
+  * [[Dijkstra.project]] over the jumps table: at or below `localThreshold`
+  * edges a driver-side CSR snapshot that reads no store file once built,
+  * above it a persisted GraphX graph that leases the jump versions it reads
+  * until the catalog releases it.
   *
   * How a route reaches a projection: both names resolve through an
   * in-memory name ↔ id index of the systems table (the reference's name
   * index), rebuilt by one collect after the table's version changes; the
-  * search runs [[Dijkstra.autoPath]] on the pinned projection instance,
-  * which collects that instance's edges once into a driver-side adjacency.
-  * A warm route therefore starts no Spark job. Above `localThreshold`
-  * systems rows or edges, the same fail-closed dispatch keeps the lookups
-  * as filtered scans and the search on the cluster.
+  * search runs [[Dijkstra.autoPath]] on the pinned projection. A route on a
+  * CSR snapshot with a current name index therefore starts no Spark job.
+  * Above `localThreshold` systems rows or edges, the same fail-closed
+  * dispatch keeps the lookups as filtered scans and the search on the
+  * cluster.
   */
 final class EveGraph private[graft] (val store: EveStore, localThreshold: Long) {
 
   def this(store: EveStore) = this(store, Dijkstra.DefaultLocalThreshold)
 
-  val catalog = new GraphCatalog[Long, Double]
+  val catalog = new GraphCatalog
 
   private val spark = store.spark
 
   // ---- projections (G1/G2, `database.rs:422-456`) ----
 
-  private def buildProjection(weightCol: String): Graph[Long, Double] = {
-    val edges = store.jumps.toDF()
-      .select(col("src_system_id"), col("dst_system_id"), col(weightCol).cast("double"))
-      .rdd.map(r => Edge(r.getLong(0), r.getLong(1), r.getDouble(2)))
-    // 2D edge partitioning bounds vertex replication to 2√N partitions —
-    // the projection layout that keeps Pregel supersteps balanced at scale
-    Graph.fromEdges(edges, 0L)
-      .partitionBy(org.apache.spark.graphx.PartitionStrategy.EdgePartition2D)
+  private def buildProjection(weightCol: String): Dijkstra.Projection = {
+    val (jumps, release) = store.leaseJumps()
+    Dijkstra.project(jumps.select(col("src_system_id").as("src"), col("dst_system_id").as("dst"),
+      col(weightCol).as("w")), localThreshold, release)
   }
 
   def refreshSystemMap(): Unit = catalog.refresh("system-map", () => buildProjection("cost"))
@@ -100,8 +99,8 @@ final class EveGraph private[graft] (val store: EveStore, localThreshold: Long) 
     * the reference's 404), Dijkstra over the named projection, then the
     * id→name mapping (J6). The projection is *pinned* for the duration of
     * the search ([[GraphCatalog.withGraph]]): a refresh landing mid-query
-    * retires the old graph from the catalog immediately but cannot
-    * unpersist it under the running Pregel loop, so the answer is computed
+    * retires the old projection from the catalog immediately but cannot
+    * release it under the running search, so the answer is computed
     * against one consistent snapshot. */
   private def route(graphName: String, weightCol: String, from: String, to: String): Option[Seq[String]] = {
     val index = nameIndex()
@@ -109,7 +108,7 @@ final class EveGraph private[graft] (val store: EveStore, localThreshold: Long) 
       src <- systemIdByName(index, from)
       dst <- systemIdByName(index, to)
       res <- catalog.withGraph(graphName, () => buildProjection(weightCol))(
-        Dijkstra.autoPath(_, src, dst, localThreshold))
+        Dijkstra.autoPath(_, src, dst))
     } yield {
       val names = namesByIds(index, res._2.distinct)
       res._2.map(id => names.getOrElse(id, "undefined"))
@@ -133,10 +132,9 @@ final class EveGraph private[graft] (val store: EveStore, localThreshold: Long) 
     * call. */
   def refreshSystems(source: EveSource): Unit = {
     import spark.implicits._
-    val esiIds = source.systemIds(spark)
-    val dbIds = store.systems.select($"system_id").as[Long]
-    store.syncSystems(dbIds.except(esiIds), // J1: db − esi
-      Normalize.systems(source.systemDetails(spark, esiIds.except(dbIds)))) // J2: esi − db
+    idDiff(store.systems.select($"system_id").as[Long], source.systemIds(spark)) {
+      (stale, fresh) => store.syncSystems(stale, Normalize.systems(source.systemDetails(spark, fresh)))
+    }
   }
 
   /** POST /stargates/refresh — stargate diff-sync driven by the systems'
@@ -145,11 +143,26 @@ final class EveGraph private[graft] (val store: EveStore, localThreshold: Long) 
     * skipped, matching `pull_stargate` (`sync.rs:323-350`). */
   def refreshStargates(source: EveSource): Unit = {
     import spark.implicits._
-    val expected = store.systems.select(explode($"stargates").as("stargate_id")).distinct().as[Long]
-    val dbIds = store.stargates.select($"stargate_id").as[Long]
-    store.syncStargates(dbIds.except(expected),
-      Normalize.stargates(source.stargateDetails(spark, expected.except(dbIds))))
+    val expected = store.systems.select(explode($"stargates")).as[Long]
+    idDiff(store.stargates.select($"stargate_id").as[Long], expected) {
+      (stale, fresh) => store.syncStargates(stale, Normalize.stargates(source.stargateDetails(spark, fresh)))
+    }
     refreshSystemMap()
+  }
+
+  /** Both sides of an id diff from one shuffle: ids tagged by side (1 =
+    * `held`, 2 = `wanted`) and grouped with a `bit_or` of the tags, persisted
+    * once. `f` gets (held − wanted, wanted − held), J1 and J2 of the
+    * diff-sync; the frame is released before this returns. */
+  private def idDiff[T](held: Dataset[Long], wanted: Dataset[Long])(
+      f: (Dataset[Long], Dataset[Long]) => T): T = {
+    import spark.implicits._
+    val sides = held.toDF("id").withColumn("side", lit(1))
+      .unionByName(wanted.toDF("id").withColumn("side", lit(2)))
+      .groupBy($"id").agg(bit_or($"side").as("sides"))
+      .persist()
+    def only(side: Int) = sides.filter($"sides" === side).select($"id").as[Long]
+    try f(only(1), only(2)) finally sides.unpersist()
   }
 
   /** POST /systems/risk — kills/jumps snapshot upsert, baseline, edge-risk

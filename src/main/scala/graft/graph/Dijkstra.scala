@@ -1,6 +1,9 @@
 package graft.graph
 
 import org.apache.spark.graphx._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+import org.apache.spark.storage.StorageLevel
 
 import scala.reflect.ClassTag
 
@@ -568,9 +571,9 @@ object Dijkstra {
   //
   // Pregel supersteps cost whole Spark jobs; on a fixture-sized graph that
   // overhead dwarfs the work (analogous to Catalyst choosing a broadcast
-  // join for a small side). Below `threshold` edges the edge list is
-  // collected ONCE per graph instance into a driver-side CSR adjacency
-  // ([[Csr]]), and every path query on that instance runs the flat-array
+  // join for a small side). At or below `threshold` edges a projection
+  // ([[project]]) collects the edge list ONCE into a driver-side CSR
+  // adjacency ([[Csr]]), and every path query on it runs the flat-array
   // heap Dijkstra ([[Csr.search]]) without starting a Spark job; above it,
   // the delta-stepping program runs unchanged on the cluster. The
   // reference universe (~13.8k edges) always takes the local path; the
@@ -744,53 +747,13 @@ object Dijkstra {
     }
   }
 
-  /** The per-instance half of [[autoPath]]'s dispatch memo: the edge count,
-    * then — once a query takes the local branch — the collected CSR. Its
-    * own lock serializes the first count and collect of ONE instance, so
-    * each runs at most once, while routes on other instances go on. It
-    * holds no reference to the graph: a value that reached its own key
-    * would keep the weak entry alive forever. */
-  private final class LocalPlan {
-    private var edgeCount = -1L
-    private var csr: Csr = null
-
-    def adjacency(g: Graph[_, Double], threshold: Long): Option[Csr] = synchronized {
-      if (edgeCount < 0L) edgeCount = g.edges.count()
-      if (edgeCount > threshold) None
-      else {
-        if (csr == null) csr = Csr(g.edges.map(e => (e.srcId, e.dstId, e.attr)).collect())
-        Some(csr)
-      }
-    }
-  }
-
-  /** [[autoPath]]'s dispatch memo, keyed by graph identity. Sound because a
-    * graph instance is an immutable snapshot: [[GraphCatalog]] projections
-    * read one versioned store directory, and a refresh builds a new
-    * instance rather than mutating the old one. The keys are weak, so a
-    * retired projection's adjacency is freed with it. The map's lock
-    * guards only the get/put, never a Spark job. */
-  private val localPlans = new java.util.WeakHashMap[AnyRef, LocalPlan]()
-
-  /** The CSR of `g` if it has at most `threshold` edges. */
-  private def localAdjacency(g: Graph[_, Double], threshold: Long): Option[Csr] = {
-    val plan = localPlans.synchronized {
-      Option(localPlans.get(g)).getOrElse {
-        val p = new LocalPlan
-        localPlans.put(g, p)
-        p
-      }
-    }
-    plan.adjacency(g, threshold)
-  }
-
   /** DataFrame-level adaptive SSSP: `edges` must have (src, dst, w) columns.
     * Small edge sets are collected and solved driver-local without ever
     * constructing a GraphX graph (saves the RDD conversion + partitioning
     * jobs); large ones build the distributed graph and run delta-stepping.
     * Seq-returning convenience over [[ssspFrameFromEdges]] — ONE dispatch
     * implementation, not two to keep in sync. */
-  def ssspFromEdges(edges: org.apache.spark.sql.DataFrame, source: VertexId,
+  def ssspFromEdges(edges: DataFrame, source: VertexId,
       threshold: Long = DefaultLocalThreshold): Seq[(VertexId, Double)] =
     ssspFrameFromEdges(edges, source, threshold).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -800,27 +763,16 @@ object Dijkstra {
     * vertex RDD, never a driver-side Seq (at full scale the reachable set
     * is itself a big table; callers sort/limit/join it like any other).
     * Columns: (id long, dist double). */
-  def ssspFrameFromEdges(edges: org.apache.spark.sql.DataFrame, source: VertexId,
-      threshold: Long = DefaultLocalThreshold): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.col
+  def ssspFrameFromEdges(edges: DataFrame, source: VertexId,
+      threshold: Long = DefaultLocalThreshold): DataFrame = {
     val spark = edges.sparkSession
-    val norm = edges.select(col("src").cast("long"), col("dst").cast("long"),
-      col("w").cast("double"))
-    // limit-COUNT probe: one cheap job decides the dispatch without ever
-    // shipping edge rows to the driver — the distributed branch previously
-    // collected up to threshold+1 rows (~50 MB at the default) only to
-    // discard them; now rows are collected on the local branch alone,
-    // where the probe count has already bounded them to ≤ threshold
-    val probeCount = norm.limit((threshold + 1).toInt).count()
-    if (probeCount <= threshold) {
-      val rows = localSssp(
-        norm.collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))), source)
+    val norm = edgeColumns(edges)
+    if (fitsLocal(norm, threshold)) {
+      val rows = localSssp(collectEdges(norm), source)
         .map { case (id, (d, _)) => (id, d) }.toSeq
       spark.createDataFrame(rows).toDF("id", "dist")
     } else {
-      val g = Graph.fromEdges(
-        norm.rdd.map(r => org.apache.spark.graphx.Edge(r.getLong(0), r.getLong(1), r.getDouble(2))),
-        0L)
+      val g = Graph.fromEdges(edgeRdd(norm), 0L)
       val verts = deltaSssp(g, source).vertices
         .filter { case (_, (d, _)) => !d.isInfinite }
         .map { case (id, (d, _)) => (id, d) }
@@ -828,18 +780,92 @@ object Dijkstra {
     }
   }
 
-  /** Single-pair path with local-vs-distributed dispatch. A warm call on a
-    * graph at or below `threshold` edges starts no Spark job: it runs the
-    * [[Csr]] kernel from `source`, stops once the target's (dist, pred)
-    * and those of every vertex on its path are final (see [[Csr.search]]),
-    * and walks the preds by index. The answer is the full run's min-pred
-    * path, the one the distributed reconstruction returns. */
-  def autoPath[V: ClassTag](
-      g: Graph[V, Double], source: VertexId, target: VertexId,
-      threshold: Long = DefaultLocalThreshold): Option[(Double, Seq[VertexId])] =
-    localAdjacency(g, threshold) match {
-      case Some(_) if source == target => Some((0.0, List(source)))
-      case Some(csr) =>
+  /** (src, dst, w) as (long, long, double). */
+  private def edgeColumns(edges: DataFrame): DataFrame =
+    edges.select(col("src").cast("long"), col("dst").cast("long"), col("w").cast("double"))
+
+  /** The limit-COUNT probe: one cheap job decides the dispatch without
+    * shipping edge rows to the driver. Rows are collected on the local
+    * branch alone, where the probe has already bounded them to ≤ threshold. */
+  private def fitsLocal(norm: DataFrame, threshold: Long): Boolean =
+    norm.limit((threshold + 1).toInt).count() <= threshold
+
+  private def collectEdges(norm: DataFrame): Seq[(VertexId, VertexId, Double)] =
+    norm.collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+
+  private def edgeRdd(norm: DataFrame): org.apache.spark.rdd.RDD[Edge[Double]] =
+    norm.rdd.map(r => Edge(r.getLong(0), r.getLong(1), r.getDouble(2)))
+
+  /** A weighted graph ready for [[autoPath]], built once by [[project]] and
+    * immutable after: a refresh builds a new one. [[release]] frees what it
+    * holds; a caller must not use it afterwards. */
+  sealed abstract class Projection {
+    def release(): Unit
+  }
+
+  /** At or below the local threshold: a driver-side CSR snapshot. It reads
+    * no file and holds no Spark resource after its build. */
+  private final class LocalProjection(val csr: Csr) extends Projection {
+    def release(): Unit = ()
+  }
+
+  /** Above the local threshold: a persisted 2D-partitioned GraphX graph.
+    * An evicted partition recomputes from the files its lineage reads, so
+    * the graph holds them through `onRelease` until [[release]]. */
+  final class GraphProjection private[Dijkstra] (val graph: Graph[Long, Double],
+      onRelease: () => Unit) extends Projection {
+    def release(): Unit = {
+      graph.unpersist(blocking = false)
+      onRelease()
+    }
+  }
+
+  /** Builds the projection of an edge frame with (src, dst, w) columns. At
+    * or below `threshold` edges (one limit-count probe) the rows are
+    * collected into a [[Csr]] and `release` runs as soon as the collect
+    * returns. Above it, the edges become a GraphX graph partitioned with
+    * `EdgePartition2D` (vertex replication bounded to 2√N partitions, which
+    * keeps supersteps balanced at scale), persisted and materialized, so
+    * queries never pay projection cost; `release` then runs when the
+    * projection is released. It also runs if the build fails. */
+  def project(edges: DataFrame, threshold: Long = DefaultLocalThreshold,
+      release: () => Unit = () => ()): Projection = {
+    val norm = edgeColumns(edges)
+    var held = false
+    try {
+      if (fitsLocal(norm, threshold)) new LocalProjection(Csr(collectEdges(norm)))
+      else {
+        val raw = Graph.fromEdges(edgeRdd(norm), 0L)
+        val g = raw.partitionBy(PartitionStrategy.EdgePartition2D)
+        // each side persisted on its own: partitionBy pre-assigns a level
+        // to the edges but can leave the vertices unpersisted, and
+        // re-persisting a leveled RDD throws
+        if (g.vertices.getStorageLevel == StorageLevel.NONE)
+          g.vertices.persist(StorageLevel.MEMORY_AND_DISK)
+        if (g.edges.getStorageLevel == StorageLevel.NONE)
+          g.edges.persist(StorageLevel.MEMORY_AND_DISK)
+        g.vertices.count()
+        g.edges.count()
+        // the unpartitioned parent is cached by fromEdges; with both views
+        // of `g` materialized it is no longer needed
+        raw.unpersist(blocking = false)
+        held = true
+        new GraphProjection(g, release)
+      }
+    } finally if (!held) release()
+  }
+
+  /** Single-pair path on a projection. On a CSR snapshot it starts no Spark
+    * job: it runs the [[Csr]] kernel from `source`, stops once the target's
+    * (dist, pred) and those of every vertex on its path are final (see
+    * [[Csr.search]]), and walks the preds by index. On a GraphX projection
+    * it runs [[reconstructDistributed]]. Both return the full run's min-pred
+    * path; a source is its own one-vertex path on either. */
+  def autoPath(p: Projection, source: VertexId, target: VertexId): Option[(Double, Seq[VertexId])] =
+    if (source == target) Some((0.0, List(source)))
+    else p match {
+      case l: LocalProjection =>
+        val csr = l.csr
         val s = csr.indexOf(source)
         val t = csr.indexOf(target)
         if (s < 0 || t < 0) None
@@ -861,15 +887,16 @@ object Dijkstra {
         }
       // large graphs: never collect the reachable vertex set to the driver —
       // walk predecessors distributively (O(pathLen) small lookup jobs)
-      case None => reconstructDistributed(g, source, target)
+      case g: GraphProjection => reconstructDistributed(g.graph, source, target)
     }
 
   /** 100 TB-safe path reconstruction: no driver-side vertex map; walks
     * predecessor pointers with one small lookup join per hop against the
-    * (cached) SSSP vertex RDD. Hop count bounds the number of jobs. */
+    * (cached) SSSP vertex RDD. Path length bounds the number of jobs: a
+    * walk that revisits a vertex (a zero-weight pred cycle under the
+    * min-pred rule) fails at the repeat. */
   def reconstructDistributed[V: ClassTag](
-      g: Graph[V, Double], source: VertexId, target: VertexId,
-      maxHops: Int = 10000): Option[(Double, Seq[VertexId])] = {
+      g: Graph[V, Double], source: VertexId, target: VertexId): Option[(Double, Seq[VertexId])] = {
     val verts = deltaSssp(g, source).vertices.cache()
     // VertexRDD is hash-partitioned: lookup() probes the single owning
     // partition — O(V/p) per hop, not a full-RDD filter scan
@@ -878,13 +905,12 @@ object Dijkstra {
     try {
       lookup(target).filter(!_._1.isInfinite).map { case (dist, _) =>
         var ids = List(target)
-        var hops = 0
-        while (ids.head != source && hops < maxHops) {
-          ids = lookup(ids.head).get._2 :: ids
-          hops += 1
+        val seen = scala.collection.mutable.HashSet(target)
+        while (ids.head != source) {
+          val pred = lookup(ids.head).get._2
+          require(seen.add(pred), s"predecessor cycle on the path from $source to $target")
+          ids = pred :: ids
         }
-        require(ids.head == source,
-          s"path reconstruction exceeded maxHops=$maxHops before reaching $source")
         (dist, ids)
       }
     } finally verts.unpersist(blocking = false)

@@ -1,12 +1,16 @@
 package graft.store
 
 import graft.model._
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.StructType
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.concurrent.atomic.AtomicBoolean
 import scala.collection.concurrent.TrieMap
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Parquet-backed mutable tables with the reference's write semantics
   * re-expressed as bulk relational rewrites (SURVEY.md §2.1 S9-S12, §4).
@@ -17,16 +21,30 @@ import scala.collection.concurrent.TrieMap
   * table once: deletes, inserts, dedup repair and risk updates fold into the
   * same read→transform→overwrite. Each overwrite writes a fresh
   * versioned directory and then atomically swaps a manifest pointer, so a
-  * reader (or a cached graph projection) started against version N never
-  * observes a half-written version N+1 — the refresh-atomicity fix called
-  * out in SURVEY.md §7.4. At cluster scale the same protocol works over any
-  * shared filesystem because the manifest move is a single-file rename.
+  * reader started against version N never observes a half-written version
+  * N+1 — the refresh-atomicity fix called out in SURVEY.md §7.4. At cluster
+  * scale the same protocol works over any shared filesystem because the
+  * manifest move is a single-file rename.
+  *
+  * Reclamation: after each swap the table's directory is listed and every
+  * version older than the previous one is deleted, orphans of a crash
+  * between an earlier swap and its delete included; a version newer than
+  * the current one is never touched. A plain reader resolved against
+  * version N therefore stays valid until version N+2 commits. A reader that
+  * must outlive that — a GraphX projection, whose evicted partitions
+  * recompute from its files — takes a lease ([[leaseJumps]]): a leased
+  * version is kept until the lease is released. Reads declare each table's
+  * schema from its model encoder, so building a frame starts no job.
   */
 final class EveStore(val spark: SparkSession, root: String) {
   import spark.implicits._
 
   Files.createDirectories(Paths.get(root))
   private val versions = TrieMap.empty[String, Long]
+
+  /** Lease counts per (table, version); its lock also orders every lease
+    * against every reclaim. */
+  private val leases = mutable.Map.empty[(String, Long), Int]
 
   // ---- versioned table primitives ----
 
@@ -48,10 +66,30 @@ final class EveStore(val spark: SparkSession, root: String) {
     Files.move(tmp, manifest(table), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
     versions.put(table, next)
+    reclaim(table, next)
   }
 
+  /** Deletes every unleased `v<k>` of `table` with k < current − 1. */
+  private def reclaim(table: String, current: Long): Unit = leases.synchronized {
+    val listing = Files.list(Paths.get(root, table))
+    val doomed = try listing.iterator().asScala.toList.filter(_.getFileName.toString match {
+      case VersionDir(k) => k.toLong < current - 1 && !leases.contains((table, k.toLong))
+      case _ => false
+    }) finally listing.close()
+    doomed.foreach { d =>
+      val tree = Files.walk(d)
+      try tree.iterator().asScala.toList.reverse.foreach(Files.deleteIfExists)
+      finally tree.close()
+    }
+  }
+
+  private val VersionDir = "v(\\d+)".r
+
+  private def readAt(table: String, version: Long): DataFrame =
+    spark.read.schema(Schemas(table)).parquet(Paths.get(root, table, s"v$version").toString)
+
   def read(table: String): DataFrame = currentVersion(table) match {
-    case Some(v) => spark.read.parquet(Paths.get(root, table, s"v$v").toString)
+    case Some(v) => readAt(table, v)
     case None => throw new IllegalStateException(s"table $table not initialized")
   }
 
@@ -75,6 +113,24 @@ final class EveStore(val spark: SparkSession, root: String) {
 
   def jumps: Dataset[Jump] =
     JumpKinds.map(k => read(jumpTable(k))).reduce(_ unionByName _).as[Jump]
+
+  private val Schemas: Map[String, StructType] = Map(
+    "systems" -> Encoders.product[System].schema,
+    "stargates" -> Encoders.product[Stargate].schema) ++
+    JumpKinds.map(k => jumpTable(k) -> Encoders.product[Jump].schema)
+
+  /** [[jumps]] at the current version of each partition, with those
+    * versions kept from reclamation until the returned release runs (it is
+    * idempotent). */
+  def leaseJumps(): (Dataset[Jump], () => Unit) = leases.synchronized {
+    val held = JumpKinds.map(k => jumpTable(k)).map(t => (t, currentVersion(t).get))
+    held.foreach(h => leases(h) = leases.getOrElse(h, 0) + 1)
+    val released = new AtomicBoolean
+    val release = () => if (released.compareAndSet(false, true)) leases.synchronized {
+      held.foreach(h => if (leases(h) == 1) leases.remove(h) else leases(h) -= 1)
+    }
+    (held.map { case (t, v) => readAt(t, v) }.reduce(_ unionByName _).as[Jump], release)
+  }
 
   def initEmpty(): Unit = {
     if (!exists("systems")) write("systems", spark.emptyDataset[System].toDF())
@@ -107,18 +163,19 @@ final class EveStore(val spark: SparkSession, root: String) {
     * the `fresh` rows are appended. Then one survivor per `system_id`, and
     * one edge per (src, dst) across kinds, the smallest by (cost, risk) —
     * the relational form of the reference's per-instance DETACH (SURVEY.md
-    * §7.4 "Dedup + DETACH"). */
-  def syncSystems(stale: Dataset[Long], fresh: Dataset[System]): Unit =
-    persisted(stale.toDF("rid")) { ids =>
-      write("systems", keepFirst(
-        systems.toDF().join(ids, $"system_id" === $"rid", "left_anti").unionByName(fresh.toDF()),
-        Seq("system_id"), $"name", $"constellation_id"))
-      writeJumps(keepFirst(
-        jumps.toDF()
-          .join(ids, $"src_system_id" === $"rid", "left_anti")
-          .join(ids, $"dst_system_id" === $"rid", "left_anti"),
-        Seq("src_system_id", "dst_system_id"), $"cost", $"risk"))
-    }
+    * §7.4 "Dedup + DETACH"). `stale` is read by both plans, so a caller
+    * that derives it through a shuffle persists it. */
+  def syncSystems(stale: Dataset[Long], fresh: Dataset[System]): Unit = {
+    val ids = stale.toDF("rid")
+    write("systems", keepFirst(
+      systems.toDF().join(ids, $"system_id" === $"rid", "left_anti").unionByName(fresh.toDF()),
+      Seq("system_id"), $"name", $"constellation_id"))
+    writeJumps(keepFirst(
+      jumps.toDF()
+        .join(ids, $"src_system_id" === $"rid", "left_anti")
+        .join(ids, $"dst_system_id" === $"rid", "left_anti"),
+      Seq("src_system_id", "dst_system_id"), $"cost", $"risk"))
+  }
 
   /** Stargate diff-sync (S10 + J4 + A3): drop `stale`, append `fresh`, one
     * survivor per `stargate_id`; then the gate edges are re-derived. */

@@ -1,6 +1,6 @@
 package graft
 
-import graft.graph.Dijkstra
+import graft.graph.{Dijkstra, GraphCatalog}
 import org.apache.spark.graphx.{Edge, Graph}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,6 +16,21 @@ class DijkstraSpec extends AnyFunSuite {
   private def graphOf(edges: Seq[(Long, Long, Double)]): Graph[Long, Double] =
     Graph.fromEdges(
       spark.sparkContext.parallelize(edges.map(e => Edge(e._1, e._2, e._3)), 2), 0L)
+
+  /** The projection of `edges`: a CSR snapshot at the default threshold, a
+    * GraphX graph at threshold 0. */
+  private def projectionOf(edges: Seq[(Long, Long, Double)],
+      threshold: Long = Dijkstra.DefaultLocalThreshold): Dijkstra.Projection =
+    Dijkstra.project(spark.createDataFrame(spark.sparkContext.parallelize(edges, 2))
+      .toDF("src", "dst", "w"), threshold)
+
+  /** The path on the projection of `edges` at `threshold`, which is
+    * released afterwards. */
+  private def pathOn(edges: Seq[(Long, Long, Double)], src: Long, dst: Long,
+      threshold: Long = Dijkstra.DefaultLocalThreshold): Option[(Double, Seq[Long])] = {
+    val p = projectionOf(edges, threshold)
+    try Dijkstra.autoPath(p, src, dst) finally p.release()
+  }
 
   /** Floyd-Warshall reference distances. */
   private def brute(edges: Seq[(Long, Long, Double)], src: Long): Map[Long, Double] = {
@@ -63,7 +78,7 @@ class DijkstraSpec extends AnyFunSuite {
     val edges = Seq(
       (0L, 1L, 1.0), (1L, 2L, 1.0), (2L, 5L, 1.0),
       (0L, 3L, 1.0), (3L, 4L, 1.0), (4L, 5L, 4.0))
-    val Some((cost, path)) = Dijkstra.autoPath(graphOf(edges), 0L, 5L)
+    val Some((cost, path)) = pathOn(edges, 0L, 5L)
     assert(cost === 3.0)
     assert(path.head === 0L && path.last === 5L)
     val edgeSet = edges.map(e => (e._1, e._2)).toSet
@@ -72,7 +87,7 @@ class DijkstraSpec extends AnyFunSuite {
 
   test("unreachable target → None (reference 404 semantics)") {
     val edges = Seq((0L, 1L, 1.0), (2L, 3L, 1.0))
-    assert(Dijkstra.autoPath(graphOf(edges), 0L, 3L).isEmpty)
+    assert(pathOn(edges, 0L, 3L).isEmpty)
   }
 
   test("ssspFromEdges: local and forced-distributed dispatch agree") {
@@ -88,31 +103,31 @@ class DijkstraSpec extends AnyFunSuite {
 
   test("directed traversal: no backwards shortcut") {
     val edges = Seq((0L, 1L, 1.0), (2L, 1L, 1.0))
-    assert(Dijkstra.autoPath(graphOf(edges), 0L, 2L).isEmpty)
+    assert(pathOn(edges, 0L, 2L).isEmpty)
   }
 
   test("autoPath: forced-distributed reconstruction matches local path") {
     val edges = Seq(
       (0L, 1L, 1.0), (1L, 2L, 1.0), (2L, 5L, 1.0),
       (0L, 3L, 1.0), (3L, 4L, 1.0), (4L, 5L, 4.0), (5L, 6L, 2.0))
-    val g = graphOf(edges)
-    val local = Dijkstra.autoPath(g, 0L, 6L)
-    // the edge list is collected once per graph instance
-    val (again, jobs) = JobCount(spark.sparkContext)(Dijkstra.autoPath(g, 0L, 6L))
-    assert(jobs === 0)
-    val dist = Dijkstra.autoPath(g, 0L, 6L, threshold = 0L)
+    // the build probes and collects; every route on the snapshot after it
+    // starts no job
+    val (p, buildJobs) = JobCount(spark.sparkContext)(projectionOf(edges))
+    assert(buildJobs > 0)
+    val (local, jobs) = JobCount(spark.sparkContext)(Dijkstra.autoPath(p, 0L, 6L))
+    val (again, againJobs) = JobCount(spark.sparkContext)(Dijkstra.autoPath(p, 0L, 6L))
+    assert(jobs === 0 && againJobs === 0)
+    val dist = pathOn(edges, 0L, 6L, threshold = 0L)
     assert(local === Some((5.0, Seq(0L, 1L, 2L, 5L, 6L))))
     assert(again === local)
     assert(dist === local)
-    // a new instance with other weights gets its own adjacency
-    val heavier = graphOf(edges.map { case (a, b, w) => (a, b, if (a == 1L && b == 2L) 9.0 else w) })
-    val (rerouted, coldJobs) = JobCount(spark.sparkContext)(Dijkstra.autoPath(heavier, 0L, 6L))
-    assert(coldJobs > 0) // the counter sees the first call's count + collect
+    // a new projection with other weights gets its own adjacency
+    val heavier = edges.map { case (a, b, w) => (a, b, if (a == 1L && b == 2L) 9.0 else w) }
+    val rerouted = pathOn(heavier, 0L, 6L)
     assert(rerouted === Some((8.0, Seq(0L, 3L, 4L, 5L, 6L))))
-    assert(Dijkstra.autoPath(heavier, 0L, 6L, threshold = 0L) === rerouted)
+    assert(pathOn(heavier, 0L, 6L, threshold = 0L) === rerouted)
     // unreachable stays None on the distributed path too
-    assert(Dijkstra.autoPath(graphOf(Seq((0L, 1L, 1.0), (2L, 3L, 1.0))),
-      0L, 3L, threshold = 0L).isEmpty)
+    assert(pathOn(Seq((0L, 1L, 1.0), (2L, 3L, 1.0)), 0L, 3L, threshold = 0L).isEmpty)
   }
 
   test("delta-stepping ≡ label-correcting Pregel on (dist, pred), across Δ") {
@@ -416,10 +431,7 @@ class DijkstraSpec extends AnyFunSuite {
     val unionEdges = graphs.zipWithIndex.flatMap { case ((_, _, es), k) =>
       es.map(e => Edge(e._1 + k * shift, e._2 + k * shift, e._3))
     }
-    val plans = graphs.map { case (ids, iso, es) =>
-      Graph(spark.sparkContext.parallelize((ids :+ iso).map(v => (v, 0L)), 2),
-        spark.sparkContext.parallelize(es.map(e => Edge(e._1, e._2, e._3)), 2), 0L)
-    }
+    val plans = graphs.map { case (_, _, es) => projectionOf(es) }
     val rounds = graphs.map(_._1.size + 1).max
     var pairs = 0
     for (r <- 0 until rounds) {
@@ -448,40 +460,56 @@ class DijkstraSpec extends AnyFunSuite {
     // and the public distributed entry point itself, on one pair per graph
     // for the first graphs
     for (k <- 0 until 12) {
-      val (ids, _, _) = graphs(k)
+      val (ids, _, es) = graphs(k)
       val (src, dst) = (ids.head, ids.last)
-      assert(Dijkstra.autoPath(plans(k), src, dst, threshold = 0L) ===
-        Dijkstra.autoPath(plans(k), src, dst), s"graph $k")
+      assert(pathOn(es, src, dst, threshold = 0L) === Dijkstra.autoPath(plans(k), src, dst),
+        s"graph $k")
     }
   }
 
+  // 10 reaches 1 and 2 at the same distance and the zero-weight pair 1 ⇄ 2
+  // makes each the other's min pred: no walk from 1 reaches 10
+  private val predCycle = Seq((10L, 1L, 1.0), (10L, 2L, 1.0), (1L, 2L, 0.0), (2L, 1L, 0.0))
+
   test("a zero-weight pred cycle fails the local walk instead of spinning") {
-    // 10 reaches 1 and 2 at the same distance and the zero-weight pair
-    // 1 ⇄ 2 makes each the other's min pred: no walk from 1 reaches 10
-    val edges = Seq((10L, 1L, 1.0), (10L, 2L, 1.0), (1L, 2L, 0.0), (2L, 1L, 0.0))
-    intercept[IllegalArgumentException](Dijkstra.autoPath(graphOf(edges), 10L, 1L))
+    intercept[IllegalArgumentException](pathOn(predCycle, 10L, 1L))
+  }
+
+  test("a zero-weight pred cycle fails the distributed walk at the first repeat") {
+    val p = projectionOf(predCycle, threshold = 0L)
+    try {
+      val (failed, jobs) = JobCount(spark.sparkContext) {
+        try { Dijkstra.autoPath(p, 10L, 1L); false }
+        catch { case _: IllegalArgumentException => true }
+      }
+      assert(failed)
+      assert(jobs <= 20, s"$jobs jobs")
+    } finally p.release()
   }
 
   test("a cold collect on one graph does not stall warm routes on another") {
+    import spark.implicits._
     implicit val ec: ExecutionContext = ExecutionContext.global
-    val warm = graphOf(Seq((0L, 1L, 1.0), (1L, 2L, 1.0)))
-    val want = Dijkstra.autoPath(warm, 0L, 2L)
+    val catalog = new GraphCatalog
+    def route(name: String, build: () => Dijkstra.Projection) =
+      catalog.withGraph(name, build)(Dijkstra.autoPath(_, 0L, 2L))
+    val want = route("warm", () => projectionOf(Seq((0L, 1L, 1.0), (1L, 2L, 1.0))))
     assert(want === Some((2.0, Seq(0L, 1L, 2L))))
     DijkstraSpec.entered = new CountDownLatch(1)
     DijkstraSpec.gate = new CountDownLatch(1)
-    // the cold graph's first job (its edge count) parks on the gate
+    // the cold projection's first job (its probe) parks on the gate
     val cold = Future {
-      val edges = spark.sparkContext.parallelize(Seq(Edge(0L, 1L, 1.0), Edge(1L, 2L, 3.0)), 1)
+      val edges = spark.sparkContext.parallelize(Seq((0L, 1L, 1.0), (1L, 2L, 3.0)), 1)
         .map { e =>
           DijkstraSpec.entered.countDown()
           DijkstraSpec.gate.await(60, TimeUnit.SECONDS)
           e
         }
-      Dijkstra.autoPath(Graph.fromEdges(edges, 0L), 0L, 2L)
+      route("cold", () => Dijkstra.project(edges.toDF("src", "dst", "w")))
     }
     try {
       assert(DijkstraSpec.entered.await(60, TimeUnit.SECONDS), "cold job never started")
-      assert(Await.result(Future(Dijkstra.autoPath(warm, 0L, 2L)), 10.seconds) === want)
+      assert(Await.result(Future(route("warm", () => fail("built"))), 10.seconds) === want)
     } finally DijkstraSpec.gate.countDown()
     assert(Await.result(cold, 60.seconds) === Some((4.0, Seq(0L, 1L, 2L))))
   }

@@ -2,8 +2,11 @@ package graft
 
 import graft.api.EveGraph
 import graft.fixtures.StarMap
+import graft.graph.{Dijkstra, GraphCatalog}
 import graft.store.EveStore
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
 
 /** End-to-end fixture tests over the FIXTURES.md mini star map: bootstrap →
   * routes, wormhole snapshot-replace, dedup, island 404 semantics. */
@@ -254,52 +257,58 @@ class EveGraphSpec extends AnyFunSuite {
     assert(!eng.catalog.drop("jump-risk"))
   }
 
+  /** A one-edge GraphX projection (threshold 0) of weight `w`; `released`
+    * counts its lease releases. */
+  private def oneEdge(w: Double, released: java.util.concurrent.atomic.AtomicInteger =
+      new java.util.concurrent.atomic.AtomicInteger): () => Dijkstra.GraphProjection = () =>
+    Dijkstra.project(spark.createDataFrame(Seq((1L, 2L, w))).toDF("src", "dst", "w"), 0L,
+      () => released.incrementAndGet()).asInstanceOf[Dijkstra.GraphProjection]
+
   test("graph catalog: pinned projection survives a mid-query refresh") {
-    import org.apache.spark.graphx.{Edge, Graph}
     import org.apache.spark.storage.StorageLevel
-    val cat = new graft.graph.GraphCatalog[Long, Double]
-    def build(w: Double): () => Graph[Long, Double] =
-      () => Graph.fromEdges(spark.sparkContext.parallelize(Seq(Edge(1L, 2L, w))), 0L)
-    val g0 = cat.getOrCreate("g", build(1.0))
+    val cat = new GraphCatalog
+    val released = new java.util.concurrent.atomic.AtomicInteger
+    val g0 = cat.getOrCreate("g", oneEdge(1.0, released)).asInstanceOf[Dijkstra.GraphProjection]
     val res = cat.withGraph("g", () => fail("projection must already exist")) { g =>
       assert(g eq g0)
-      cat.refresh("g", build(2.0)) // swap lands while the query is in flight
-      // retired from the catalog, but the pin keeps the snapshot cached —
-      // the rest of the query computes on consistent data
-      assert(g0.vertices.getStorageLevel !== StorageLevel.NONE)
-      assert(g0.edges.getStorageLevel !== StorageLevel.NONE)
-      g.edges.map(_.attr).sum()
+      cat.refresh("g", oneEdge(2.0)) // swap lands while the query is in flight
+      // retired from the catalog, but the pin keeps the snapshot cached and
+      // leased — the rest of the query computes on consistent data
+      assert(g0.graph.vertices.getStorageLevel !== StorageLevel.NONE)
+      assert(g0.graph.edges.getStorageLevel !== StorageLevel.NONE)
+      assert(released.get === 0)
+      Dijkstra.autoPath(g, 1L, 2L)
     }
-    assert(res === 1.0) // the in-flight query answered from its snapshot
-    // last pin released → the retired instance is unpersisted
-    assert(g0.vertices.getStorageLevel === StorageLevel.NONE)
-    assert(g0.edges.getStorageLevel === StorageLevel.NONE)
+    assert(res === Some((1.0, Seq(1L, 2L)))) // the in-flight query answered from its snapshot
+    // last pin released → the retired instance is unpersisted, its lease freed once
+    assert(g0.graph.vertices.getStorageLevel === StorageLevel.NONE)
+    assert(g0.graph.edges.getStorageLevel === StorageLevel.NONE)
+    assert(released.get === 1)
     // new queries see the refreshed projection, still cached
-    assert(cat.withGraph("g", () => fail("refreshed"))(_.edges.map(_.attr).sum()) === 2.0)
+    assert(cat.withGraph("g", () => fail("refreshed"))(Dijkstra.autoPath(_, 1L, 2L)) ===
+      Some((2.0, Seq(1L, 2L))))
     // drop retires an unpinned instance immediately
-    val g2 = cat.getOrCreate("g", () => fail("refreshed"))
+    val g2 = cat.getOrCreate("g", () => fail("refreshed")).asInstanceOf[Dijkstra.GraphProjection]
     assert(cat.drop("g"))
-    assert(g2.vertices.getStorageLevel === StorageLevel.NONE)
+    assert(g2.graph.vertices.getStorageLevel === StorageLevel.NONE)
   }
 
   test("graph catalog: concurrent refresh storm never hands a query an uncached snapshot") {
     // the lookup-to-pin race: a refresh can retire (and, at pins == 0,
-    // unpersist) a holder BETWEEN a reader's catalog lookup and its pin.
-    // tryPin refuses retired holders and withGraph re-fetches; with the
-    // old unconditional pin() this storm could observe a graph whose
-    // cache was already dropped (torn snapshot on the next superstep).
+    // release) a holder BETWEEN a reader's catalog lookup and its pin.
+    // tryPin refuses retired holders and withGraph re-fetches; with an
+    // unconditional pin this storm could observe a graph whose cache was
+    // already dropped (torn snapshot on the next superstep).
     // One-sided test: correct code can never fail it.
-    import org.apache.spark.graphx.{Edge, Graph}
     import org.apache.spark.storage.StorageLevel
-    val cat = new graft.graph.GraphCatalog[Long, Double]
-    def build(w: Double): () => Graph[Long, Double] =
-      () => Graph.fromEdges(spark.sparkContext.parallelize(Seq(Edge(1L, 2L, w))), 0L)
-    cat.getOrCreate("g", build(0.0))
+    val cat = new GraphCatalog
+    cat.getOrCreate("g", oneEdge(0.0))
     val problems = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val readers = (1 to 4).map(t => new Thread(() => {
       try {
         for (_ <- 0 until 20) {
-          cat.withGraph("g", build(-1.0)) { g =>
+          cat.withGraph("g", oneEdge(-1.0)) { p =>
+            val g = p.asInstanceOf[Dijkstra.GraphProjection].graph
             if (g.vertices.getStorageLevel == StorageLevel.NONE ||
               g.edges.getStorageLevel == StorageLevel.NONE)
               problems.add(s"reader $t pinned an unpersisted graph")
@@ -309,7 +318,7 @@ class EveGraphSpec extends AnyFunSuite {
       } catch { case e: Throwable => problems.add(s"reader $t: $e") }
     }))
     val refresher = new Thread(() => {
-      try for (i <- 1 to 20) cat.refresh("g", build(i.toDouble))
+      try for (i <- 1 to 20) cat.refresh("g", oneEdge(i.toDouble))
       catch { case e: Throwable => problems.add(s"refresher: $e") }
     })
     (readers :+ refresher).foreach(_.start())
@@ -403,7 +412,18 @@ class EveGraphSpec extends AnyFunSuite {
       deltas: Map[String, Map[String, Long]],
       afterSystems: Seq[graft.model.Jump],
       idsStorage: org.apache.spark.storage.StorageLevel,
+      systemsLeftPersisted: Set[Int],
+      firstRouteJobs: Int,
+      versionDirs: Map[String, (Long, Set[String])],
+      strayRemoved: Boolean,
+      aheadKept: Boolean,
       newcomerRoute: Option[Seq[String]])
+
+  private def versionDirs(table: java.nio.file.Path): Set[String] = {
+    val ls = java.nio.file.Files.list(table)
+    try ls.iterator().asScala.map(_.getFileName.toString).filter(_.matches("v\\d+")).toSet
+    finally ls.close()
+  }
 
   private lazy val churn: Churn = {
     import graft.model._
@@ -421,7 +441,8 @@ class EveGraphSpec extends AnyFunSuite {
         Some(Seq.empty), Some(Seq(gate.stargate_id))),
       StarMap.stargateResponses :+ gate,
       kills = StarMap.killSnapshots, jumps = StarMap.jumpSnapshots, sigs = sigs)
-    val eng = new EveGraph(storeDir())
+    val root = java.nio.file.Files.createTempDirectory("evestore-churn")
+    val eng = new EveGraph(new EveStore(spark, root.toString))
     eng.bootstrap(source)
     def gateRisks() = eng.store.read("jumps_gate").as[Jump].collect()
       .map(j => (j.src_system_id, j.dst_system_id) -> j.risk).toMap
@@ -435,17 +456,34 @@ class EveGraphSpec extends AnyFunSuite {
       val v1 = versions()
       Tables.map(t => t -> (v1(t) - v0(t))).toMap
     }
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     val systemsDelta = delta(eng.refreshSystems)
+    val systemsLeftPersisted = spark.sparkContext.getPersistentRDDs.keySet.toSet -- persisted
     val afterSystems = eng.store.jumps.collect().toSeq
     val idsStorage = churned.systemIds(spark).storageLevel
     val stargatesDelta = delta(eng.refreshStargates)
     val risksDelta = delta(eng.refreshRisks(_))
     val wormholesDelta = delta(eng.refreshWormholes)
+    // the first route on the projection the wormhole refresh rebuilt
+    val (_, firstRouteJobs) = JobCount(spark.sparkContext)(
+      eng.catalog.withGraph("system-map", () => fail("system-map missing"))(
+        Dijkstra.autoPath(_, StarMap.Jita, StarMap.Amarr)))
+    val dirs = Tables.map(t => t -> (eng.store.version(t).get, versionDirs(root.resolve(t)))).toMap
+    // a stray v1 (an orphan of a crash between a swap and its delete) and a
+    // directory ahead of the manifest, then one more systems write
+    val stray = java.nio.file.Files.createDirectories(root.resolve("systems").resolve("v1"))
+    java.nio.file.Files.writeString(stray.resolve("part-00000.parquet"), "stray")
+    val ahead = java.nio.file.Files.createDirectories(
+      root.resolve("systems").resolve(s"v${eng.store.version("systems").get + 10}"))
+    eng.refreshRisks(churned)
+    val (strayRemoved, aheadKept) = (!java.nio.file.Files.exists(stray), java.nio.file.Files.exists(ahead))
+    java.nio.file.Files.delete(ahead)
     Churn((before, after),
       after.keySet.filter(e => e._1 == StarMap.Turnur || e._2 == StarMap.Turnur),
       Map("systems" -> systemsDelta, "stargates" -> stargatesDelta,
         "risks" -> risksDelta, "wormholes" -> wormholesDelta),
-      afterSystems, idsStorage, eng.shortestRoute("Newcomer", "Jita"))
+      afterSystems, idsStorage, systemsLeftPersisted, firstRouteJobs, dirs, strayRemoved, aheadKept,
+      eng.shortestRoute("Newcomer", "Jita"))
   }
 
   test("each refresh writes every table it touches once") {
@@ -461,6 +499,28 @@ class EveGraphSpec extends AnyFunSuite {
 
   test("a systems refresh releases what it caches") {
     assert(churn.idsStorage === org.apache.spark.storage.StorageLevel.NONE)
+    // the id diff and the jumps frame are unpersisted before it returns
+    assert(churn.systemsLeftPersisted === Set.empty)
+  }
+
+  test("after bootstrap and one sync each table keeps only its current and previous version") {
+    for ((table, (current, dirs)) <- churn.versionDirs)
+      assert(dirs === Set(s"v$current", s"v${current - 1}"), table)
+  }
+
+  test("a write reclaims an orphaned old version and keeps a directory ahead of the manifest") {
+    assert(churn.strayRemoved)
+    assert(churn.aheadKept)
+  }
+
+  test("the first route on a projection rebuilt by a refresh starts no Spark job") {
+    assert(churn.firstRouteJobs === 0)
+  }
+
+  test("building the store's frames starts no Spark job (declared schemas)") {
+    val store = plain.store
+    val (_, jobs) = JobCount(spark.sparkContext) { store.systems; store.stargates; store.jumps }
+    assert(jobs === 0)
   }
 
   test("a systems refresh keeps one edge per (src, dst), the smallest by (cost, risk)") {
@@ -509,9 +569,44 @@ class EveGraphSpec extends AnyFunSuite {
       Some(Seq("Jita", "Thera", "Amarr")))
   }
 
-  test("above the local threshold, filtered lookups and the distributed search answer the same routes") {
-    val eng = new EveGraph(storeDir(), localThreshold = 0L)
+  /** The twin fixture above the local threshold: filtered lookups and
+    * GraphX projections. */
+  private lazy val distributedRoot = java.nio.file.Files.createTempDirectory("evestore-dist")
+  private lazy val distributed: EveGraph = {
+    val eng = new EveGraph(new EveStore(spark, distributedRoot.toString), localThreshold = 0L)
     eng.bootstrap(twinSource)
-    assert(branchQueries.map(answer(eng, _)) === twinAnswers)
+    eng
+  }
+
+  test("above the local threshold, filtered lookups and the distributed search answer the same routes") {
+    assert(branchQueries.map(answer(distributed, _)) === twinAnswers)
+  }
+
+  test("a GraphX projection keeps the jump versions it leased until it is released") {
+    val eng = distributed
+    val partitions = Seq("jumps_gate", "jumps_wormhole")
+    def current(t: String) = eng.store.version(t).get
+    eng.refreshJumpRisk()
+    val leased = partitions.map(t => t -> current(t)).toMap
+    val want = eng.safestRoute("Jita", "Amarr")
+    // two more writes of each partition put the leased versions below the
+    // previous one
+    eng.refreshStargates(twinSource)
+    eng.refreshStargates(twinSource)
+    eng.refreshWormholes(twinSource)
+    eng.refreshWormholes(twinSource)
+    val dirs = partitions.map(t => distributedRoot.resolve(t).resolve(s"v${leased(t)}"))
+    partitions.foreach(t => assert(current(t) >= leased(t) + 2, t))
+    assert(dirs.forall(java.nio.file.Files.exists(_)))
+    // evict the projection's cache: the route recomputes it from the leased files
+    eng.catalog.withGraph("jump-risk", () => fail("jump-risk missing"))(
+      _.asInstanceOf[Dijkstra.GraphProjection].graph.unpersist(blocking = true))
+    assert(eng.safestRoute("Jita", "Amarr") === want)
+    // the risk refresh retires the projection; the next write of each
+    // partition reclaims what it leased
+    eng.refreshRisks(twinSource)
+    eng.refreshStargates(twinSource)
+    eng.refreshWormholes(twinSource)
+    assert(dirs.forall(!java.nio.file.Files.exists(_)), dirs)
   }
 }
