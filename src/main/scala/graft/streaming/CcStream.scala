@@ -82,11 +82,7 @@ object CcStream {
     * nested nb² leaf-dir layout at 1.46–1.64× of flat on the triangle
     * lanes (write-side dominated, not amortizing with SF), and the same
     * layout served this store. Each consumer prunes the replica keyed by
-    * its own restriction; pre-replica stores keep serving (the candidate
-    * probe falls back to `labels`, still pruned via its legacy `pbc`
-    * column) and [[compact]] seeds the missing replica
-    * ([[Stores.compactReplicas]]); appends onto the old dual-key layout
-    * trip [[Stores]]' guard with the fold-through-highest migration. */
+    * its own restriction. */
   private[graft] val EdgeBuckets = Seq(Stores.Bucket("pbs", "src"))
   private[graft] val NodeBucket = Stores.Bucket("pbn", "node")
   private[graft] val CompBucket = Stores.Bucket("pbc", "component")
@@ -150,21 +146,15 @@ object CcStream {
       .select($"node")
   }
 
-  /** The component-restricted candidate rows of [[membersOf]] —
-    * replica-routed (round 12): reads the component-keyed `labelsc`
-    * replica; a pre-replica store serves it from `labels` (still pruned
-    * via the legacy nested `pbc` column when present, else the semi-join
-    * alone restricts). Split out so the spec can assert the routing and
-    * pruning on THIS frame's executed plan — inside [[membersOf]] it sits
-    * behind an eager localCheckpoint, which hides its scans from the
-    * final plan. */
+  /** The component-restricted candidate rows of [[membersOf]], read
+    * from the component-keyed `labelsc` replica. Split out so the spec
+    * can assert the pruning on THIS frame's executed plan — inside
+    * [[membersOf]] it sits behind an eager localCheckpoint, which hides
+    * its scans from the final plan. */
   private[graft] def candidateProbe(s: SparkSession, storeDir: String,
-      touchedComps: DataFrame): DataFrame = {
-    val candSub =
-      if (Stores.exists(s, s"$storeDir/labelsc")) "labelsc" else "labels"
-    Stores.readPruned(s, s"$storeDir/$candSub", CompBucket, touchedComps)
+      touchedComps: DataFrame): DataFrame =
+    Stores.readPruned(s, s"$storeDir/labelsc", CompBucket, touchedComps)
       .join(touchedComps, Seq("component"), "left_semi")
-  }
 
   /** LIVE symmetrized edges of the store prefix ≤ `batchId`, restricted
     * src-side to `nodes` (one column `node`) BEFORE the per-pair
@@ -178,8 +168,7 @@ object CcStream {
   private[graft] def liveEdgesRestricted(s: SparkSession, storeDir: String,
       batchId: Long, nodes: DataFrame): DataFrame = {
     import s.implicits._
-    val restricted = Stores.withOpDefault(
-        Stores.readPruned(s, s"$storeDir/edges", EdgeBuckets.head, nodes))
+    val restricted = Stores.readPruned(s, s"$storeDir/edges", EdgeBuckets.head, nodes)
       .filter($"batch" <= batchId)
       .join(nodes.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
     Stores.liveAfterDeletes(restricted, Seq("src", "dst"))
@@ -205,9 +194,7 @@ object CcStream {
     // of EVERY edge between the endpoints — the reference's wormhole
     // expiry granularity) is honored when present; an op-less batch is
     // all inserts, keeping every existing caller byte-compatible
-    val withOp =
-      if (batch.columns.contains("op")) batch.select($"src", $"dst", $"op")
-      else batch.select($"src", $"dst", lit(1).as("op"))
+    val withOp = Stores.withOpDefault(batch).select($"src", $"dst", $"op")
     Stores.writeBatch(
       withOp.union(withOp.select($"dst".as("src"), $"src".as("dst"), $"op")),
       batchId, s"$storeDir/edges", EdgeBuckets)
@@ -275,13 +262,9 @@ object CcStream {
     // node's freshest row, with tombstone-fresh nodes dropped entirely
     // (everything a tombstone shadowed folds away with it)
     Stores.fold(s, s"$storeDir/edges", throughBatch, EdgeBuckets)(raw =>
-      Stores.liveAfterDeletes(Stores.withOpDefault(raw), Seq("src", "dst"))
+      Stores.liveAfterDeletes(raw, Seq("src", "dst"))
         .withColumn("op", lit(1)))
-    // each label replica folds under ITS key's layout; a pre-replica
-    // store has no labelsc root — compactReplicas seeds it from the
-    // primary's folded rows so the candidate probe never silently
-    // misses history (the freshest-row stage is idempotent, per the
-    // compactReplicas contract)
+    // each label replica folds under ITS key's layout
     Stores.compactReplicas(s, storeDir, LabelReplicas, throughBatch)(src =>
       Stores.freshestPerKey(src, "node").filter($"component".isNotNull)
         .select($"node", $"component"))

@@ -109,30 +109,6 @@ object FunnelStream {
     * corpus-history shuffle (the plan this replaced; FunnelStreamSpec
     * pins the single-exchange shape). The touched-set semi-join
     * broadcasts, so no exchange exists upstream to reuse. */
-  /** Normalize a history read over a store that may hold PRE-±op rows
-    * (written before round 15, when events carried neither `op` nor
-    * `srcb`): default op to +1 ([[Stores.withOpDefault]], the family
-    * contract) and srcb to the row's own `batch` — the batch that wrote
-    * it, which is exactly what srcb records for rows written since.
-    * Without this, the documented migrate-by-compacting path throws on
-    * the missing columns, and a mixed read would silently DROP every
-    * legacy row at the `op === 1` liveness filter. (The mixed-root
-    * hazard itself — parquet's sampled schema choosing a legacy file and
-    * dropping the op column entirely — remains governed by the
-    * [[Stores.withOpDefault]] MIGRATION CONTRACT: fold-compact a legacy
-    * store once before appending ±op batches.) */
-  private def withProvenanceDefaults(df: DataFrame): DataFrame = {
-    val withOp = Stores.withOpDefault(df)
-    // cast: the `batch` PARTITION column is inferred (IntegerType for
-    // small ids) while written srcb is always LongType — an uncast
-    // default would stamp an INT32 srcb into the migration generation
-    // and wedge every later mixed read on a parquet type mismatch
-    val default = col("batch").cast(LongType)
-    if (!withOp.columns.contains("srcb"))
-      withOp.withColumn("srcb", default)
-    else withOp.withColumn("srcb", coalesce(col("srcb").cast(LongType), default))
-  }
-
   private def liveEvents(hist: DataFrame): DataFrame = {
     import hist.sparkSession.implicits._
     hist
@@ -173,9 +149,8 @@ object FunnelStream {
       storeDir: String): DataFrame = {
     val s = touched.sparkSession
     import s.implicits._
-    val hist = withProvenanceDefaults(
-      Stores.readPruned(s, s"$storeDir/events", UserBucket, touched)
-        .filter($"batch" <= batchId))
+    val hist = Stores.readPruned(s, s"$storeDir/events", UserBucket, touched)
+      .filter($"batch" <= batchId)
       .join(touched, Seq("user_id"), "left_semi")
       .select($"user_id", $"event_type", $"ts_us", $"op", $"srcb")
     touched
@@ -249,8 +224,7 @@ object FunnelStream {
     // retraction it post-dated. Retractions at or below `throughBatch`
     // fold away: every row they could kill is folded here with them.
     Stores.fold(s, s"$storeDir/events", throughBatch, Seq(UserBucket)) { src =>
-      withProvenanceDefaults(src)
-        .groupBy($"user_id", $"event_type", $"ts_us")
+      src.groupBy($"user_id", $"event_type", $"ts_us")
         .agg(max(struct($"srcb", $"op")).as("__m"))
         .filter($"__m.op" === 1)
         .select($"user_id", $"event_type", $"ts_us",

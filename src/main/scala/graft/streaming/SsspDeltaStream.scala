@@ -92,13 +92,9 @@ object SsspDeltaStream {
     * columns: the nested layout's nb² leaf dirs per batch cost the
     * sssp_delta lane 1.14–1.40× of flat in MAINTAB_r12, write-side
     * dominated (the [[TriangleStream]] measurement and fix, applied to
-    * this store's pair). Pre-replica stores keep serving — the cone
-    * probe falls back to `dists`, still pruned via its old pbp column —
-    * and [[compact]] seeds the missing replica; appends onto the old
-    * layout trip [[Stores]]' guard with the fold-through-highest
-    * migration. Tombstones' null pred hashes to a fixed bucket — they
-    * are only ever read back node-restricted, so the pred replica never
-    * has to find them. */
+    * this store's pair). Tombstones' null pred hashes to a fixed
+    * bucket — they are only ever read back node-restricted, so the pred
+    * replica never has to find them. */
   private[graft] val EventBucket = Stores.Bucket("pbs", "src")
   private[graft] val DistNodeBucket = Stores.Bucket("pbn", "node")
   private[graft] val DistPredBucket = Stores.Bucket("pbp", "pred")
@@ -170,17 +166,12 @@ object SsspDeltaStream {
     Stores.writeBatch(events, batchId, s"$storeDir/events", Seq(EventBucket))
     // one store frame each per batch, shared across rounds (file index
     // resolved once — per-round cost is a restricted scan, not a
-    // listing); the cone probe gets the pred-keyed replica, falling back
-    // to the node-keyed primary for pre-replica stores (still pruned
-    // there via the legacy pbp column when present)
-    val distStore =
+    // listing); the cone probe gets the pred-keyed replica
+    val (distStore, coneStore) =
       if (Stores.exists(s, s"$storeDir/dists"))
-        Some(Stores.read(s, s"$storeDir/dists").filter($"batch" < batchId))
-      else None
-    val coneStore =
-      if (Stores.exists(s, s"$storeDir/distsp"))
-        Some(Stores.read(s, s"$storeDir/distsp").filter($"batch" < batchId))
-      else distStore
+        (Some(Stores.read(s, s"$storeDir/dists").filter($"batch" < batchId)),
+          Some(Stores.read(s, s"$storeDir/distsp").filter($"batch" < batchId)))
+      else (None, None)
     val eventsDf = Stores.read(s, s"$storeDir/events").filter($"batch" <= batchId)
 
     // ---- damaged cone: tree edge deleted, then tree descendants ----
@@ -313,10 +304,7 @@ object SsspDeltaStream {
     Stores.fold(s, s"$storeDir/events", throughBatch, Seq(EventBucket))(src =>
       Stores.liveAfterDeletes(src, Seq("src", "dst"), Seq("w"))
         .withColumn("op", lit(1)))
-    // each replica folds under ITS key's layout; a pre-replica store has
-    // no distsp root — compactReplicas seeds it from the primary's
-    // folded rows so the cone probe never silently misses history (the
-    // freshest-row stage is idempotent, per the compactReplicas contract)
+    // each replica folds under ITS key's layout
     Stores.compactReplicas(s, storeDir, DistReplicas, throughBatch)(src =>
       Stores.freshestPerKey(src, "node").filter($"dist".isNotNull)
         .select($"node", $"dist", $"pred"))

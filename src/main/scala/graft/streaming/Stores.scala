@@ -23,6 +23,12 @@ import org.apache.spark.sql.types.StructType
   * freshest-row precedence ([[freshestPerKey]]) and the layout columns
   * ([[Bucket]], [[Carried]]).
   *
+  * ONE LAYOUT PER STORE: every reader reads exactly the layout its writer
+  * writes. A pruned read over a frame without its bucket column, or a
+  * consumer whose replica root is absent, fails loudly instead of
+  * serving some other layout's rows; an op-less INPUT batch is all
+  * inserts ([[withOpDefault]]), but every stored row carries its op.
+  *
   * ATOMICITY (round 10): the round-9 fold wrote the staging generation
   * into the live root and only then deleted its sources — any reader in
   * that window saw BOTH and, for SUM-semantics stores (TriangleStream's
@@ -155,25 +161,16 @@ private[graft] object Stores {
   // <pb> is a deterministic hash bucket of a restriction key; a
   // restricted read turns its (delta-sized) key set into ≤ nb bucket ids
   // and pushes them as a PARTITION filter, so planning prunes the
-  // listing and scan to the touched buckets. Dual-keyed stores (labels:
-  // node AND component) carry one bucket column per key and prune on
-  // whichever the consumer restricts.
+  // listing and scan to the touched buckets. A relation probed by two
+  // keys is kept as two single-key replicas (see the replica note below).
   //
   // SIZING — the scale-free part is the MECHANISM (shared hash,
   // partition filter, plan-asserted pruning), NOT the leaf-directory
   // count, which a deployment must budget explicitly: one batch writes
-  // up to Π nb_i leaf directories (nb for a single-key store, nb² for a
-  // dual-keyed one — the keys NEST). With B live batches between
-  // compactions the store holds ≤ (B + generations) · Π nb_i leaf dirs,
-  // so the listing bill is bounded by the COMPACTION CADENCE, and nb_i
-  // must be sized jointly: hold Π nb_i at or below a leaf budget (a few
-  // × the cluster's task count — e.g. dual keys at 32×32 ≈ 10³, NOT
-  // 256×256 ≈ 65k, which multiplies into a small-files problem no
-  // cadence repairs). A deployment needing hundreds of buckets on BOTH
-  // keys of one store should split it into two single-key replicas (2×
-  // storage, nb dirs each, same per-consumer pruning) instead of
-  // squaring the leaf count. At the local test scale NumBuckets = 8
-  // keeps Π nb_i ≤ 64. MAINTAB_r12 measures what the layout itself
+  // up to nb leaf directories per store, and with B live batches between
+  // compactions a store holds ≤ (B + generations) · nb leaf dirs, so the
+  // listing bill is bounded by the COMPACTION CADENCE. At the local test
+  // scale NumBuckets = 8. MAINTAB_r12 measures what the layout itself
   // costs per batch at bench scale (write repartition + extra leaf dirs
   // + per-read bucket-id action) against the flat r10 layout.
   // ---------------------------------------------------------------------
@@ -344,25 +341,25 @@ private[graft] object Stores {
     * (the SSSP relaxation loops): the frame's file index is listed once,
     * and each round's bucket-id set still reaches the scan as a
     * PARTITION filter at that action's planning. A frame without the
-    * bucket column (a legacy layout, or a spec's hand-built fixture)
-    * falls back unfiltered. */
-  def pruneTo(df: DataFrame, b: Bucket, keys: DataFrame): DataFrame =
-    if (!df.columns.contains(b.pbCol)) df
-    else {
-      val ids = bucketIdsOf(keys, b)
-      // a restriction touching EVERY bucket prunes nothing — skip the
-      // filter so planning doesn't carry a vacuous IN over the store
-      if (ids.size >= b.nb) df
-      else df.filter(col(b.pbCol).isInCollection(ids))
-    }
+    * bucket column is not the store its writer wrote — it fails loudly,
+    * whatever `keys` holds. */
+  def pruneTo(df: DataFrame, b: Bucket, keys: DataFrame): DataFrame = {
+    require(df.columns.contains(b.pbCol),
+      s"bucket pruning on '${b.pbCol}': the store frame has no '${b.pbCol}' " +
+        s"column (columns [${df.columns.mkString(", ")}]) — it was not written " +
+        s"bucketed on '${b.keyCol}'; rebuild the store from its input")
+    val ids = bucketIdsOf(keys, b)
+    // a restriction touching EVERY bucket prunes nothing — skip the
+    // filter so planning doesn't carry a vacuous IN over the store
+    if (ids.size >= b.nb) df
+    else df.filter(col(b.pbCol).isInCollection(ids))
+  }
 
   /** [[read]] pruned to the buckets the restriction `keys` can live in:
     * the bucket ids become a PARTITION filter, so the scan lists and
     * reads only the touched buckets' files — the file-footprint half of
     * restriction-first (round 10 landed the shuffle half; the caller's
-    * semi-join still applies, pruning is a superset filter). A store
-    * without the bucket column (a legacy layout, or a spec's hand-built
-    * fixture) falls back to the unpruned read. */
+    * semi-join still applies, pruning is a superset filter). */
   def readPruned(s: SparkSession, path: String, b: Bucket,
       keys: DataFrame): DataFrame =
     pruneTo(read(s, path), b, keys)
@@ -382,9 +379,7 @@ private[graft] object Stores {
   // trade: write the relation TWICE, each copy bucketed on ONE key (2·nb
   // linear leaf dirs), and point each consumer at the replica keyed by
   // ITS restriction. The helpers below are the shared write/compact
-  // halves TriangleStream, SsspDeltaStream and CcStream each hand-rolled
-  // first (three already-diverging copies of the seed rule was the same
-  // rot path the fold unification closed in round 9).
+  // halves of TriangleStream, SsspDeltaStream and CcStream.
   // ---------------------------------------------------------------------
 
   /** Write one micro-batch into EVERY replica of a dual single-key
@@ -392,23 +387,26 @@ private[graft] object Stores {
     * own key. Pass a MATERIALIZED frame (localCheckpoint/cache): the plan
     * executes once per replica.
     *
-    * HALF-MIGRATED-STATE GUARD (round 13, review finding): a crash in
-    * [[compactReplicas]] between the primary's fold and the seed write
-    * leaves a replica root ABSENT while the primary holds folded history
-    * — an append here would then CREATE the replica containing only this
-    * batch, and existence-based consumer routing would silently serve it
-    * missing every folded row (wrong results, not an error — the layout
-    * guards can't catch it because each root's layout is internally
-    * consistent). So: a non-primary replica that is absent while the
-    * primary holds ANY rows below `batchId` fails the append loudly with
-    * the repair (re-run the store's compact — [[compactReplicas]] seeds
-    * absent replicas). The legitimate absent-replica states pass: a
-    * fresh store (primary absent too), redelivery of the crashed FIRST
-    * batch (primary holds only `batch = batchId`, rewritten by this
-    * replay), and a primary whose content folded to zero rows (nothing
-    * to miss — this append correctly starts the replica). Costs one
-    * existence probe per non-primary replica per batch; the emptiness
-    * read runs only in the rare absent-replica case. */
+    * The primary (`replicas.head`) is written LAST. Every consumer gates
+    * its replica reads on the primary's existence, so a crash between
+    * the writes leaves either a store whose primary is still absent
+    * (redelivery treats it as fresh) or one whose replicas already hold
+    * the crashed batch (every in-batch read is prefix-bounded or
+    * over-approximating, and redelivery rewrites the batch in every
+    * copy). A present primary therefore implies present replicas.
+    *
+    * ABSENT-REPLICA GUARD (round 13): a non-primary replica root that is
+    * absent while the primary holds rows below `batchId` was removed by
+    * something outside the maintainer. An append there would CREATE the
+    * replica holding only this batch, and its consumer would silently
+    * serve it missing every earlier row (the layout guards cannot catch
+    * it: each root's layout is internally consistent). So that state
+    * fails the append loudly; the store must be rebuilt from its input.
+    * An append that cannot create a short replica passes: a fresh store
+    * (primary absent too), a primary holding no row below `batchId`, or
+    * one whose content folded to zero rows. Costs one existence probe per
+    * non-primary replica per batch; the emptiness read runs only in the
+    * rare absent-replica case. */
   def writeReplicaBatch(df: DataFrame, batchId: Long, storeDir: String,
       replicas: Seq[(String, Bucket)]): Unit = {
     val s = df.sparkSession
@@ -421,52 +419,21 @@ private[graft] object Stores {
         throw new IllegalStateException(
           s"writeReplicaBatch($storeDir): replica(s) ${missing.mkString(", ")} " +
             s"absent while the primary '${replicas.head._1}' holds history below " +
-            s"batch $batchId — appending would create a replica missing every " +
-            "folded/prior row, which existence-based consumer routing would then " +
-            "silently serve. A crashed compactReplicas left the seed unwritten: " +
-            "re-run the store's compact() to completion (it seeds absent " +
-            "replicas from the primary's folded rows), then resume ingest.")
+            s"batch $batchId — the maintainer always writes every replica, so the " +
+            "store was changed outside it, and appending would create a replica " +
+            "missing every prior row. Rebuild the store from its input.")
     }
-    replicas.foreach { case (sub, b) =>
+    (replicas.tail :+ replicas.head).foreach { case (sub, b) =>
       writeBatch(df, batchId, s"$storeDir/$sub", Seq(b)) }
   }
 
   /** Compact a dual single-key replica relation: [[fold]] EACH replica
-    * under its own key's layout with the same `stage` semantics, then
-    * SEED every replica still absent — a store predating the replica
-    * split — from the FIRST listed replica's folded surviving rows ≤
-    * `throughBatch`, written at id = `throughBatch`. Every prefix read
-    * (`batch < upTo` with `upTo > throughBatch`) then sees exactly the
-    * primary's folded content, while a crashed in-flight batch >
-    * `throughBatch` is excluded (its redelivery rewrites all replicas).
-    * `stage` must be IDEMPOTENT (stage ∘ stage = stage): the seed path
-    * re-applies it to already-folded rows — the family's liveness
-    * resolutions and freshest-row folds all are. An empty seed writes
-    * nothing (a zero-partition overwrite would wedge the root); the
-    * replica stays absent and reads keep falling back to the primary —
-    * consistent either way. CRASH WINDOW: a death between the primary's
-    * fold and a seed write leaves the replica absent while the primary
-    * holds folded history — [[writeReplicaBatch]]'s half-migrated-state
-    * guard refuses the next append in that state (re-running this
-    * compact writes the seed and repairs it), so the window can no
-    * longer produce a silently incomplete replica. */
+    * under its own key's layout with the same `stage` semantics. */
   def compactReplicas(s: SparkSession, storeDir: String,
       replicas: Seq[(String, Bucket)], throughBatch: Long)(
-      stage: DataFrame => DataFrame): Unit = {
+      stage: DataFrame => DataFrame): Unit =
     replicas.foreach { case (sub, b) =>
       fold(s, s"$storeDir/$sub", throughBatch, Seq(b))(stage) }
-    val primary = s"$storeDir/${replicas.head._1}"
-    if (!exists(s, primary)) return
-    replicas.tail.foreach { case (sub, b) =>
-      if (!exists(s, s"$storeDir/$sub")) {
-        val rows = stage(read(s, primary).filter(col("batch") <= throughBatch))
-          .cache()
-        if (!rows.isEmpty)
-          writeBatch(rows, throughBatch, s"$storeDir/$sub", Seq(b))
-        rows.unpersist(blocking = false)
-      }
-    }
-  }
 
   /** THE family's freshest-row precedence, in one place (the round-10
     * review counted eleven hand-rolled copies of this window across the
@@ -488,17 +455,9 @@ private[graft] object Stores {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** `df` with a guaranteed ±op column: a store written before its
-    * maintainer's ±op era carries none — those rows are all inserts.
-    * A missing column is defaulted to +1; a present-but-null op (a
-    * schema-merged read over mixed generations) likewise — without the
-    * default, an `op === 1` liveness filter silently drops every legacy
-    * row. MIGRATION CONTRACT: a legacy store must be [[fold]]-compacted
-    * ONCE before ±op batches are appended (the fold stage normalizes
-    * every surviving row to +1) — parquet's sampled-schema read over a
-    * root mixing op-less and op-bearing files is otherwise ambiguous
-    * about which files keep their op values. CcDeltaSpec pins the
-    * compact-then-± path. */
+  /** An input batch with a guaranteed ±op column: a batch with no `op`
+    * column is all inserts, and so is a row whose `op` is null (a
+    * file-source read makes every column nullable). */
   def withOpDefault(df: DataFrame): DataFrame =
     if (!df.columns.contains("op")) df.withColumn("op", lit(1))
     else df.withColumn("op", coalesce(col("op"), lit(1)))
@@ -583,6 +542,13 @@ private[graft] object Stores {
           stale.map(_._1).toSeq, tmps.toSeq)
       } catch {
         case e: java.io.FileNotFoundException =>
+          // an absent root is no listing race: fail at once, saying what
+          // the absence means for a maintained store
+          if (!fs.exists(root))
+            throw new java.io.FileNotFoundException(s"no store at $root (a " +
+              "replica is written before its primary, so one absent beside " +
+              "its primary was removed outside the maintainer: rebuild the " +
+              "store from its input)")
           attempt += 1
           if (attempt >= 5) throw e
       }
@@ -600,9 +566,11 @@ private[graft] object Stores {
   }
 
   /** The store's rows at its live batch set — the one sanctioned read
-    * path over a folded store (see the atomicity note above). The caller
-    * is responsible for the root's existence (every caller already
-    * guards with its typed-empty-frame fallback). */
+    * path over a folded store (see the atomicity note above). An absent
+    * root fails: a caller serving a never-written store guards its
+    * primary with a typed empty frame, and reads a replica only once its
+    * primary exists, which [[writeReplicaBatch]]'s primary-last order
+    * makes imply the replica exists. */
   def read(s: SparkSession, path: String): DataFrame = {
     val root = new Path(path)
     val live = liveBatches(fsOf(s, root), root)

@@ -109,11 +109,7 @@ object TriangleStream {
     * deployment can size nb to hundreds without squaring the leaf
     * count), and each consumer prunes the replica keyed by ITS
     * restriction. Storage doubles for delta-sized relations — the
-    * standard index-replica trade. Reads fall back to the primary copy
-    * (pruned if it still carries the old dual-key columns, else
-    * unpruned-but-semi-joined) when a replica is absent, so pre-replica
-    * stores keep serving; APPENDS to them trip [[Stores]]' layout guard
-    * with the fold-through-highest migration. */
+    * standard index-replica trade. */
   private[graft] val PairSuBucket = Stores.Bucket("pbsu", "su")
   private[graft] val PairPBucket = Stores.Bucket("pbp", "p")
   private[graft] val EdgeABucket = Stores.Bucket("pba", "a")
@@ -123,33 +119,23 @@ object TriangleStream {
   private[graft] val EdgeReplicas =
     Seq("edges" -> EdgeABucket, "edgesb" -> EdgeBBucket)
 
-  private def exists(s: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** RAW ±pair rows of store batches `< upTo` — a LAZY scan, deliberately
     * not resolved or materialized: every consumer restricts it with a
     * semi/anti join FIRST and resolves per-pair liveness on the
     * restricted slice ([[livePairs]] commutes with a key-subset
     * restriction), so no batch ever pays a corpus-wide shuffle (review
     * finding: the previous whole-store distinct + localCheckpoint made
-    * every batch corpus-sized). Legacy op-less rows default to inserts
-    * ([[Stores.withOpDefault]]). */
-  private def rawPairsBefore(s: SparkSession, storeDir: String, upTo: Long,
+    * every batch corpus-sized). su-keyed probes read `pairs`, p-keyed
+    * probes the `pairsp` replica. */
+  private[graft] def rawPairsBefore(s: SparkSession, storeDir: String, upTo: Long,
       b: Stores.Bucket, keys: DataFrame): DataFrame = {
     import s.implicits._
-    // replica routing: su-keyed probes read `pairs`, p-keyed probes the
-    // `pairsp` replica; a store predating the replica split serves every
-    // probe from `pairs` (readPruned still prunes it when the old
-    // dual-key bucket column is present, else the semi-join alone
-    // restricts — correct, just unpruned)
-    val sub = if (b == PairPBucket && exists(s, s"$storeDir/pairsp")) "pairsp" else "pairs"
-    if (!exists(s, s"$storeDir/pairs"))
+    val sub = if (b == PairPBucket) "pairsp" else "pairs"
+    if (!Stores.exists(s, s"$storeDir/pairs"))
       s.emptyDataFrame.select(lit(0L).as("p"), lit(0L).as("su"),
         lit(1).as("op"), lit(0L).as("batch")).limit(0)
     else
-      Stores.withOpDefault(Stores.readPruned(s, s"$storeDir/$sub", b, keys))
+      Stores.readPruned(s, s"$storeDir/$sub", b, keys)
         .filter($"batch" < upTo)
         .select($"p", $"su", $"op", $"batch")
   }
@@ -175,17 +161,15 @@ object TriangleStream {
   private[graft] def edgesTouching(s: SparkSession, storeDir: String, upTo: Long,
       endpoints: DataFrame): DataFrame = {
     import s.implicits._
-    if (!exists(s, s"$storeDir/edges"))
+    if (!Stores.exists(s, s"$storeDir/edges"))
       s.emptyDataFrame.select(lit(0L).as("a"), lit(0L).as("b")).limit(0)
     else {
       // per-branch replica pruning: the a-side branch reads the a-keyed
       // copy, the b-side branch its `edgesb` replica — each pruned read
-      // lists only its side's touched buckets of its own copy (fallback
-      // for pre-replica stores: see rawPairsBefore)
-      val bSub = if (exists(s, s"$storeDir/edgesb")) "edgesb" else "edges"
+      // lists only its side's touched buckets of its own copy
       val rawA = Stores.readPruned(s, s"$storeDir/edges", EdgeABucket, endpoints)
         .filter($"batch" < upTo)
-      val rawB = Stores.readPruned(s, s"$storeDir/$bSub", EdgeBBucket, endpoints)
+      val rawB = Stores.readPruned(s, s"$storeDir/edgesb", EdgeBBucket, endpoints)
         .filter($"batch" < upTo)
       val restricted = rawA
         .join(endpoints.withColumnRenamed("n", "a"), Seq("a"), "left_semi")
@@ -285,9 +269,7 @@ object TriangleStream {
     // projection machinery as the cap-crossing removals — a withdrawal
     // can destroy edges and triangles, and (symmetrically) can ADD them
     // by dropping a supplier's degree back under the cap.
-    val withOp =
-      if (batch.columns.contains("op")) batch.select($"p", $"su", $"op")
-      else batch.select($"p", $"su", lit(1).as("op"))
+    val withOp = Stores.withOpDefault(batch).select($"p", $"su", $"op")
     val bIns = withOp.filter($"op" === 1)
       .select($"p", $"su").distinct().localCheckpoint()
     // insert wins same-batch ties (the family rule): a pair both deleted
@@ -380,7 +362,7 @@ object TriangleStream {
     * least one triangle, exact BIGINT counts). */
   def snapshot(s: SparkSession, storeDir: String): DataFrame = {
     import s.implicits._
-    if (!exists(s, s"$storeDir/counts"))
+    if (!Stores.exists(s, s"$storeDir/counts"))
       s.emptyDataFrame.select(lit(0L).as("part"), lit(0L).as("n_triangles")).limit(0)
     else Stores.read(s, s"$storeDir/counts")
       .groupBy($"part").agg(sum($"delta").cast("long").as("n_triangles"))
@@ -405,13 +387,9 @@ object TriangleStream {
     * keep non-zero per-part nets. One compactor at a time. */
   def compact(s: SparkSession, storeDir: String, throughBatch: Long): Unit = {
     import s.implicits._
-    // each replica folds under ITS key's layout; a pre-replica store has
-    // no pairsp/edgesb roots — compactReplicas seeds each from its
-    // primary's folded rows so the p/b-keyed probes never silently miss
-    // history (both stages are idempotent, per the compactReplicas
-    // contract: liveness resolution and the net-positive fold)
+    // each replica folds under ITS key's layout
     Stores.compactReplicas(s, storeDir, PairReplicas, throughBatch)(raw =>
-      livePairs(Stores.withOpDefault(raw)).select($"p", $"su", lit(1).as("op")))
+      livePairs(raw).select($"p", $"su", lit(1).as("op")))
     Stores.compactReplicas(s, storeDir, EdgeReplicas, throughBatch)(
       _.groupBy($"a", $"b").agg(sum($"op").as("net"))
         .filter($"net" > 0).select($"a", $"b", lit(1).as("op")))

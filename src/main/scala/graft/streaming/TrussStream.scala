@@ -101,14 +101,9 @@ object TrussStream {
     // orientation-normalize BEFORE anything keyed sees the pair: (b, a)
     // arrivals must address the same edge row and the same liveness
     // history as (a, b)
-    val normalized = (
-      if (batch.columns.contains("op"))
-        batch.select(least($"a", $"b").as("src"),
-          greatest($"a", $"b").as("dst"), $"op")
-      else
-        batch.select(least($"a", $"b").as("src"),
-          greatest($"a", $"b").as("dst"), lit(1).as("op"))
-    ).localCheckpoint()
+    val normalized = Stores.withOpDefault(batch)
+      .select(least($"a", $"b").as("src"), greatest($"a", $"b").as("dst"), $"op")
+      .localCheckpoint()
     CcStream.processBatch(normalized, batchId, ccDir(storeDir))
     val touched = normalized.select($"src".as("node"))
       .union(normalized.select($"dst")).distinct().localCheckpoint()

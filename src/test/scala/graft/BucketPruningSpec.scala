@@ -29,6 +29,11 @@ class BucketPruningSpec extends AnyFunSuite {
     case other => other.children.flatMap(scans)
   }
 
+  private def rm(f: java.io.File): Unit = {
+    if (f.isDirectory) f.listFiles().foreach(rm)
+    f.delete()
+  }
+
   private def parquetFilesUnder(dir: String): Long = {
     import scala.jdk.CollectionConverters._
     java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
@@ -132,48 +137,15 @@ class BucketPruningSpec extends AnyFunSuite {
     val (lf, lp) = scanStats(labs, "/labels", Set("pbn"))
     assert(lp && lf < total,
       s"post-compaction labelsOf must stay pruned (read $lf of $total)")
+    // the candidate probe still prunes its own folded labelsc replica
+    val probe = CcStream.candidateProbe(spark, store, Seq(5L).toDF("component"))
+    val (cf, cp) = scanStats(probe, "/labelsc", Set("pbc"))
+    val totalC = parquetFilesUnder(s"$store/labelsc")
+    assert(cp && cf < totalC,
+      s"post-compaction candidate probe must stay pruned on pbc (read $cf of $totalC)")
     val after = CcStream.snapshot(spark, store).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(after === before, "compaction changed the served labels")
-  }
-
-  test("CcStream: replica-less stores fall back, and compaction seeds labelsc") {
-    import spark.implicits._
-    val store = tmp("bprune-cc-seed")
-    CcStream.processBatch(
-      (1L to 120L).map(i => (i, i + 1000L)).toDF("src", "dst"), 0L, store)
-    CcStream.processBatch(
-      (121L to 200L).map(i => (i, i + 1000L)).toDF("src", "dst"), 1L, store)
-    val expect = CcStream.membersOf(spark, store, oneNode(5L))
-      .collect().map(_.getLong(0)).toSet
-    assert(expect === Set(5L, 1005L))
-    // simulate a store predating the replica split: drop the
-    // component-keyed replica — the candidate probe must fall back to
-    // the node-keyed primary, semi-join-restricted (correct, unpruned)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    rm(new java.io.File(s"$store/labelsc"))
-    assert(CcStream.membersOf(spark, store, oneNode(5L))
-        .collect().map(_.getLong(0)).toSet === expect,
-      "replica-less fallback must serve identically")
-    // compaction seeds the missing replica from the primary's folded
-    // rows; the candidate probe returns to its own pruned copy
-    CcStream.compact(spark, store, throughBatch = 1L)
-    assert(Stores.exists(spark, s"$store/labelsc"),
-      "compact must seed the missing labelsc replica")
-    // assert on the probe frame, not membersOf — the checkpoint inside
-    // membersOf hides the replica scan from the final plan
-    val probe = CcStream.candidateProbe(spark, store,
-      Seq(5L).toDF("component"))
-    val (sf2, sp2) = scanStats(probe, "/labelsc", Set("pbc"))
-    assert(sp2, "the seeded replica's candidate probe must prune on pbc")
-    assert(sf2 < parquetFilesUnder(s"$store/labelsc"),
-      "the seeded replica's candidate probe must read fewer files than the replica holds")
-    assert(CcStream.membersOf(spark, store, oneNode(5L))
-        .collect().map(_.getLong(0)).toSet === expect,
-      "the seeded replica must serve the same membership")
   }
 
   test("TriangleStream: edgesTouching prunes each branch on its endpoint replica") {
@@ -197,17 +169,6 @@ class BucketPruningSpec extends AnyFunSuite {
       s"edgesTouching read $f files — not less than the replicas' $totalEdgeFiles")
     assert(et.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       === Set((4L, 5L), (5L, 6L)))
-    // a pre-replica (round-11) store keeps serving: drop the replicas and
-    // the b-branch falls back to the a-keyed copy, semi-join-restricted
-    val fs = new java.io.File(s"$store/edgesb")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    rm(fs); rm(new java.io.File(s"$store/pairsp"))
-    val et2 = TriangleStream.edgesTouching(spark, store, 5L, Seq(5L).toDF("n"))
-    assert(et2.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      === Set((4L, 5L), (5L, 6L)), "replica-less fallback must serve identically")
   }
 
   test("SsspStream: dist lookups and relaxation edge reads prune to frontier buckets") {
@@ -417,42 +378,117 @@ class BucketPruningSpec extends AnyFunSuite {
     val replicas = Seq("ra" -> Stores.Bucket("pba", "a"), "rb" -> Stores.Bucket("pbb", "b"))
     val rows0 = (1L to 40L).map(i => (i, i + 100L)).toDF("a", "b")
     Stores.writeReplicaBatch(rows0, 0L, store, replicas)
-    Stores.compactReplicas(spark, store, replicas, throughBatch = 0L)(df =>
-      df.select($"a", $"b"))
-    // simulate the compactReplicas crash window: primary folded, seed
-    // never written — the replica root vanishes while the primary holds
-    // the folded generation
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
+    // a replica removed outside the maintainer while the primary holds
+    // batch 0
     rm(new java.io.File(s"$store/rb"))
     // the next append must FAIL LOUDLY: landing it would create `rb`
-    // holding only batch 1, and existence-based routing would silently
-    // serve a replica missing all folded history
+    // holding only batch 1, a replica missing every earlier row
     val ex = intercept[IllegalStateException] {
       Stores.writeReplicaBatch(Seq((50L, 150L)).toDF("a", "b"), 1L, store, replicas)
     }
-    assert(ex.getMessage.contains("compact"),
-      "the rejection must point at the compactReplicas repair")
-    // the documented repair: re-run the compaction — it seeds the absent
-    // replica from the primary's folded rows; ingest then resumes
-    Stores.compactReplicas(spark, store, replicas, throughBatch = 0L)(df =>
-      df.select($"a", $"b"))
-    assert(Stores.exists(spark, s"$store/rb"), "re-run compact must seed rb")
-    Stores.writeReplicaBatch(Seq((50L, 150L)).toDF("a", "b"), 1L, store, replicas)
-    val served = Stores.read(spark, s"$store/rb").select($"a", $"b")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(served === (rows0.collect().map(r => (r.getLong(0), r.getLong(1))).toSet + ((50L, 150L))),
-      "the repaired replica must hold the folded history plus the resumed batch")
-    // legitimate absent-replica state: redelivery of a crashed FIRST
-    // batch (primary holds only batch = batchId) must pass — the replay
-    // rewrites both copies
+    assert(ex.getMessage.contains("rb") && ex.getMessage.contains("Rebuild"),
+      s"the rejection must name the absent replica and the rebuild, got: ${ex.getMessage}")
+    // an append that cannot create a short replica passes: a primary
+    // holding no row below the batch (only `batch = batchId`) — the
+    // replay rewrites both copies
     val fresh = tmp("bprune-seedcrash-fresh")
     Stores.writeBatch(rows0, 0L, s"$fresh/ra", Seq(replicas.head._2))
     Stores.writeReplicaBatch(rows0, 0L, fresh, replicas)
     assert(Stores.read(spark, s"$fresh/rb").count() === 40L,
       "first-batch redelivery must create the replica with the full batch")
+  }
+
+  test("a maintained store missing a replica fails loudly instead of reading its primary") {
+    import spark.implicits._
+    // (replica, two-batch build, the read routed to the replica, the
+    // next ingest): each consumer reads its own replica, never the other
+    val cases: Seq[(String, String => Unit, String => Any, String => Unit)] = Seq(
+      ("labelsc",
+        st => Seq(0L, 1L).foreach(b => CcStream.processBatch(
+          Seq((2 * b + 1, 2 * b + 2)).toDF("src", "dst"), b, st)),
+        st => CcStream.membersOf(spark, st, oneNode(1L)).collect(),
+        st => CcStream.processBatch(Seq((1L, 9L)).toDF("src", "dst"), 2L, st)),
+      ("pairsp",
+        st => Seq(0L, 1L).foreach(b => TriangleStream.processBatch(
+          Seq((b + 1, 100L + b), (b + 2, 100L + b)).toDF("p", "su"), b, st)),
+        st => TriangleStream.rawPairsBefore(spark, st, 2L, TriangleStream.PairPBucket,
+          Seq(2L).toDF("p")).collect(),
+        st => TriangleStream.processBatch(Seq((1L, 102L)).toDF("p", "su"), 2L, st)))
+    cases.foreach { case (replica, build, probe, ingest) =>
+      val store = tmp(s"bprune-noreplica-$replica")
+      build(store)
+      rm(new java.io.File(s"$store/$replica"))
+      Seq("read" -> probe, "processBatch" -> ingest).foreach { case (what, run) =>
+        val ex = intercept[Exception](run(store))
+        assert(ex.getMessage != null && ex.getMessage.contains(replica) &&
+            ex.getMessage.toLowerCase.contains("rebuild"),
+          s"$replica: the $what must fail naming the absent replica and the rebuild, " +
+            s"got: ${ex.getMessage}")
+      }
+    }
+  }
+
+  test("a crash between replica writes leaves a store that redelivery repairs") {
+    import spark.implicits._
+    // an injected crash in the second copy's write: the primary goes
+    // last, so the crash leaves the replica holding the batch and the
+    // primary holding none of it
+    val store = tmp("bprune-replicacrash")
+    val replicas = Seq("ra" -> Stores.Bucket("pba", "a"), "rb" -> Stores.Bucket("pbb", "b"))
+    val rows0 = (1L to 40L).map(i => (i, i + 100L)).toDF("a", "b").localCheckpoint()
+    RowCrash.seen.set(0L)
+    intercept[Exception] {
+      Stores.writeReplicaBatch(rows0.withColumn("a", RowCrash.after(40L)(col("a"))),
+        0L, store, replicas)
+    }
+    def batchesUnder(root: String): Seq[String] =
+      Option(new java.io.File(root).list()).toSeq.flatten.filter(_.startsWith("batch="))
+    assert(batchesUnder(s"$store/rb") === Seq("batch=0") && batchesUnder(s"$store/ra").isEmpty,
+      "the replica must be written before the primary")
+    Stores.writeReplicaBatch(rows0, 0L, store, replicas)
+    assert(replicas.forall { case (sub, _) => Stores.read(spark, s"$store/$sub").count() == 40L },
+      "redelivery must rewrite the batch in both copies")
+
+    // each maintainer, crashed after its replica write and before its
+    // primary's (whatever the batch writes after the primary is absent
+    // too): redelivering the batch must succeed and serve what an
+    // uncrashed run serves, with both copies present
+    def dropBatch(root: String, b: Long): Unit = {
+      rm(new java.io.File(s"$root/batch=$b"))
+      if (batchesUnder(root).isEmpty) rm(new java.io.File(root))
+    }
+    val cases: Seq[(String, Seq[String], Seq[String], (Long, String) => Unit,
+        String => Set[String])] = Seq(
+      ("cc", Seq("labels"), Seq("labelsc"),
+        (b, st) => CcStream.processBatch(Seq((b + 1, b + 2)).toDF("src", "dst"), b, st),
+        st => CcStream.snapshot(spark, st).collect().map(_.toString).toSet),
+      ("tri", Seq("edges", "counts"), Seq("edgesb"),
+        (b, st) => TriangleStream.processBatch(
+          (if (b == 0L) Seq((1L, 100L), (2L, 100L)) else Seq((3L, 100L))).toDF("p", "su"),
+          b, st),
+        st => TriangleStream.snapshot(spark, st).collect().map(_.toString).toSet),
+      ("sssp", Seq("dists"), Seq("distsp"),
+        (b, st) => SsspDeltaStream.processBatch(
+          Seq((b + 1, b + 2, 1L, 1)).toDF("src", "dst", "w", "op"), b, st,
+          source = 1L, budget = 1000L),
+        st => SsspDeltaStream.snapshot(spark, st).collect().map(_.toString).toSet))
+    cases.foreach { case (name, lost, kept, ingest, serve) =>
+      val clean = tmp(s"bprune-replicacrash-$name-clean")
+      Seq(0L, 1L).foreach(ingest(_, clean))
+      Seq(0L, 1L).foreach { crashed =>
+        val st = tmp(s"bprune-replicacrash-$name-$crashed")
+        (0L to crashed).foreach(ingest(_, st))
+        lost.foreach(sub => dropBatch(s"$st/$sub", crashed))
+        assert(kept.forall(sub => batchesUnder(s"$st/$sub").contains(s"batch=$crashed")),
+          s"$name: the fixture must leave the replica holding batch $crashed")
+        ingest(crashed, st)
+        (crashed + 1 to 1L).foreach(ingest(_, st))
+        assert((lost.take(1) ++ kept).forall(sub => Stores.exists(spark, s"$st/$sub")),
+          s"$name: redelivery of batch $crashed must leave both copies")
+        assert(serve(st) === serve(clean),
+          s"$name: redelivery of batch $crashed must serve the uncrashed answer")
+      }
+    }
   }
 
   test("a crashed migration fold (manifest renamed, sources undeleted) wedges reads loudly and the re-run fold repairs it") {
@@ -506,16 +542,33 @@ class BucketPruningSpec extends AnyFunSuite {
       === Set((1L, 10L), (2L, 20L), (3L, 30L)))
   }
 
-  test("a store without bucket columns falls back to the unpruned read") {
+  test("a pruned read over a store without its bucket column fails loudly, naming the column") {
     import spark.implicits._
-    val store = tmp("bprune-legacy")
-    // hand-built legacy layout: batch partition only (the pre-r11 shape)
+    val store = tmp("bprune-flat")
+    // hand-built flat layout: batch partition only, no pbn column
     Seq((1L, 1L), (2L, 1L)).toDF("node", "component")
       .withColumn("batch", lit(0L))
       .write.option("partitionOverwriteMode", "dynamic").partitionBy("batch")
       .parquet(s"$store/labels")
-    val labs = CcStream.labelsOf(spark, store, oneNode(2L))
-    assert(labs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      === Set((2L, 1L)), "legacy layout must still serve (unpruned)")
+    val ex = intercept[IllegalArgumentException] {
+      CcStream.labelsOf(spark, store, oneNode(2L)).collect()
+    }
+    assert(ex.getMessage.contains("pbn"),
+      s"the rejection must name the bucket column, got: ${ex.getMessage}")
+    // whatever the keys: a restriction covering every bucket fails too
+    intercept[IllegalArgumentException] {
+      Stores.readPruned(spark, s"$store/labels", CcStream.NodeBucket,
+        (0L until 200L).toDF("node"))
+    }
   }
+}
+
+/** Counts the rows every task of this JVM evaluates through [[after]],
+  * so a spec can fail a write part-way through a sequence of writes. */
+object RowCrash {
+  val seen = new java.util.concurrent.atomic.AtomicLong
+  def after(limit: Long) = udf { (a: Long) =>
+    if (seen.incrementAndGet() > limit) throw new IllegalStateException("injected crash")
+    a
+  }.asNondeterministic()
 }

@@ -90,29 +90,6 @@ class CcDeltaSpec extends AnyFunSuite {
       "post-compaction delete must still remove the folded edge")
   }
 
-  test("pre-±op legacy store: compact normalizes op-less edges, then ± ingest works") {
-    import spark.implicits._
-    val store = tmp()
-    // a pre-round-10 store: edges and labels written WITHOUT an op column
-    Seq((1L, 2L), (2L, 1L)).toDF("src", "dst").withColumn("batch", lit(0L))
-      .write.option("partitionOverwriteMode", "dynamic").partitionBy("batch")
-      .parquet(s"$store/edges")
-    Seq((1L, 1L), (2L, 1L)).toDF("node", "component").withColumn("batch", lit(0L))
-      .write.option("partitionOverwriteMode", "dynamic").partitionBy("batch")
-      .parquet(s"$store/labels")
-    // the sanctioned migration: one compact normalizes legacy rows to +1
-    // (Stores.withOpDefault) — without it the op === 1 liveness filter
-    // would silently drop every legacy edge
-    CcStream.compact(spark, store, throughBatch = 0L)
-    CcStream.processBatch(ev(Seq((2L, 3L, 1))), 1L, store)
-    assert(snap(store) === Map(1L -> 1L, 2L -> 1L, 3L -> 1L),
-      "legacy edges must survive the migration as inserts")
-    // a ± delete must still outrank the folded legacy insert
-    CcStream.processBatch(ev(Seq((1L, 2L, -1))), 2L, store)
-    assert(snap(store) === Map(2L -> 2L, 3L -> 2L),
-      "deleting the migrated legacy edge must isolate node 1")
-  }
-
   test("mixed fixture ≡ batch q80 on the surviving edge set (with compaction)") {
     import spark.implicits._
     val dir = "/root/testdata/sf0.001"

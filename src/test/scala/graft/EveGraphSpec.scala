@@ -598,9 +598,11 @@ class EveGraphSpec extends AnyFunSuite {
     val dirs = partitions.map(t => distributedRoot.resolve(t).resolve(s"v${leased(t)}"))
     partitions.foreach(t => assert(current(t) >= leased(t) + 2, t))
     assert(dirs.forall(java.nio.file.Files.exists(_)))
-    // evict the projection's cache: the route recomputes it from the leased files
+    // evict the projection's cache and drop the shuffle outputs its
+    // partitioning left behind: the route recomputes it from the leased files
     eng.catalog.withGraph("jump-risk", () => fail("jump-risk missing"))(
       _.asInstanceOf[Dijkstra.GraphProjection].graph.unpersist(blocking = true))
+    org.apache.spark.ShuffleOutputs.dropLocal()
     assert(eng.safestRoute("Jita", "Amarr") === want)
     // the risk refresh retires the projection; the next write of each
     // partition reclaims what it leased

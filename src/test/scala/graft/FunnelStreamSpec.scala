@@ -160,36 +160,14 @@ class FunnelStreamSpec extends AnyFunSuite {
     assert(snapshotOf(store) === want, "full compaction diverged")
   }
 
-  test("legacy (pre-±op) store migrates: compact normalizes, ±op continues") {
+  test("an input row whose op is null is an insert") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.lit
-    val e = events.cache()
-    val root = java.nio.file.Files.createTempDirectory("funnellegacy").toString
-    val store = s"$root/store"
-    // LEGACY layout: events carry neither op nor srcb (the pre-round-15
-    // writer); the funnel side's shape is unchanged across rounds
-    graft.streaming.Stores.writeBatch(
-      e.select($"user_id", $"event_type", $"ts_us"),
-      0L, s"$store/events", Seq(FunnelStream.UserBucket))
-    graft.operators.TemporalJoins.funnelStages(e)
-      .withColumn("batch", lit(0L))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch").parquet(s"$store/funnel")
-    val want0 = batchWant
-    assert(snapshotOf(store) === want0, "legacy snapshot must serve as-is")
-    // the family's documented migration: fold ONCE before any ±op batch —
-    // this must normalize the missing op/srcb, not throw on them
-    FunnelStream.compact(spark, store, throughBatch = 0L)
-    assert(snapshotOf(store) === want0, "migration fold changed the answer")
-    // ±op continues on the migrated store; the legacy rows must count as
-    // live history (op defaulted +1), not be silently dropped
-    val gone = $"user_id" % 7 === 0
-    assert(e.filter(gone).count() > 0, "fixture vacuous: no retractable user")
-    FunnelStream.processBatch(e.filter(gone).withColumn("op", lit(-1)), 1L, store)
-    val want1 = graft.operators.TemporalJoins.funnelStages(e.filter(!gone))
-      .collect().map(r => r.getLong(0) ->
-        ((r.getLong(1), if (r.isNullAt(2)) None else Some(r.getLong(2))))).toMap
-    assert(snapshotOf(store) === want1, "post-migration retraction diverged")
+    val store = java.nio.file.Files.createTempDirectory("funnelnullop").toString + "/store"
+    // a file-source read makes `op` nullable: the click and purchase must
+    // count, so the user reaches stage 3
+    FunnelStream.processBatch(Seq((1L, "view", 10L, Some(1)), (1L, "click", 20L, None),
+      (1L, "purchase", 30L, None)).toDF("user_id", "event_type", "ts_us", "op"), 0L, store)
+    assert(snapshotOf(store) === Map(1L -> ((3L, Some(20L)))))
   }
 
   test("batch replay is idempotent: snapshot identical after redelivery") {

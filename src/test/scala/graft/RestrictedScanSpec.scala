@@ -1,10 +1,9 @@
 package graft
 
-import graft.streaming.{CcStream, TriangleStream}
+import graft.streaming.{CcStream, Stores, TriangleStream}
 import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan, Window => LWindow}
-import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The round-10 restriction-first contract, asserted on the PLAN (the
@@ -48,13 +47,11 @@ class RestrictedScanSpec extends AnyFunSuite {
     val store = tmp("rscan-tri")
     // ± edge rows across two batches: (1,2) net-dead, (1,3) net-live,
     // (5,6) live but untouched, (1,9)+(3,9): both-endpoints-touched probes
-    Seq((1L, 2L, 1), (1L, 3L, 1), (5L, 6L, 1), (1L, 9L, 1), (3L, 9L, 1))
-      .toDF("a", "b", "op").withColumn("batch", lit(0L))
-      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch").parquet(s"$store/edges")
-    Seq((1L, 2L, -1)).toDF("a", "b", "op").withColumn("batch", lit(1L))
-      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch").parquet(s"$store/edges")
+    Stores.writeReplicaBatch(
+      Seq((1L, 2L, 1), (1L, 3L, 1), (5L, 6L, 1), (1L, 9L, 1), (3L, 9L, 1))
+        .toDF("a", "b", "op"), 0L, store, TriangleStream.EdgeReplicas)
+    Stores.writeReplicaBatch(Seq((1L, 2L, -1)).toDF("a", "b", "op"),
+      1L, store, TriangleStream.EdgeReplicas)
     val eps = Seq(1L, 3L, 9L).toDF("n")
     val got = TriangleStream.edgesTouching(spark, store, 2L, eps)
     assertRestricted(got, "edgesTouching")
@@ -70,13 +67,11 @@ class RestrictedScanSpec extends AnyFunSuite {
     // two components (min-labels 1 and 10), two label generations: node 2
     // moved 20 → 1 in batch 1 (the stale-row case membersOf's invariant
     // argument covers)
-    Seq((1L, 1L), (2L, 20L), (10L, 10L), (11L, 10L))
-      .toDF("node", "component").withColumn("batch", lit(0L))
-      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch").parquet(s"$store/labels")
-    Seq((2L, 1L)).toDF("node", "component").withColumn("batch", lit(1L))
-      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch").parquet(s"$store/labels")
+    Stores.writeReplicaBatch(
+      Seq((1L, 1L), (2L, 20L), (10L, 10L), (11L, 10L)).toDF("node", "component"),
+      0L, store, CcStream.LabelReplicas)
+    Stores.writeReplicaBatch(Seq((2L, 1L)).toDF("node", "component"),
+      1L, store, CcStream.LabelReplicas)
     val touched = Seq(2L).toDF("node")
     val labs = CcStream.labelsOf(spark, store, touched)
     assertRestricted(labs, "labelsOf")
